@@ -4,6 +4,11 @@
 (spark, sf_dir) -> DataFrame callables; `oracle_sql()` gives each one a
 DuckDB-runnable oracle on the same inputs.
 
+To add a query, define `q_<name>(spark, sf_dir)` and its oracle
+`_sql_<name>()` — or `_sql_<name>(n)`, which receives the oracle's page
+count — and nothing else: both dicts are built from the module's
+functions by name, and bench.py's headline set follows `queries()`.
+
 The geospatial queries run over the engine's `pages` table
 (url, warc_ts, html binary, text, lang — BASELINE.json input_hint),
 synthesized deterministically by pure integer arithmetic
@@ -101,6 +106,23 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _udeg_pairs(t: DataFrame, s: int) -> DataFrame:
+    """Point pairs of `t` (pid, x, y in µdeg, plus payload) within
+    Chebyshev distance `s`, each unordered pair once, as a_<c>, b_<c>
+    and their distance d: cells.half_pairs on the floor grid of cell
+    width `s`."""
+    cx = F.floor(F.col("x") / F.lit(float(s)))
+    cy = F.floor(F.col("y") / F.lit(float(s)))
+    half = F.array(*[F.struct((cx + dx).alias("cx"), (cy + dy).alias("cy"),
+                              F.lit(dx == 0 and dy == 0).alias("home"))
+                     for dx, dy in cells.half_offsets()])
+    d = F.greatest(F.abs(F.col("a_x") - F.col("b_x")),
+                   F.abs(F.col("a_y") - F.col("b_y")))
+    return (cells.half_pairs(t.withColumn("cx", cx).withColumn("cy", cy),
+                             ["cx", "cy"], half, "pid")
+            .withColumn("d", d).where(F.col("d") <= s))
+
+
 def _pages_cte(n: int) -> str:
     """DuckDB CTE regenerating the exact (url, domain, lang, lat, lon)
     rows of `_points` by the same deterministic integer arithmetic."""
@@ -132,6 +154,22 @@ pages AS (
                     ELSE ROUND(j1 * 179.99, 6) END, 6) AS lon
   FROM pages_geo
 )"""
+
+
+def _links_cte(n: int) -> str:
+    """`_pages_cte` plus `links(src, dst)`: the directed domain link
+    edges, one row per page and out-link, self-links dropped.  The SQL
+    twin of `_domain_links`, re-derived from the page urls."""
+    return f"""{_pages_cte(n)},
+link_h AS (SELECT CAST(domain AS BIGINT) AS src,
+                  (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
+                   * 2654435761) % 2147483648 AS h
+           FROM pages),
+links AS (SELECT src, dst FROM (
+            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM link_h
+            UNION ALL
+            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM link_h)
+          WHERE src != dst)"""
 
 
 # ---------------------------------------------------------------------------
@@ -2160,10 +2198,13 @@ def _sql_minhash_neardup() -> str:
     shingle hashes and minhash family, mod-2^31-1 polynomial band
     buckets, candidate equi-join, exact Jaccard verify — the identical
     integer arithmetic the Spark query's kernels implement (documents
-    are ASCII, so ascii() equals the UTF-8 byte the engine hashes)."""
+    are ASCII, so ascii() equals the UTF-8 byte the engine hashes).
+    Hash and band counts come from `mh_params` at the oracle's doc
+    count, as the query's do."""
     from proj_spark.text.dedup import M31, MERSENNE61
     shingle = 5
-    num_hashes, bands, rpb = 64, 16, 4
+    num_hashes, rpb = mh_params(_n_docs(f"sf{ORACLE_SF}"))
+    bands = num_hashes // rpb
     pows = [pow(131, i, MERSENNE61) for i in range(shingle)]
     hv = " + ".join(
         f"CAST(ascii(substr(text, p + {i}, 1)) AS HUGEINT) * {pows[i]}"
@@ -3047,30 +3088,8 @@ def q_cross_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.alias("pid"), F.col("lang"),
         F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
         F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
-    S = RIPLEY_SCALES[-1]
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                             F.lit(dx == 0 and dy == 0).alias("home"))
-                    for dx, dy in
-                    ((0, 0), (0, 1), (1, -1), (1, 0), (1, 1))])
-    a = (t.withColumn("_o", F.explode(off))
-         .select(F.col("pid").alias("a_pid"), F.col("lang").alias("a_lang"),
-                 F.col("x").alias("a_x"), F.col("y").alias("a_y"),
-                 F.col("_o.home").alias("home"),
-                 (F.floor(F.col("x") / F.lit(float(S)))
-                  + F.col("_o.dx")).alias("cx"),
-                 (F.floor(F.col("y") / F.lit(float(S)))
-                  + F.col("_o.dy")).alias("cy")))
-    b = t.select(F.col("pid").alias("b_pid"), F.col("lang").alias("b_lang"),
-                 F.col("x").alias("b_x"), F.col("y").alias("b_y"),
-                 F.floor(F.col("x") / F.lit(float(S))).alias("cx"),
-                 F.floor(F.col("y") / F.lit(float(S))).alias("cy"))
-    d = F.greatest(F.abs(F.col("a_x") - F.col("b_x")),
-                   F.abs(F.col("a_y") - F.col("b_y")))
-    pairs = (a.join(b, ["cx", "cy"])
-             .where((d <= S)
-                    & (~F.col("home") | (F.col("a_pid") < F.col("b_pid"))))
-             .select(d.alias("d"),
-                     F.least("a_lang", "b_lang").alias("lang_a"),
+    pairs = (_udeg_pairs(t, RIPLEY_SCALES[-1])
+             .select("d", F.least("a_lang", "b_lang").alias("lang_a"),
                      F.greatest("a_lang", "b_lang").alias("lang_b")))
     scale = F.explode(F.array(*[F.lit(s) for s in RIPLEY_SCALES]))
     per = (pairs.select("d", "lang_a", "lang_b", scale.alias("scale_udeg"))
@@ -3671,16 +3690,8 @@ def q_degree_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_degree_fit(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src != dst),
+    return f"""WITH {_links_cte(n)},
+e AS (SELECT DISTINCT src, dst FROM links),
 deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY 1),
 dist AS (SELECT d, COUNT(*) AS n_d FROM deg GROUP BY 1),
 uv AS (SELECT CAST(ROUND(LN(CAST(d AS DOUBLE)) * 1e6, 0) AS BIGINT) AS u,
@@ -4103,16 +4114,8 @@ def q_domain_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_domain_hops(n: int) -> str:
-    return f"""WITH RECURSIVE {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src != dst),
+    return f"""WITH RECURSIVE {_links_cte(n)},
+e AS (SELECT DISTINCT src, dst FROM links),
 reach(node, h) AS (
   SELECT i AS node, 0 AS h
   FROM range(0, {N_DOMAINS}) t(i) WHERE i % {BFS_SEED_MOD} = 0
@@ -4154,18 +4157,10 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_triangles(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {TRI_SAMPLE_MOD} = 0),
 tri AS (
   SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -4182,16 +4177,8 @@ GROUP BY 1"""
 
 def _sql_pagerank_domains(n: int) -> str:
     from proj_spark.graph import pagerank_sql
-    edges_cte = f"""{_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT src, dst, COUNT(*) AS w FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src <> dst GROUP BY 1, 2)"""
+    edges_cte = f"""{_links_cte(n)},
+e AS (SELECT src, dst, COUNT(*) AS w FROM links GROUP BY 1, 2)"""
     nodes_cte = f"nodes AS (SELECT range AS node FROM range(0, {N_DOMAINS}))"
     body = pagerank_sql(edges_cte, nodes_cte, iters=PR_ITERS)
     return (body.replace("SELECT node, score FROM",
@@ -5958,28 +5945,7 @@ def q_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
         F.round(F.col("lat") * 1e6, 0).cast("long").alias("y")).persist()
-    S = JC_S_UDEG
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                             F.lit(dx == 0 and dy == 0).alias("home"))
-                    for dx, dy in
-                    ((0, 0), (0, 1), (1, -1), (1, 0), (1, 1))])
-    a = (t.withColumn("_o", F.explode(off))
-         .select(F.col("pid").alias("a_pid"), F.col("lang").alias("a_lang"),
-                 F.col("x").alias("a_x"), F.col("y").alias("a_y"),
-                 F.col("_o.home").alias("home"),
-                 (F.floor(F.col("x") / F.lit(float(S)))
-                  + F.col("_o.dx")).alias("cx"),
-                 (F.floor(F.col("y") / F.lit(float(S)))
-                  + F.col("_o.dy")).alias("cy")))
-    b = t.select(F.col("pid").alias("b_pid"), F.col("lang").alias("b_lang"),
-                 F.col("x").alias("b_x"), F.col("y").alias("b_y"),
-                 F.floor(F.col("x") / F.lit(float(S))).alias("cx"),
-                 F.floor(F.col("y") / F.lit(float(S))).alias("cy"))
-    d = F.greatest(F.abs(F.col("a_x") - F.col("b_x")),
-                   F.abs(F.col("a_y") - F.col("b_y")))
-    obs = (a.join(b, ["cx", "cy"])
-           .where((d <= S)
-                  & (~F.col("home") | (F.col("a_pid") < F.col("b_pid"))))
+    obs = (_udeg_pairs(t, JC_S_UDEG)
            .select(F.least("a_lang", "b_lang").alias("lang_a"),
                    F.greatest("a_lang", "b_lang").alias("lang_b"))
            .groupBy("lang_a", "lang_b")
@@ -6149,28 +6115,7 @@ def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.alias("pid"),
         F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
         F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
-    S = RIPLEY_SCALES[-1]
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                             F.lit(dx == 0 and dy == 0).alias("home"))
-                    for dx, dy in
-                    ((0, 0), (0, 1), (1, -1), (1, 0), (1, 1))])
-    a = (t.withColumn("_o", F.explode(off))
-         .select(F.col("pid").alias("a_pid"), F.col("x").alias("a_x"),
-                 F.col("y").alias("a_y"), F.col("_o.home").alias("home"),
-                 (F.floor(F.col("x") / F.lit(float(S)))
-                  + F.col("_o.dx")).alias("cx"),
-                 (F.floor(F.col("y") / F.lit(float(S)))
-                  + F.col("_o.dy")).alias("cy")))
-    b = t.select(F.col("pid").alias("b_pid"), F.col("x").alias("b_x"),
-                 F.col("y").alias("b_y"),
-                 F.floor(F.col("x") / F.lit(float(S))).alias("cx"),
-                 F.floor(F.col("y") / F.lit(float(S))).alias("cy"))
-    d = F.greatest(F.abs(F.col("a_x") - F.col("b_x")),
-                   F.abs(F.col("a_y") - F.col("b_y")))
-    pairs = (a.join(b, ["cx", "cy"])
-             .where((d <= S)
-                    & (~F.col("home") | (F.col("a_pid") < F.col("b_pid"))))
-             .select(d.alias("d")))
+    pairs = _udeg_pairs(t, RIPLEY_SCALES[-1]).select("d")
     scale = F.explode(F.array(*[F.lit(s) for s in RIPLEY_SCALES]))
     return (pairs.select("d", scale.alias("scale_udeg"))
             .where(F.col("d") <= F.col("scale_udeg"))
@@ -6809,16 +6754,8 @@ def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_shortest_paths(n: int) -> str:
-    return f"""WITH RECURSIVE {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e0 AS (SELECT DISTINCT src, dst FROM (
-         SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-         UNION ALL
-         SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-       WHERE src != dst),
+    return f"""WITH RECURSIVE {_links_cte(n)},
+e0 AS (SELECT DISTINCT src, dst FROM links),
 e AS (SELECT src, dst, 1 + (src * 31 + dst * 17) % {SP_WMOD} AS w FROM e0),
 reach(node, d, hp) AS (
   SELECT i AS node, 0 AS d, 0 AS hp
@@ -6873,32 +6810,15 @@ def q_semivariogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
         F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
     t = t.withColumn("z", _semivar_z(F.col("x"), F.col("y")))
-    S = SEMIVAR_LAGS[-1]
-    off = F.array(*[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
-                             F.lit(dx == 0 and dy == 0).alias("home"))
-                    for dx, dy in
-                    ((0, 0), (0, 1), (1, -1), (1, 0), (1, 1))])
-    a = (t.withColumn("_o", F.explode(off))
-         .select(F.col("pid").alias("a_pid"), F.col("x").alias("a_x"),
-                 F.col("y").alias("a_y"), F.col("z").alias("a_z"),
-                 F.col("_o.home").alias("home"),
-                 (F.floor(F.col("x") / F.lit(float(S)))
-                  + F.col("_o.dx")).alias("cx"),
-                 (F.floor(F.col("y") / F.lit(float(S)))
-                  + F.col("_o.dy")).alias("cy")))
-    b = t.select(F.col("pid").alias("b_pid"), F.col("x").alias("b_x"),
-                 F.col("y").alias("b_y"), F.col("z").alias("b_z"),
-                 F.floor(F.col("x") / F.lit(float(S))).alias("cx"),
-                 F.floor(F.col("y") / F.lit(float(S))).alias("cy"))
+    # inline, not _udeg_pairs' `d`: a thrice-read column would keep an
+    # extra Project in the plan
     d = F.greatest(F.abs(F.col("a_x") - F.col("b_x")),
                    F.abs(F.col("a_y") - F.col("b_y")))
     lag = (F.when(d <= SEMIVAR_LAGS[0], F.lit(SEMIVAR_LAGS[0]))
            .when(d <= SEMIVAR_LAGS[1], F.lit(SEMIVAR_LAGS[1]))
            .otherwise(F.lit(SEMIVAR_LAGS[2])))
     sq = (F.col("a_z") - F.col("b_z")) * (F.col("a_z") - F.col("b_z"))
-    return (a.join(b, ["cx", "cy"])
-            .where((d <= S)
-                   & (~F.col("home") | (F.col("a_pid") < F.col("b_pid"))))
+    return (_udeg_pairs(t, SEMIVAR_LAGS[-1])
             .select(lag.cast("long").alias("lag_udeg"), sq.alias("sq"))
             .groupBy("lag_udeg")
             .agg(F.count("*").alias("n_pairs"),
@@ -7081,18 +7001,10 @@ v{r} AS (SELECT u FROM d{r}, kv WHERE c >= kval),
 e{r} AS (SELECT e.u, e.v FROM e{r-1} e
          JOIN v{r} x ON e.u = x.u JOIN v{r} y ON e.v = y.u)""")
     chain = ",\n".join(rounds)
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {KCORE_SAMPLE_MOD} = 0),
 e0 AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 kv AS (SELECT COUNT(*) // COUNT(DISTINCT u) + 1 AS kval FROM e0),
@@ -7139,16 +7051,8 @@ def q_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_cocitation(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-ed AS (SELECT DISTINCT src, dst FROM (
-         SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-         UNION ALL
-         SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-       WHERE src != dst),
+    return f"""WITH {_links_cte(n)},
+ed AS (SELECT DISTINCT src, dst FROM links),
 es AS (SELECT src, dst FROM ed
        WHERE (src * 1000003 + dst) % {COCITE_SAMPLE_MOD} = 0),
 odeg AS (SELECT src, COUNT(*) AS od FROM es GROUP BY 1),
@@ -7403,16 +7307,8 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hits_scores(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-ed AS (SELECT DISTINCT src, dst FROM (
-         SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-         UNION ALL
-         SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-       WHERE src != dst),
+    return f"""WITH {_links_cte(n)},
+ed AS (SELECT DISTINCT src, dst FROM links),
 h1 AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS h1 FROM ed GROUP BY 1),
 a2 AS (SELECT dst, CAST(SUM(h1) AS BIGINT) AS a2
        FROM ed JOIN h1 USING (src) GROUP BY 1),
@@ -7483,18 +7379,10 @@ def q_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_link_pred(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {LP_SAMPLE_MOD} = 0),
 sym AS (SELECT a AS z, b AS nbr FROM und
         UNION ALL SELECT b, a FROM und),
@@ -7787,18 +7675,10 @@ lab{r} AS (SELECT u, lab FROM (
             PARTITION BY u ORDER BY c DESC, lab) AS rn FROM cnt{r})
         WHERE rn = 1)""")
     chain = ",\n".join(rounds)
-    return f"""{_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""{_links_cte(n)},
 und AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {LPA_SAMPLE_MOD} = 0),
 sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 lab0 AS (SELECT DISTINCT u, u AS lab FROM sym),
@@ -8720,18 +8600,10 @@ def q_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_clustering_coef(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {TRI_SAMPLE_MOD} = 0),
 tri AS (
   SELECT e1.a AS x, e1.b AS y, e2.b AS z
@@ -8815,17 +8687,9 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_assortativity(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM (
-          SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-          UNION ALL
-          SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-        WHERE src != dst),
+        FROM links),
 sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY 1),
 inc AS (SELECT du.d AS dx, dv.d AS dy
@@ -9346,17 +9210,9 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_rich_club(n: int) -> str:
     ks = ", ".join(str(k) for k in RICH_KS)
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM (
-          SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-          UNION ALL
-          SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-        WHERE src != dst),
+        FROM links),
 deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d
         FROM (SELECT a AS u FROM und UNION ALL SELECT b FROM und)
         GROUP BY 1),
@@ -10631,18 +10487,10 @@ def q_wcc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_wcc_sizes(n: int) -> str:
-    return f"""WITH {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    return f"""WITH {_links_cte(n)},
 und AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {WCC_SAMPLE_MOD} = 0),
 sym AS MATERIALIZED (
   SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
@@ -11707,16 +11555,8 @@ def q_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_closeness(n: int) -> str:
-    return f"""WITH RECURSIVE {_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src != dst),
+    return f"""WITH RECURSIVE {_links_cte(n)},
+e AS (SELECT DISTINCT src, dst FROM links),
 reach(seed, node, h) AS (
   SELECT i AS seed, i AS node, 0 AS h
   FROM range(0, {N_DOMAINS}) t(i) WHERE i % {CLOSE_SEED_MOD} = 0
@@ -12374,16 +12214,8 @@ def q_hyperanf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_hyperanf(n: int) -> str:
     from proj_spark.text.curation import hash31_sql
     h = hash31_sql(f"node + {ANF_SEED}")
-    parts = [f"""{_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT DISTINCT src, dst FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src <> dst),
+    parts = [f"""{_links_cte(n)},
+e AS (SELECT DISTINCT src, dst FROM links),
 nodes AS (SELECT range AS node FROM range(0, {N_DOMAINS})),
 r0 AS (SELECT node, ({h}) % {ANF_M} AS bucket,
               {_anf_rho_sql(h)} AS rho
@@ -13016,16 +12848,8 @@ def q_ppr_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ppr_domains(n: int) -> str:
     from proj_spark.graph import ppr_sql
-    edges_cte = f"""{_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT src, dst, COUNT(*) AS w FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src <> dst GROUP BY 1, 2)"""
+    edges_cte = f"""{_links_cte(n)},
+e AS (SELECT src, dst, COUNT(*) AS w FROM links GROUP BY 1, 2)"""
     seeds_cte = (f"seeds AS (SELECT range AS node FROM range(0, {N_DOMAINS}) "
                  f"WHERE range % {BFS_SEED_MOD} = 0)")
     body = ppr_sql(edges_cte, seeds_cte, iters=PR_ITERS)
@@ -13079,18 +12903,10 @@ def q_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_truss(n: int) -> str:
     from proj_spark.graph import truss_sql
-    und_cte = f"""{_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
+    und_cte = f"""{_links_cte(n)},
 e0 AS (SELECT a, b FROM (
           SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM (
-            SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-            UNION ALL
-            SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-          WHERE src != dst)
+          FROM links)
         WHERE (a * 1000003 + b) % {TRUSS_SAMPLE_MOD} = 0)"""
     kv_cte = "kv AS (SELECT SUM(support) // COUNT(*) + 1 AS kval FROM sup1)"
     body = truss_sql(und_cte, kv_cte, rounds=TRUSS_ROUNDS)
@@ -13133,16 +12949,8 @@ def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_betweenness(n: int) -> str:
     from proj_spark.graph import betweenness_sql
-    edges_cte = f"""{_pages_cte(n)},
-raw AS (SELECT CAST(domain AS BIGINT) AS src,
-               (CAST(regexp_extract(url, 'page/(\\d+)', 1) AS BIGINT)
-                * 2654435761) % 2147483648 AS h
-        FROM pages),
-e AS (SELECT DISTINCT src AS u, dst AS w FROM (
-        SELECT src, (h // 131) % {N_DOMAINS} AS dst FROM raw
-        UNION ALL
-        SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM raw)
-      WHERE src != dst)"""
+    edges_cte = f"""{_links_cte(n)},
+e AS (SELECT DISTINCT src AS u, dst AS w FROM links)"""
     sources_cte = (f"sources AS (SELECT range AS s FROM "
                    f"range(0, {N_DOMAINS}) WHERE range % {BC_SRC_MOD} = 0)")
     body = betweenness_sql(edges_cte, sources_cte, depth=BC_DEPTH)
@@ -15150,447 +14958,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "tile_density": q_tile_density,
-        "cell_rollup": q_cell_rollup,
-        "pip_admin": q_pip_admin,
-        "knn": q_knn,
-        "knn_join": q_knn_join,
-        "radius_join": q_radius_join,
-        "zorder_bbox": q_zorder_bbox,
-        "geohash_rollup": q_geohash_rollup,
-        "admin_raster": q_admin_raster,
-        "utm_zones": q_utm_zones,
-        "webmerc_bbox": q_webmerc_bbox,
-        "utm_project": q_utm_project,
-        "ignf_lamb93": q_ignf_lamb93,
-        "geoid_heights": q_geoid_heights,
-        "itrf_drift": q_itrf_drift,
-        "datum_shift": q_datum_shift,
-        "factors": q_factors,
-        "geod_pairs": q_geod_pairs,
-        "dggs_rollup": q_dggs_rollup,
-        "geod_area": q_geod_area,
-        "tile_pyramid": q_tile_pyramid,
-        "heatmap": q_heatmap,
-        "getis_hotspots": q_getis_hotspots,
-        "dense_clusters": q_dense_clusters,
-        "hex_density": q_hex_density,
-        "pagerank_domains": q_pagerank_domains,
-        "domain_hops": q_domain_hops,
-        "triangles": q_triangles,
-        "rect_join": q_rect_join,
-        "morans_i": q_morans_i,
-        "gearys_c": q_gearys_c,
-        "od_flows": q_od_flows,
-        "viewport_topk": q_viewport_topk,
-        "idw_interp": q_idw_interp,
-        "curation_funnel": q_curation_funnel,
-        "domain_drift": q_domain_drift,
-        "winnow_fp": q_winnow_fp,
-        "winnow_pairs": q_winnow_pairs,
-        "bpe_token_topk": q_bpe_token_topk,
-        "reverse_geocode": q_reverse_geocode,
-        "domain_top_pages": q_domain_top_pages,
-        "doc_stats": q_doc_stats,
-        "exact_dedup": q_exact_dedup,
-        "chunk_dedup": q_chunk_dedup,
-        "gopher_rep": q_gopher_rep,
-        "lang_confusion": q_lang_confusion,
-        "token_topk": q_token_topk,
-        "ngram_pairs": q_ngram_pairs,
-        "dedup_groups": q_dedup_groups,
-        "embed_topk": q_embed_topk,
-        "embed_allpairs": q_embed_allpairs,
-        "ann_pairs": q_ann_pairs,
-        "embed_neardup": q_embed_neardup,
-        "ivf_topk": q_ivf_topk,
-        "media_features": q_media_features,
-        "minhash_neardup": q_minhash_neardup,
-        "simhash_neardup": q_simhash_neardup,
-        "events_hourly": q_events_hourly,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "knox_pairs": q_knox_pairs,
-        "ripley_k": q_ripley_k,
-        "sessionize": q_sessionize,
-        "crs_dispatch": q_crs_dispatch,
-        "gridshift_file": q_gridshift_file,
-        "stratified_sample": q_stratified_sample,
-        "dedup_keep_best": q_dedup_keep_best,
-        "ccnet_buckets": q_ccnet_buckets,
-        "distinctive_terms": q_distinctive_terms,
-        "url_canon": q_url_canon,
-        "coverage_gap": q_coverage_gap,
-        "path_densify": q_path_densify,
-        "hll_tiles": q_hll_tiles,
-        "cmsketch_tokens": q_cmsketch_tokens,
-        "dup_spans": q_dup_spans,
-        "cluster_centroids": q_cluster_centroids,
-        "domain_gyration": q_domain_gyration,
-        "hausdorff_pairs": q_hausdorff_pairs,
-        "join_counts": q_join_counts,
-        "lisa_quadrants": q_lisa_quadrants,
-        "token_quantiles": q_token_quantiles,
-        "adaptive_tiles": q_adaptive_tiles,
-        "decontaminate": q_decontaminate,
-        "bloom_decontam": q_bloom_decontam,
-        "skyline": q_skyline,
-        "lm_score": q_lm_score,
-        "pii_redact": q_pii_redact,
-        "corridor": q_corridor,
-        "map_match": q_map_match,
-        "hilbert_rollup": q_hilbert_rollup,
-        "seg_intersect": q_seg_intersect,
-        "convex_hull": q_convex_hull,
-        "hull_diameter": q_hull_diameter,
-        "traj_simplify": q_traj_simplify,
-        "tile_cube": q_tile_cube,
-        "kmv_distinct": q_kmv_distinct,
-        "hotspot_trend": q_hotspot_trend,
-        "pricing_summary": q_pricing_summary,
-        "nation_revenue": q_nation_revenue,
-        "shortest_paths": q_shortest_paths,
-        "semivariogram": q_semivariogram,
-        "url_edit_pairs": q_url_edit_pairs,
-        "kcore": q_kcore,
-        "cocitation": q_cocitation,
-        "token_pmi": q_token_pmi,
-        "phrase_hits": q_phrase_hits,
-        "bm25_topk": q_bm25_topk,
-        "hits_scores": q_hits_scores,
-        "link_pred": q_link_pred,
-        "stay_points": q_stay_points,
-        "funnel_conv": q_funnel_conv,
-        "retention_cohorts": q_retention_cohorts,
-        "label_prop": q_label_prop,
-        "mad_outliers": q_mad_outliers,
-        "rolling_stats": q_rolling_stats,
-        "event_transitions": q_event_transitions,
-        "ship_priority": q_ship_priority,
-        "revenue_forecast": q_revenue_forecast,
-        "std_ellipse": q_std_ellipse,
-        "clark_evans": q_clark_evans,
-        "cross_k": q_cross_k,
-        "lang_scan": q_lang_scan,
-        "quadrat": q_quadrat,
-        "city_decay": q_city_decay,
-        "source_mix": q_source_mix,
-        "seq_pack": q_seq_pack,
-        "domain_entropy": q_domain_entropy,
-        "tile_gini": q_tile_gini,
-        "zipf_fit": q_zipf_fit,
-        "degree_fit": q_degree_fit,
-        "pq_topk": q_pq_topk,
-        "dsir_weights": q_dsir_weights,
-        "emd_langs": q_emd_langs,
-        "ks_sources": q_ks_sources,
-        "gravity_fit": q_gravity_fit,
-        "benford": q_benford,
-        "theil_sen": q_theil_sen,
-        "mwu_sources": q_mwu_sources,
-        "novelty_curve": q_novelty_curve,
-        "lang_source_mi": q_lang_source_mi,
-        "acf_hours": q_acf_hours,
-        "modularity": q_modularity,
-        "clustering_coef": q_clustering_coef,
-        "assortativity": q_assortativity,
-        "heaps_fit": q_heaps_fit,
-        "vocab_richness": q_vocab_richness,
-        "kendall_tau": q_kendall_tau,
-        "order_priority": q_order_priority,
-        "promo_share": q_promo_share,
-        "cusum_hours": q_cusum_hours,
-        "fano_hours": q_fano_hours,
-        "rich_club": q_rich_club,
-        "bigram_entropy": q_bigram_entropy,
-        "supplier_variety": q_supplier_variety,
-        "volume_shipping": q_volume_shipping,
-        "market_share": q_market_share,
-        "product_profit": q_product_profit,
-        "returned_items": q_returned_items,
-        "ship_modes": q_ship_modes,
-        "cust_orders_dist": q_cust_orders_dist,
-        "top_supplier": q_top_supplier,
-        "small_qty": q_small_qty,
-        "disc_revenue": q_disc_revenue,
-        "late_suppliers": q_late_suppliers,
-        "idle_customers": q_idle_customers,
-        "min_cost_supp": q_min_cost_supp,
-        "important_stock": q_important_stock,
-        "promo_suppliers": q_promo_suppliers,
-        "wcc_sizes": q_wcc_sizes,
-        "cell_components": q_cell_components,
-        "jsd_sources": q_jsd_sources,
-        "odds_ratio_terms": q_odds_ratio_terms,
-        "stl_hours": q_stl_hours,
-        "tok_fertility": q_tok_fertility,
-        "big_orders": q_big_orders,
-        "linreg": q_linreg,
-        "nb_lang": q_nb_lang,
-        "textrank": q_textrank,
-        "bearing_stats": q_bearing_stats,
-        "periodogram": q_periodogram,
-        "kaplan_meier": q_kaplan_meier,
-        "closeness": q_closeness,
-        "kmeans": q_kmeans,
-        "iso_days": q_iso_days,
-        "quality_forest": q_quality_forest,
-        "markov_stationary": q_markov_stationary,
-        "dtw_days": q_dtw_days,
-        "frechet_paths": q_frechet_paths,
-        "hyperanf": q_hyperanf,
-        "ewma_hours": q_ewma_hours,
-        "copurchase": q_copurchase,
-        "holt_hours": q_holt_hours,
-        "ccf_types": q_ccf_types,
-        "stylometry": q_stylometry,
-        "weighted_sample": q_weighted_sample,
-        "containment": q_containment,
-        "ppr_domains": q_ppr_domains,
-        "truss": q_truss,
-        "betweenness": q_betweenness,
-        "event_trigrams": q_event_trigrams,
-        "rrf_fusion": q_rrf_fusion,
-        "huff_shares": q_huff_shares,
-        "rake_keywords": q_rake_keywords,
-        "attribution": q_attribution,
-        "perm_entropy": q_perm_entropy,
-        "hurst_var": q_hurst_var,
-        "chi2_indep": q_chi2_indep,
-        "concentration": q_concentration,
-        "raster_morph": q_raster_morph,
-        "poisson_bootstrap": q_poisson_bootstrap,
-        "exact_quantiles": q_exact_quantiles,
-        "mmr_rerank": q_mmr_rerank,
-        "tile_diversity": q_tile_diversity,
-        "location_quotient": q_location_quotient,
-        "k_anonymity": q_k_anonymity,
-        "trimmed_mean": q_trimmed_mean,
-        "did": q_did,
-        "entropy_rate": q_entropy_rate,
-    }
+    """Every `q_<name>` function of this module, keyed by `<name>`, in
+    definition order."""
+    return {k[2:]: f for k, f in globals().items() if k.startswith("q_")}
 
 
 def oracle_sql() -> dict[str, str]:
+    """The DuckDB oracle `_sql_<name>` of every query.  An oracle that
+    takes an argument gets the page count at ORACLE_SF."""
     n = int(round(PAGES_PER_SF * ORACLE_SF))
-    return {
-        "tile_density": _sql_tile_density(n),
-        "cell_rollup": _sql_cell_rollup(n),
-        "pip_admin": _sql_pip_admin(n),
-        "knn": _sql_knn(n),
-        "knn_join": _sql_knn_join(n),
-        "radius_join": _sql_radius_join(n),
-        "zorder_bbox": _sql_zorder_bbox(n),
-        "geohash_rollup": _sql_geohash_rollup(n),
-        "admin_raster": _sql_admin_raster(n),
-        "utm_zones": _sql_utm_zones(n),
-        "webmerc_bbox": _sql_webmerc_bbox(n),
-        "datum_shift": _sql_datum_shift(n),
-        "factors": _sql_factors(n),
-        "geod_pairs": _sql_geod_pairs(n),
-        "dggs_rollup": _sql_dggs_rollup(n),
-        "geod_area": _sql_geod_area(n),
-        "tile_pyramid": _sql_tile_pyramid(n),
-        "heatmap": _sql_heatmap(n),
-        "getis_hotspots": _sql_getis_hotspots(n),
-        "dense_clusters": _sql_dense_clusters(n),
-        "hex_density": _sql_hex_density(n),
-        "pagerank_domains": _sql_pagerank_domains(n),
-        "domain_hops": _sql_domain_hops(n),
-        "triangles": _sql_triangles(n),
-        "rect_join": _sql_rect_join(n),
-        "morans_i": _sql_morans_i(n),
-        "gearys_c": _sql_gearys_c(n),
-        "od_flows": _sql_od_flows(n),
-        "viewport_topk": _sql_viewport_topk(n),
-        "idw_interp": _sql_idw_interp(n),
-        "curation_funnel": _sql_curation_funnel(),
-        "domain_drift": _sql_domain_drift(n),
-        "winnow_fp": _sql_winnow_fp(),
-        "winnow_pairs": _sql_winnow_pairs(),
-        "bpe_token_topk": _sql_bpe_token_topk(),
-        "reverse_geocode": _sql_reverse_geocode(n),
-        "domain_top_pages": _sql_domain_top_pages(n),
-        "doc_stats": _sql_doc_stats(),
-        "exact_dedup": _sql_exact_dedup(),
-        "chunk_dedup": _sql_chunk_dedup(),
-        "gopher_rep": _sql_gopher_rep(),
-        "lang_confusion": _sql_lang_confusion(),
-        "token_topk": _sql_token_topk(),
-        "ngram_pairs": _sql_ngram_pairs(),
-        "dedup_groups": _sql_dedup_groups(),
-        "embed_topk": _sql_embed_topk(),
-        "embed_allpairs": _sql_embed_allpairs(),
-        "events_hourly": _sql_events_hourly(),
-        "asof_join": _sql_asof_join(),
-        "interval_join": _sql_interval_join(),
-        "knox_pairs": _sql_knox_pairs(n),
-        "ripley_k": _sql_ripley_k(n),
-        "sessionize": _sql_sessionize(),
-        "utm_project": _sql_utm_project(),
-        "ignf_lamb93": _sql_ignf_lamb93(n),
-        "geoid_heights": _sql_geoid_heights(n),
-        "itrf_drift": _sql_itrf_drift(n),
-        "ann_pairs": _sql_ann_pairs(),
-        "embed_neardup": _sql_embed_neardup(),
-        "ivf_topk": _sql_ivf_topk(),
-        "minhash_neardup": _sql_minhash_neardup(),
-        "simhash_neardup": _sql_simhash_neardup(),
-        "crs_dispatch": _sql_crs_dispatch(),
-        "gridshift_file": _sql_gridshift_file(),
-        "media_features": _sql_media_features(n),
-        "stratified_sample": _sql_stratified_sample(),
-        "dedup_keep_best": _sql_dedup_keep_best(),
-        "ccnet_buckets": _sql_ccnet_buckets(),
-        "distinctive_terms": _sql_distinctive_terms(),
-        "url_canon": _sql_url_canon(n),
-        "coverage_gap": _sql_coverage_gap(n),
-        "path_densify": _sql_path_densify(n),
-        "hll_tiles": _sql_hll_tiles(n),
-        "cmsketch_tokens": _sql_cmsketch_tokens(),
-        "dup_spans": _sql_dup_spans(),
-        "cluster_centroids": _sql_cluster_centroids(n),
-        "domain_gyration": _sql_domain_gyration(n),
-        "hausdorff_pairs": _sql_hausdorff_pairs(n),
-        "join_counts": _sql_join_counts(n),
-        "lisa_quadrants": _sql_lisa_quadrants(n),
-        "token_quantiles": _sql_token_quantiles(),
-        "adaptive_tiles": _sql_adaptive_tiles(n),
-        "decontaminate": _sql_decontaminate(),
-        "bloom_decontam": _sql_bloom_decontam(),
-        "skyline": _sql_skyline(),
-        "lm_score": _sql_lm_score(),
-        "pii_redact": _sql_pii_redact(),
-        "corridor": _sql_corridor(n),
-        "map_match": _sql_map_match(n),
-        "hilbert_rollup": _sql_hilbert_rollup(n),
-        "seg_intersect": _sql_seg_intersect(n),
-        "convex_hull": _sql_convex_hull(n),
-        "hull_diameter": _sql_hull_diameter(n),
-        "traj_simplify": _sql_traj_simplify(n),
-        "tile_cube": _sql_tile_cube(n),
-        "kmv_distinct": _sql_kmv_distinct(n),
-        "hotspot_trend": _sql_hotspot_trend(n),
-        "pricing_summary": _sql_pricing_summary(),
-        "nation_revenue": _sql_nation_revenue(),
-        "shortest_paths": _sql_shortest_paths(n),
-        "semivariogram": _sql_semivariogram(n),
-        "url_edit_pairs": _sql_url_edit_pairs(n),
-        "kcore": _sql_kcore(n),
-        "cocitation": _sql_cocitation(n),
-        "token_pmi": _sql_token_pmi(),
-        "phrase_hits": _sql_phrase_hits(),
-        "bm25_topk": _sql_bm25_topk(),
-        "hits_scores": _sql_hits_scores(n),
-        "link_pred": _sql_link_pred(n),
-        "stay_points": _sql_stay_points(n),
-        "funnel_conv": _sql_funnel_conv(),
-        "retention_cohorts": _sql_retention_cohorts(),
-        "label_prop": _sql_label_prop(n),
-        "mad_outliers": _sql_mad_outliers(),
-        "rolling_stats": _sql_rolling_stats(),
-        "event_transitions": _sql_event_transitions(),
-        "ship_priority": _sql_ship_priority(),
-        "revenue_forecast": _sql_revenue_forecast(),
-        "std_ellipse": _sql_std_ellipse(n),
-        "clark_evans": _sql_clark_evans(n),
-        "cross_k": _sql_cross_k(n),
-        "lang_scan": _sql_lang_scan(n),
-        "quadrat": _sql_quadrat(n),
-        "city_decay": _sql_city_decay(n),
-        "source_mix": _sql_source_mix(),
-        "seq_pack": _sql_seq_pack(),
-        "domain_entropy": _sql_domain_entropy(n),
-        "tile_gini": _sql_tile_gini(n),
-        "zipf_fit": _sql_zipf_fit(),
-        "degree_fit": _sql_degree_fit(n),
-        "pq_topk": _sql_pq_topk(),
-        "dsir_weights": _sql_dsir_weights(),
-        "emd_langs": _sql_emd_langs(n),
-        "ks_sources": _sql_ks_sources(),
-        "gravity_fit": _sql_gravity_fit(n),
-        "benford": _sql_benford(),
-        "theil_sen": _sql_theil_sen(),
-        "mwu_sources": _sql_mwu_sources(),
-        "novelty_curve": _sql_novelty_curve(),
-        "lang_source_mi": _sql_lang_source_mi(),
-        "acf_hours": _sql_acf_hours(),
-        "modularity": _sql_modularity(n),
-        "clustering_coef": _sql_clustering_coef(n),
-        "assortativity": _sql_assortativity(n),
-        "heaps_fit": _sql_heaps_fit(),
-        "vocab_richness": _sql_vocab_richness(),
-        "kendall_tau": _sql_kendall_tau(),
-        "order_priority": _sql_order_priority(),
-        "promo_share": _sql_promo_share(),
-        "cusum_hours": _sql_cusum_hours(),
-        "fano_hours": _sql_fano_hours(),
-        "rich_club": _sql_rich_club(n),
-        "bigram_entropy": _sql_bigram_entropy(),
-        "supplier_variety": _sql_supplier_variety(),
-        "big_orders": _sql_big_orders(),
-        "volume_shipping": _sql_volume_shipping(),
-        "market_share": _sql_market_share(),
-        "product_profit": _sql_product_profit(),
-        "returned_items": _sql_returned_items(),
-        "ship_modes": _sql_ship_modes(),
-        "cust_orders_dist": _sql_cust_orders_dist(),
-        "top_supplier": _sql_top_supplier(),
-        "small_qty": _sql_small_qty(),
-        "disc_revenue": _sql_disc_revenue(),
-        "late_suppliers": _sql_late_suppliers(),
-        "idle_customers": _sql_idle_customers(),
-        "min_cost_supp": _sql_min_cost_supp(),
-        "important_stock": _sql_important_stock(),
-        "promo_suppliers": _sql_promo_suppliers(),
-        "wcc_sizes": _sql_wcc_sizes(n),
-        "cell_components": _sql_cell_components(n),
-        "jsd_sources": _sql_jsd_sources(),
-        "odds_ratio_terms": _sql_odds_ratio_terms(),
-        "stl_hours": _sql_stl_hours(),
-        "tok_fertility": _sql_tok_fertility(),
-        "linreg": _sql_linreg(),
-        "nb_lang": _sql_nb_lang(),
-        "textrank": _sql_textrank(),
-        "bearing_stats": _sql_bearing_stats(n),
-        "periodogram": _sql_periodogram(),
-        "kaplan_meier": _sql_kaplan_meier(),
-        "closeness": _sql_closeness(n),
-        "kmeans": _sql_kmeans(n),
-        "iso_days": _sql_iso_days(),
-        "quality_forest": _sql_quality_forest(),
-        "markov_stationary": _sql_markov_stationary(),
-        "dtw_days": _sql_dtw_days(),
-        "frechet_paths": _sql_frechet_paths(n),
-        "hyperanf": _sql_hyperanf(n),
-        "ewma_hours": _sql_ewma_hours(),
-        "copurchase": _sql_copurchase(),
-        "holt_hours": _sql_holt_hours(),
-        "ccf_types": _sql_ccf_types(),
-        "stylometry": _sql_stylometry(),
-        "weighted_sample": _sql_weighted_sample(),
-        "containment": _sql_containment(),
-        "ppr_domains": _sql_ppr_domains(n),
-        "truss": _sql_truss(n),
-        "betweenness": _sql_betweenness(n),
-        "event_trigrams": _sql_event_trigrams(),
-        "rrf_fusion": _sql_rrf_fusion(),
-        "huff_shares": _sql_huff_shares(n),
-        "rake_keywords": _sql_rake_keywords(),
-        "attribution": _sql_attribution(),
-        "perm_entropy": _sql_perm_entropy(),
-        "hurst_var": _sql_hurst_var(),
-        "chi2_indep": _sql_chi2_indep(),
-        "concentration": _sql_concentration(n),
-        "raster_morph": _sql_raster_morph(n),
-        "poisson_bootstrap": _sql_poisson_bootstrap(),
-        "exact_quantiles": _sql_exact_quantiles(),
-        "mmr_rerank": _sql_mmr_rerank(),
-        "tile_diversity": _sql_tile_diversity(n),
-        "location_quotient": _sql_location_quotient(n),
-        "k_anonymity": _sql_k_anonymity(),
-        "trimmed_mean": _sql_trimmed_mean(),
-        "did": _sql_did(),
-        "entropy_rate": _sql_entropy_rate(),
-    }
+    out = {}
+    for name in queries():
+        fn = globals()[f"_sql_{name}"]
+        out[name] = fn(n) if fn.__code__.co_argcount else fn()
+    return out

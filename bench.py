@@ -3,10 +3,6 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-
-Set SPARK_GRAFT_SCALING=1 to additionally run the throughput-scaling probe
-(same job at local[8] vs local[32]; the sandbox proxy for N vs 4N
-executors per BASELINE.json) — results land under "scaling".
 """
 
 from __future__ import annotations
@@ -21,70 +17,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from proj_spark.spark.session import get_spark  # noqa: E402
-
-# headline set: the geo spine (synthesis -> extraction -> kernel -> join ->
-# agg) plus the scalable text/dedup/similarity ops
-HEADLINE = [
-    "tile_density", "cell_rollup", "pip_admin", "knn", "knn_join", "utm_zones",
-    "webmerc_bbox", "utm_project", "ignf_lamb93", "geoid_heights",
-    "itrf_drift",
-    "datum_shift", "factors", "geod_pairs",
-    "dggs_rollup", "geod_area", "asof_join", "sessionize", "radius_join",
-    "zorder_bbox", "geohash_rollup", "admin_raster",
-    "tile_pyramid", "morans_i", "gearys_c", "lisa_quadrants",
-    "viewport_topk", "idw_interp", "domain_drift",
-    "reverse_geocode", "heatmap", "getis_hotspots", "dense_clusters",
-    "hex_density", "pagerank_domains", "rect_join",
-    "doc_stats", "exact_dedup", "curation_funnel", "chunk_dedup",
-    "gopher_rep",
-    "token_topk", "ngram_pairs", "embed_topk", "events_hourly",
-    "crs_dispatch", "gridshift_file", "minhash_neardup", "simhash_neardup",
-    "ann_pairs", "ivf_topk", "dedup_groups", "embed_neardup",
-    "winnow_fp", "winnow_pairs", "bpe_token_topk",
-    "stratified_sample", "dedup_keep_best", "ccnet_buckets",
-    "distinctive_terms", "url_canon", "coverage_gap", "path_densify",
-    "hll_tiles", "cmsketch_tokens", "dup_spans", "cluster_centroids",
-    "token_quantiles",
-    "adaptive_tiles", "decontaminate", "lm_score", "pii_redact",
-    "corridor", "traj_simplify",
-    "map_match", "hilbert_rollup", "seg_intersect", "bloom_decontam",
-    "convex_hull", "skyline", "hull_diameter",
-    "domain_hops", "triangles", "interval_join", "domain_gyration",
-    "hausdorff_pairs", "join_counts", "od_flows", "knox_pairs", "ripley_k",
-    "tile_cube", "kmv_distinct", "hotspot_trend", "pricing_summary",
-    "nation_revenue", "shortest_paths", "semivariogram", "url_edit_pairs",
-    "kcore", "cocitation", "token_pmi", "phrase_hits",
-    "bm25_topk", "hits_scores", "link_pred", "stay_points",
-    "funnel_conv", "retention_cohorts", "label_prop", "mad_outliers",
-    "rolling_stats", "event_transitions", "ship_priority", "revenue_forecast",
-    "std_ellipse", "clark_evans", "cross_k", "lang_scan",
-    "quadrat", "city_decay", "source_mix", "seq_pack",
-    "domain_entropy", "tile_gini", "zipf_fit", "degree_fit",
-    "pq_topk", "dsir_weights", "emd_langs", "ks_sources",
-    "gravity_fit", "benford", "theil_sen", "mwu_sources",
-    "novelty_curve", "lang_source_mi", "acf_hours",
-    "modularity", "clustering_coef", "assortativity", "heaps_fit",
-    "vocab_richness", "kendall_tau", "order_priority", "promo_share",
-    "cusum_hours", "fano_hours", "rich_club", "bigram_entropy",
-    "supplier_variety", "big_orders",
-    "volume_shipping", "market_share", "product_profit", "returned_items",
-    "ship_modes", "cust_orders_dist", "top_supplier", "small_qty",
-    "disc_revenue", "late_suppliers", "idle_customers",
-    "wcc_sizes", "cell_components", "jsd_sources", "odds_ratio_terms",
-    "min_cost_supp", "important_stock", "promo_suppliers",
-    "stl_hours", "tok_fertility",
-    "linreg", "nb_lang", "textrank", "bearing_stats", "periodogram",
-    "kaplan_meier", "closeness",
-    "kmeans", "iso_days", "quality_forest", "markov_stationary",
-    "dtw_days", "frechet_paths", "hyperanf", "ewma_hours",
-    "copurchase", "holt_hours", "ccf_types", "stylometry",
-    "weighted_sample", "containment", "ppr_domains", "truss",
-    "betweenness", "event_trigrams", "rrf_fusion", "huff_shares",
-    "rake_keywords", "attribution", "perm_entropy", "hurst_var",
-    "chi2_indep", "concentration", "raster_morph", "poisson_bootstrap",
-    "exact_quantiles", "mmr_rerank", "tile_diversity", "location_quotient",
-    "k_anonymity", "trimmed_mean", "did", "entropy_rate",
-]
 
 
 def run_queries(spark, sf_dir: str) -> tuple[dict[str, float],
@@ -195,73 +127,6 @@ def _clear_persisted(spark) -> None:
     spark.sparkContext._jvm.System.gc()
 
 
-SCALING_ROWS = 32_000_000
-SCALING_PAIRS = [(2, "0-1"), (8, "0-7")]
-
-
-def scaling_probe(sf_dir: str, n_pages: int) -> dict:
-    """Same kernel-bound job at two cluster sizes -> scaling efficiency.
-
-    The job (tools/scale_probe.py): synthesize 32M geotagged points,
-    project every row through the auto-zoned exact-TM kernel (etmerc
-    VUDF), encode z12 cells, roll up to z6, count — the engine's hot
-    path (VUDF + shuffle).
-
-    Cluster-size proxy: each run is PINNED (taskset) to exactly N CPUs,
-    so JVM + python workers share the budget a real N-core executor
-    fleet would have; N=2 vs 4N=8 keeps both runs below machine
-    saturation, mirroring real deployments where 4N means more executor
-    JVMs (not 4x threads inside one JVM — known GC/alloc anti-pattern
-    beyond ~8 cores per executor).
-    Efficiency = rows/sec at 4N / (4 x rows/sec at N); target >= 0.8.
-    """
-    import subprocess
-
-    def one_pass():
-        results = {}
-        rates = {}
-        for cores, cpuset in SCALING_PAIRS:
-            cmd = ["python",
-                   os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "tools", "scale_probe.py"),
-                   str(cores), str(SCALING_ROWS)]
-            pin = ["taskset", "-c", cpuset]
-            try:
-                out = subprocess.run(pin + cmd, capture_output=True, text=True,
-                                     timeout=1200).stdout
-            except FileNotFoundError:  # no taskset: unpinned fallback
-                out = subprocess.run(cmd, capture_output=True, text=True,
-                                     timeout=1200).stdout
-            line = [ln for ln in out.splitlines()
-                    if ln.startswith("RESULT")][-1]
-            _, c, sec, rps = line.split()
-            results[f"{cores}cpu"] = {"sec": float(sec),
-                                      "rows_per_sec": float(rps)}
-            rates[cores] = float(rps)
-        n_small, n_big = SCALING_PAIRS[0][0], SCALING_PAIRS[1][0]
-        eff = rates[n_big] / ((n_big // n_small) * rates[n_small])
-        results[f"scaling_efficiency_{n_small}cpu_to_{n_big}cpu"] =             round(eff, 3)
-        results["rows"] = SCALING_ROWS
-        return results, eff
-
-    # fixed number of passes, median reported — no conditional retry (a
-    # keep-the-better-pass policy would censor the distribution upward)
-    n_passes = int(os.environ.get("SPARK_GRAFT_SCALING_PASSES", "3"))
-    passes = []
-    for _ in range(n_passes):
-        time.sleep(5)  # let the previous session's JVM fully wind down
-        passes.append(one_pass())
-    effs = sorted(e for _, e in passes)
-    med_eff = effs[len(effs) // 2] if n_passes % 2 else \
-        (effs[len(effs) // 2 - 1] + effs[len(effs) // 2]) / 2
-    # representative pass = the one whose efficiency is the median
-    results = min((r for r, e in passes), key=lambda r: abs(
-        r[[k for k in r if k.startswith("scaling_efficiency")][0]] - med_eff))
-    results["efficiency_passes"] = [round(e, 3) for _, e in passes]
-    results["efficiency_median"] = round(med_eff, 3)
-    return results
-
-
 #: certified queries deliberately left out of the headline wall time
 _EXCLUDE_REASONS = {
     "domain_top_pages": "exactness twin of the salted two-phase top-k "
@@ -278,12 +143,8 @@ _EXCLUDE_REASONS = {
 }
 
 
-def _excluded() -> dict[str, str]:
-    all_q = set(entrymod.queries())
-    missing = all_q - set(HEADLINE)
-    out = {name: _EXCLUDE_REASONS.get(name, "not in headline set")
-           for name in sorted(missing)}
-    return out
+#: the headline set: every query not excluded above
+HEADLINE = [n for n in entrymod.queries() if n not in _EXCLUDE_REASONS]
 
 
 def main() -> None:
@@ -307,12 +168,10 @@ def main() -> None:
         # the certified query surface minus HEADLINE, with the reason
         # each is excluded from the wall-time metric (VERDICT r3 #6:
         # make the 218-vs-headline delta self-explaining in the artifact)
-        "excluded": _excluded(),
+        "excluded": _EXCLUDE_REASONS,
         "skipped": skipped,
         "errors": errors,
     }
-    if os.environ.get("SPARK_GRAFT_SCALING"):
-        payload["scaling"] = scaling_probe(sf_dir, entrymod._n_pages(sf_dir))
     print(json.dumps(payload))
 
 

@@ -101,10 +101,6 @@ class GridSet:
 # NTv2 (.gsb)
 # ---------------------------------------------------------------------------
 
-def _records(header: bytes, n: int = 11) -> list[bytes]:
-    return [header[i * 16:(i + 1) * 16] for i in range(n)]
-
-
 def load_gsb(path: str) -> GridSet:
     """Parse an NTv2 .gsb file into a GridSet (subgrid tree preserved)."""
     with open(path, "rb") as f:

@@ -1,4 +1,4 @@
-"""Ellipsoidal geodesics: Vincenty direct/inverse + spherical haversine.
+"""Ellipsoidal geodesics: Vincenty inverse + spherical haversine.
 
 The reference embeds Karney's geodesic library (src/geodesic.c:777,1166);
 the north star allows "Vincenty/Karney" — we implement Vincenty (1975),
@@ -100,54 +100,3 @@ def vincenty_inverse(lon1, lat1, lon2, lat2, ell: Ellipsoid | None = None,
         hv = haversine(lon1, lat1, lon2, lat2)
         s12 = np.where(done | same, s12, hv)
     return s12, azi1, azi2
-
-
-def vincenty_direct(lon1, lat1, azi1, s12, ell: Ellipsoid | None = None,
-                    max_iter: int = 30):
-    """Vincenty direct: start point + azimuth + distance -> end point.
-
-    (rad, rad, rad, m) -> (lon2 rad, lat2 rad, azi2 rad).
-    """
-    ell = ell or get_ellipsoid("WGS84")
-    a, f = ell.a, ell.f
-    b = a * (1.0 - f)
-
-    lon1 = np.asarray(lon1, dtype=np.float64)
-    lat1 = np.asarray(lat1, dtype=np.float64)
-    azi1 = np.asarray(azi1, dtype=np.float64)
-    s12 = np.asarray(s12, dtype=np.float64)
-
-    u1 = np.arctan((1.0 - f) * np.tan(lat1))
-    su1, cu1 = np.sin(u1), np.cos(u1)
-    sa1, ca1 = np.sin(azi1), np.cos(azi1)
-    sigma1 = np.arctan2(np.tan(u1), ca1)
-    sin_alpha = cu1 * sa1
-    cos_sq_alpha = 1.0 - sin_alpha * sin_alpha
-    u_sq = cos_sq_alpha * (a * a - b * b) / (b * b)
-    big_a = 1.0 + u_sq / 16384.0 * (4096.0 + u_sq * (-768.0 + u_sq * (320.0 - 175.0 * u_sq)))
-    big_b = u_sq / 1024.0 * (256.0 + u_sq * (-128.0 + u_sq * (74.0 - 47.0 * u_sq)))
-
-    sigma = s12 / (b * big_a)
-    for _ in range(max_iter):
-        cos2sm = np.cos(2.0 * sigma1 + sigma)
-        ss, cs = np.sin(sigma), np.cos(sigma)
-        dsig = big_b * ss * (cos2sm + big_b / 4.0 * (
-            cs * (-1.0 + 2.0 * cos2sm ** 2)
-            - big_b / 6.0 * cos2sm * (-3.0 + 4.0 * ss ** 2) * (-3.0 + 4.0 * cos2sm ** 2)))
-        sigma_new = s12 / (b * big_a) + dsig
-        if np.max(np.abs(sigma_new - sigma)) < 1e-13:
-            sigma = sigma_new
-            break
-        sigma = sigma_new
-
-    cos2sm = np.cos(2.0 * sigma1 + sigma)
-    ss, cs = np.sin(sigma), np.cos(sigma)
-    lat2 = np.arctan2(su1 * cs + cu1 * ss * ca1,
-                      (1.0 - f) * np.hypot(sin_alpha, su1 * ss - cu1 * cs * ca1))
-    lam = np.arctan2(ss * sa1, cu1 * cs - su1 * ss * ca1)
-    cc = f / 16.0 * cos_sq_alpha * (4.0 + f * (4.0 - 3.0 * cos_sq_alpha))
-    L = lam - (1.0 - cc) * f * sin_alpha * (
-        sigma + cc * ss * (cos2sm + cc * cs * (-1.0 + 2.0 * cos2sm ** 2)))
-    lon2 = lon1 + L
-    azi2 = np.arctan2(sin_alpha, -(su1 * ss - cu1 * cs * ca1))
-    return lon2, lat2, azi2

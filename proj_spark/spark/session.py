@@ -44,8 +44,17 @@ def get_spark(app: str = "proj_spark", master: str | None = None,
         # codegen classes + broadcasts (measured: 39-query steady pass
         # 138 s at 8g vs 111 s at 24g, knn_join 23 s -> 10 s).  On a real
         # cluster this is executor memory, sized per-executor as usual.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
     return b.getOrCreate()
+
+
+def _default_driver_mem() -> str:
+    """24g, or half the host's RAM where that is less.  The JVM grows its
+    heap toward the cap before it collects, so a cap above RAM gets the
+    driver killed part-way through a long suite on a small host."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(24 << 10, ram_mb // 2)}m"

@@ -21,12 +21,6 @@ XY_SCHEMA = StructType([
     StructField("y", DoubleType()),
 ])
 
-XYZ_SCHEMA = StructType([
-    StructField("x", DoubleType()),
-    StructField("y", DoubleType()),
-    StructField("z", DoubleType()),
-])
-
 LONLAT_SCHEMA = StructType([
     StructField("lon", DoubleType()),
     StructField("lat", DoubleType()),
@@ -40,47 +34,6 @@ def fwd_udf(op) -> "pandas_udf":
     def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
         x, y = op.fwd_deg(lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64))
         return pd.DataFrame({"x": x, "y": y})
-
-    return _f
-
-
-def inv_udf(op) -> "pandas_udf":
-    """(x, y) meters -> struct(lon, lat) degrees, via op.inv_deg."""
-
-    @pandas_udf(LONLAT_SCHEMA)
-    def _f(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        lon, lat = op.inv_deg(x.to_numpy(dtype=np.float64), y.to_numpy(dtype=np.float64))
-        return pd.DataFrame({"lon": lon, "lat": lat})
-
-    return _f
-
-
-def cart_fwd_udf(op) -> "pandas_udf":
-    """(lon_deg, lat_deg, h) -> struct(x, y, z) geocentric meters."""
-
-    @pandas_udf(XYZ_SCHEMA)
-    def _f(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.DataFrame:
-        x, y, z = op.fwd3d(
-            np.radians(lon.to_numpy(dtype=np.float64)),
-            np.radians(lat.to_numpy(dtype=np.float64)),
-            h.to_numpy(dtype=np.float64),
-        )
-        return pd.DataFrame({"x": x, "y": y, "z": z})
-
-    return _f
-
-
-def helmert_udf(h) -> "pandas_udf":
-    """(x, y, z) -> struct(x, y, z) via a Helmert transform (epoch-free)."""
-
-    @pandas_udf(XYZ_SCHEMA)
-    def _f(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
-        ox, oy, oz = h.fwd(
-            x.to_numpy(dtype=np.float64),
-            y.to_numpy(dtype=np.float64),
-            z.to_numpy(dtype=np.float64),
-        )
-        return pd.DataFrame({"x": ox, "y": oy, "z": oz})
 
     return _f
 
@@ -158,21 +111,6 @@ def webmerc_x(lon: Column, a: float = 6378137.0) -> Column:
 
 def webmerc_y(lat: Column, a: float = 6378137.0) -> Column:
     return F.lit(a) * F.log(F.tan(F.lit(np.pi / 4) + F.radians(lat) / 2))
-
-
-def cart_inv_udf(op) -> "pandas_udf":
-    """(X, Y, Z) geocentric meters -> struct(lon, lat) degrees (Bowring)."""
-
-    @pandas_udf(LONLAT_SCHEMA)
-    def _f(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.DataFrame:
-        lam, phi, _ = op.inv3d(
-            x.to_numpy(dtype=np.float64),
-            y.to_numpy(dtype=np.float64),
-            z.to_numpy(dtype=np.float64),
-        )
-        return pd.DataFrame({"lon": np.degrees(lam), "lat": np.degrees(phi)})
-
-    return _f
 
 
 def datum_pipeline_udf(cart, helmert) -> "pandas_udf":

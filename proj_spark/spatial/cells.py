@@ -15,14 +15,15 @@ engine relies on:
   - partition: cell_prefix = cell at a coarse z   → co-located joins
 
 Everything here is *pure Spark SQL expressions* — no UDFs, fully inside
-whole-stage codegen, and pushdown-friendly.
+whole-stage codegen, and pushdown-friendly.  `half_pairs`, the grid pair
+join over the half neighbourhood, is built from them alone.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Z_SHIFT = 58
@@ -131,12 +132,8 @@ def half_neighbor_cells(cell: Column, ring: int = 1) -> Column:
     n = F.pow(F.lit(2.0), z).cast("long")
     x = cell_x(cell)
     y = cell_y(cell)
-    half = [(0, 0)] + [(dx, dy)
-                       for dx in range(0, ring + 1)
-                       for dy in range(-ring, ring + 1)
-                       if (dx > 0) or (dx == 0 and dy > 0)]
     entries = []
-    for dx, dy in half:
+    for dx, dy in half_offsets(ring):
         nx = x + F.lit(dx).cast("long")
         ny = y + F.lit(dy).cast("long")
         packed = (z * F.lit(1 << Z_SHIFT).cast("long")
@@ -146,6 +143,45 @@ def half_neighbor_cells(cell: Column, ring: int = 1) -> Column:
             packed.alias("cell"),
             F.lit(dx == 0 and dy == 0).alias("home"))))
     return F.filter(F.array(*entries), lambda e: e.isNotNull())
+
+
+def half_offsets(ring: int = 1) -> list[tuple[int, int]]:
+    """The lexicographic half neighbourhood as (dx, dy) offsets: (0, 0)
+    first, then every offset within Chebyshev distance `ring` with
+    dx > 0, or dx == 0 and dy > 0."""
+    return [(0, 0)] + [(dx, dy)
+                       for dx in range(0, ring + 1)
+                       for dy in range(-ring, ring + 1)
+                       if (dx > 0) or (dx == 0 and dy > 0)]
+
+
+def half_pairs(pts: DataFrame, key: list[str], half: Column,
+               id_col: str) -> DataFrame:
+    """Every unordered pair of points whose cells are equal or
+    half-neighbours, each exactly once: the candidate step of a grid
+    distance join.
+
+    `pts` carries each point's cell in the `key` columns.  `half` is an
+    expression over `pts` giving the point's half neighbourhood as
+    array<struct<*key, home>>: its own cell flagged `home`, plus one of
+    each pair of opposite neighbour offsets (:func:`half_offsets`,
+    :func:`half_neighbor_cells`).  One side explodes over `half` and
+    equi-joins the other side on the key, so a pair of distinct cells
+    meets once; a same-cell pair is kept only as a_<id> < b_<id>.
+
+    Returns a_<c> (the exploded side) and b_<c> for every non-key column
+    c of `pts`.  The caller applies its own distance predicate.
+    """
+    cols = [c for c in pts.columns if c not in key]
+    a = (pts.withColumn("_nb", F.explode(half))
+         .select(*[F.col(c).alias(f"a_{c}") for c in cols],
+                 *[F.col(f"_nb.{k}").alias(k) for k in key],
+                 F.col("_nb.home").alias("_home")))
+    b = pts.select(*[F.col(c).alias(f"b_{c}") for c in cols], *key)
+    return (a.join(b, key)
+            .where(~F.col("_home")
+                   | (F.col(f"a_{id_col}") < F.col(f"b_{id_col}")))
+            .drop("_home", *key))
 
 
 # --- SQL string builders (for oracle parity, ANSI/DuckDB dialect) --------

@@ -288,6 +288,23 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
     return out
 
 
+def _pair_dists(pts: DataFrame, z: int, ring: int, id_col: str,
+                lon_col: str, lat_col: str) -> DataFrame:
+    """(_ida, _idb, dist_m): every unordered pair of points whose zoom-z
+    cells lie within Chebyshev `ring`, once, with its haversine
+    distance (cells.half_pairs over cells.half_neighbor_cells)."""
+    base = pts.select(
+        F.col(id_col), F.col(lon_col), F.col(lat_col),
+        cells.cell_id(F.col(lon_col), F.col(lat_col), z).alias("cell"))
+    pairs = cells.half_pairs(
+        base, ["cell"], cells.half_neighbor_cells(F.col("cell"), ring), id_col)
+    return pairs.select(
+        F.col(f"a_{id_col}").alias("_ida"), F.col(f"b_{id_col}").alias("_idb"),
+        haversine_expr(F.col(f"a_{lon_col}"), F.col(f"a_{lat_col}"),
+                       F.col(f"b_{lon_col}"), F.col(f"b_{lat_col}"))
+        .alias("dist_m"))
+
+
 def radius_join(pts: DataFrame, radius_m: float, z: int = 13,
                 id_col: str = "url", lon_col: str = "lon",
                 lat_col: str = "lat",
@@ -323,30 +340,12 @@ def radius_join(pts: DataFrame, radius_m: float, z: int = 13,
             f"radius {radius_m} m exceeds 0.9x the zoom-{z} cell size "
             f"({min_dim:.0f} m) at |lat|={max_abs_lat:.2f}; ring-1 cover "
             f"would be incomplete — lower z or the radius")
-    base = pts.select(
-        F.col(id_col), F.col(lon_col), F.col(lat_col),
-        cells.cell_id(F.col(lon_col), F.col(lat_col), z).alias("cell"))
-    # HALF-neighborhood explode: each unordered pair of distinct cells
-    # is generated exactly once (see cells.half_neighbor_cells), so only
-    # same-cell (home) candidates need the id tiebreak; the full-3x3
-    # plan built every candidate twice and filtered half away.
-    left = (base.withColumn(
-        "_nb", F.explode(cells.half_neighbor_cells(F.col("cell"))))
-        .select(id_col, lon_col, lat_col,
-                F.col("_nb.cell").alias("cell"),
-                F.col("_nb.home").alias("_home")))
-    right = base.select(F.col(id_col).alias("_rid"),
-                        F.col(lon_col).alias("_rlon"),
-                        F.col(lat_col).alias("_rlat"), "cell")
-    cand = (left.join(right, "cell")
-            .where(~F.col("_home") | (F.col(id_col) < F.col("_rid"))))
-    # directional candidates arrive in arbitrary id order: emit sorted
-    return (cand.select(
-        F.least(F.col(id_col), F.col("_rid")).alias("id_a"),
-        F.greatest(F.col(id_col), F.col("_rid")).alias("id_b"),
-        haversine_expr(F.col(lon_col), F.col(lat_col),
-                       F.col("_rlon"), F.col("_rlat")).alias("dist_m"))
-        .where(F.col("dist_m") <= F.lit(float(radius_m))))
+    pair = _pair_dists(pts, z, 1, id_col, lon_col, lat_col)
+    # half-neighbourhood candidates arrive in arbitrary id order: emit
+    # sorted
+    return (pair.select(F.least("_ida", "_idb").alias("id_a"),
+                        F.greatest("_ida", "_idb").alias("id_b"), "dist_m")
+            .where(F.col("dist_m") <= F.lit(float(radius_m))))
 
 
 def knn_self_join(pts: DataFrame, k: int = 3, z: int = 10, ring: int = 1,
@@ -372,25 +371,7 @@ def knn_self_join(pts: DataFrame, k: int = 3, z: int = 10, ring: int = 1,
     bounded by choosing z so cells hold O(10) points), one shuffle on
     the point id for the window.  Work is sum(cell^2)/2, never n^2.
     """
-    base = pts.select(
-        F.col(id_col), F.col(lon_col), F.col(lat_col),
-        cells.cell_id(F.col(lon_col), F.col(lat_col), z).alias("cell"))
-    left = (base.withColumn(
-        "_nb", F.explode(cells.half_neighbor_cells(F.col("cell"), ring)))
-        .select(id_col, lon_col, lat_col,
-                F.col("_nb.cell").alias("cell"),
-                F.col("_nb.home").alias("_home")))
-    right = base.select(F.col(id_col).alias("nbr_id"),
-                        F.col(lon_col).alias("nbr_lon"),
-                        F.col(lat_col).alias("nbr_lat"), "cell")
-    # each unordered pair matches exactly once (half set; home pairs
-    # tie-broken by id), so the distance is computed once per pair
-    cand = (left.join(right, "cell")
-            .where(~F.col("_home") | (F.col(id_col) < F.col("nbr_id"))))
-    pair = cand.select(
-        F.col(id_col).alias("_ida"), F.col("nbr_id").alias("_idb"),
-        haversine_expr(F.col(lon_col), F.col(lat_col),
-                       F.col("nbr_lon"), F.col("nbr_lat")).alias("dist_m"))
+    pair = _pair_dists(pts, z, ring, id_col, lon_col, lat_col)
     # kNN is per-point: mirror each pair into both orientations
     both = F.explode(F.array(
         F.struct(F.col("_ida").alias(id_col), F.col("_idb").alias("nbr_id")),
@@ -416,23 +397,7 @@ def nn_dist(pts: DataFrame, z: int = 10, ring: int = 1,
     the ring box are absent from the output (the bounded-radius
     contract; callers count them against the full point count).
     """
-    base = pts.select(
-        F.col(id_col), F.col(lon_col), F.col(lat_col),
-        cells.cell_id(F.col(lon_col), F.col(lat_col), z).alias("cell"))
-    left = (base.withColumn(
-        "_nb", F.explode(cells.half_neighbor_cells(F.col("cell"), ring)))
-        .select(id_col, lon_col, lat_col,
-                F.col("_nb.cell").alias("cell"),
-                F.col("_nb.home").alias("_home")))
-    right = base.select(F.col(id_col).alias("nbr_id"),
-                        F.col(lon_col).alias("nbr_lon"),
-                        F.col(lat_col).alias("nbr_lat"), "cell")
-    cand = (left.join(right, "cell")
-            .where(~F.col("_home") | (F.col(id_col) < F.col("nbr_id"))))
-    pair = cand.select(
-        F.col(id_col).alias("_ida"), F.col("nbr_id").alias("_idb"),
-        haversine_expr(F.col(lon_col), F.col(lat_col),
-                       F.col("nbr_lon"), F.col("nbr_lat")).alias("dist_m"))
+    pair = _pair_dists(pts, z, ring, id_col, lon_col, lat_col)
     both = F.explode(F.array(
         F.struct(F.col("_ida").alias(id_col)),
         F.struct(F.col("_idb").alias(id_col))))

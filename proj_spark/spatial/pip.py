@@ -218,28 +218,3 @@ def pip_join(points: DataFrame, polygons: DataFrame, z: int = 7,
     # interior cells need no exact test (Or short-circuits in codegen)
     return (joined.where(F.col("interior") | exact)
             .drop("_cell", "cell", ring_col, "interior"))
-
-
-def polygon_area_udf(ellps_a: float = 6378137.0,
-                     rf: float = 298.257223563):
-    """pandas UDF: ring array<struct<lon,lat>> (degrees) -> ellipsoidal
-    area in m^2 (Karney geodesic polygon area; reference
-    src/geodesic.c geod_polygonarea)."""
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _f(ring: pd.Series) -> pd.Series:
-        from proj_spark.operations.karney import Geodesic
-        g = Geodesic(ellps_a, 1.0 / rf)
-        out = np.empty(len(ring))
-        for i, r in enumerate(ring):
-            lons = np.radians(np.array([v["lon"] for v in r]))
-            lats = np.radians(np.array([v["lat"] for v in r]))
-            # drop the closing vertex if the ring is closed
-            if len(lons) > 1 and lons[0] == lons[-1] and lats[0] == lats[-1]:
-                lons, lats = lons[:-1], lats[:-1]
-            _, a = g.polygon_area(lats, lons)
-            out[i] = a
-        return pd.Series(out)
-
-    return _f

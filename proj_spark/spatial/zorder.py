@@ -207,11 +207,6 @@ def ranges_predicate(zkey: Column,
     return pred
 
 
-def ranges_predicate_sql(zkey: str, ranges: list[tuple[int, int]]) -> str:
-    return " OR ".join(f"({zkey} BETWEEN {lo} AND {hi})"
-                       for lo, hi in ranges)
-
-
 def ranges_semi_join(df: DataFrame, ranges: list[tuple[int, int]],
                      key_col: str = "zkey") -> DataFrame:
     """Keep the rows whose ``key_col`` falls in any interval, via a

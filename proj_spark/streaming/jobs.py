@@ -214,10 +214,12 @@ def stream_minhash_neardup(spark: SparkSession, docs_dir: str,
 
     Each document contributes one (band, bucket) row per minhash band via
     the SAME `banded_signatures` relation the batch candidate join uses
-    (`text/dedup.py`).  At corpus scale pass the density-matched
-    (num_hashes, rows_per_band) from `__spark_entry__.mh_params` so the
+    (`text/dedup.py`).  At corpus scale take the density-matched
+    (num_hashes, rows_per_band) from `__spark_entry__.mh_params` and
+    pass `num_hashes` and `bands = num_hashes // rows_per_band`, so the
     stream registry and the batch join agree on the banding (hot-shingle
-    saturation measurements: BASELINE.md round-5).  State is keyed by (band, bucket); the FIRST
+    saturation measurements: BASELINE.md round-5).  State is keyed by
+    (band, bucket); the FIRST
     document to touch a bucket registers as its representative (one
     string of state per distinct bucket), and every later arrival at an
     occupied bucket emits a candidate pair (doc_id, rep_id, band,

@@ -39,10 +39,6 @@ def bpe_tokens(text: Column) -> Column:
     return F.regexp_extract_all(F.lower(text), F.lit(BPE_PATTERN), F.lit(0))
 
 
-def bpe_token_count(text: Column) -> Column:
-    return F.size(bpe_tokens(text))
-
-
 def char_count(text: Column) -> Column:
     return F.length(text)
 

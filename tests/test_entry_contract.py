@@ -30,6 +30,37 @@ def test_every_oracle_has_a_query():
     assert not extra, f"oracles without queries: {extra}"
 
 
+def test_every_query_has_an_oracle():
+    """queries() is every q_<name> of the module, and each has exactly
+    one _sql_<name>."""
+    names = [k[2:] for k in vars(entry) if k.startswith("q_")]
+    assert list(entry.queries()) == names
+    assert len(names) == 218
+    missing = [n for n in names if not callable(getattr(entry, f"_sql_{n}",
+                                                        None))]
+    assert not missing, f"queries without oracles: {missing}"
+    assert list(entry.oracle_sql()) == names
+
+
+def test_bench_headline_is_queries_minus_exclusions():
+    import bench
+    qs = entry.queries()
+    assert set(bench._EXCLUDE_REASONS) <= set(qs)
+    assert bench.HEADLINE == [n for n in qs
+                              if n not in bench._EXCLUDE_REASONS]
+    assert len(bench.HEADLINE) == 214
+
+
+def test_minhash_oracle_follows_mh_params(monkeypatch):
+    """The oracle takes its hash and band counts from mh_params, as the
+    query does: 128 hashes in rows of 8 give 16 bands of 8 rows."""
+    monkeypatch.setattr(entry, "mh_params", lambda n_docs: (128, 8))
+    sql = entry._sql_minhash_neardup()
+    assert "(127, " in sql and "(128, " not in sql
+    assert "generate_series(0, 15)" in sql
+    assert "s[band * 8 + 8]" in sql and "s[band * 8 + 9]" not in sql
+
+
 def test_oracle_sql_parses_and_columns_match(spark, con):
     qs = entry.queries()
     for name, sql in entry.oracle_sql().items():

@@ -602,3 +602,45 @@ def test_knn_self_join_matches_bruteforce(spark, geo):
         assert len(mine) == len(exp), (urls[i], len(mine), len(exp))
         for (ed, eid), (gid, gd) in zip(exp, mine):
             assert eid == gid and abs(ed - gd) < 2e-3, (urls[i], eid, gid)
+
+
+def test_half_pairs_matches_nested_loop(spark):
+    """cells.half_pairs on a floor grid of width W yields every unordered
+    pair of points in the same or an adjacent cell exactly once, and
+    with the Chebyshev predicate d <= W exactly the nested-loop pairs
+    within W."""
+    W = 10
+    pts = [(1, 1, 1), (2, 3, 4),            # two points in one cell
+           (3, 9, 5), (4, 11, 5),           # a pair across a cell border
+           (5, -3, -7), (6, -12, -2),       # negative coordinates
+           (7, 30, 30), (8, 40, 30),        # exactly one cell width apart
+           (9, 30, 40), (10, 30, 20),       # diagonal and vertical cells
+           (11, 55, 55)]                    # no neighbour
+    df = (spark.createDataFrame(pts, "id long, x long, y long")
+          .withColumn("cx", F.floor(F.col("x") / W))
+          .withColumn("cy", F.floor(F.col("y") / W)))
+    half = F.array(*[F.struct((F.col("cx") + dx).alias("cx"),
+                              (F.col("cy") + dy).alias("cy"),
+                              F.lit(dx == 0 and dy == 0).alias("home"))
+                     for dx, dy in cells.half_offsets()])
+    got = [(r["a_id"], r["b_id"], r["a_x"], r["a_y"], r["b_x"], r["b_y"])
+           for r in cells.half_pairs(df, ["cx", "cy"], half, "id").collect()]
+    keys = [tuple(sorted(g[:2])) for g in got]
+    assert len(keys) == len(set(keys))
+
+    def cell(p):
+        return p[1] // W, p[2] // W
+
+    near, within = set(), set()
+    for i, p in enumerate(pts):
+        for q in pts[i + 1:]:
+            (pcx, pcy), (qcx, qcy) = cell(p), cell(q)
+            if abs(pcx - qcx) <= 1 and abs(pcy - qcy) <= 1:
+                near.add((p[0], q[0]))
+            if max(abs(p[1] - q[1]), abs(p[2] - q[2])) <= W:
+                within.add((p[0], q[0]))
+    assert set(keys) == near
+    got_within = {k for k, g in zip(keys, got)
+                  if max(abs(g[2] - g[4]), abs(g[3] - g[5])) <= W}
+    assert got_within == within
+    assert {(1, 2), (3, 4), (5, 6), (7, 8), (8, 9), (7, 10)} <= within

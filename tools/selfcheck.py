@@ -115,11 +115,6 @@ def main() -> int:
             failed.append(name)
             continue
         t1 = time.time()
-        if name not in oracles:
-            print(f"ok(rows-only) {name}: {len(sdf)} rows  [{t1-t0:.1f}s]")
-            if len(sdf) == 0:
-                print(f"  WARN {name}: empty result")
-            continue
         try:
             odf = con.execute(oracles[name]).df()
         except Exception as e:

@@ -1,8 +1,8 @@
 """10x row-count stress: the geo spine at sf0.1 (600k pages) vs an
 sf1-equivalent synthetic corpus (6M pages), same session, same plans.
 
-The scaling-probe (tools/scale_probe.py) evidences the north rule's
-N-vs-4N CLUSTER scaling; this tool evidences DATA scaling — that each
+Round 5's N-vs-4N probe (BASELINE.md, "Throughput scaling, N vs 4N")
+evidenced CLUSTER scaling; this tool evidences DATA scaling — that each
 headline operator's throughput (rows/sec) holds when the input grows
 10x with the parallelism fixed.  A plan that degrades superlinearly
 here (e.g. a join whose per-key fan-out grows with density) would fall
