@@ -359,16 +359,20 @@ pts AS (
          {cells.tile_y_sql('lat', z)} AS cy
   FROM pages
 ),
-cand AS (
-  -- DISTINCT mirrors the engine's array_distinct over clamped ring cells
-  SELECT DISTINCT a.url AS url, b.url AS nbr_id, {dist} AS dist
-  FROM pts a
+ring AS (
+  -- DISTINCT mirrors the engine's array_distinct over clamped ring
+  -- cells; the cells are plain columns so pts joins them by hash
+  SELECT DISTINCT url, lon, lat,
+         LEAST(GREATEST(cx + dx, 0), {nmax}) AS rx,
+         LEAST(GREATEST(cy + dy, 0), {nmax}) AS ry
+  FROM pts
   CROSS JOIN (VALUES (-1), (0), (1)) dxs(dx)
   CROSS JOIN (VALUES (-1), (0), (1)) dys(dy)
-  JOIN pts b
-    ON b.cx = LEAST(GREATEST(a.cx + dx, 0), {nmax})
-   AND b.cy = LEAST(GREATEST(a.cy + dy, 0), {nmax})
-   AND b.url <> a.url
+),
+cand AS (
+  SELECT a.url AS url, b.url AS nbr_id, {dist} AS dist
+  FROM ring a
+  JOIN pts b ON b.cx = a.rx AND b.cy = a.ry AND b.url <> a.url
 ),
 ranked AS (
   SELECT url, nbr_id, dist,
@@ -6731,7 +6735,7 @@ def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic, reproducible under any partial-agg reorder.
 
     Scale plan: each round joins only the IMPROVED frontier against the
-    persisted edge relation and merges labels with ONE groupBy-min; the
+    checkpointed edge relation and merges labels with ONE groupBy-min; the
     frontier shrinks as labels converge and the loop early-stops, so
     work per round is O(|frontier| x avg-degree) — the same
     level-synchronous discipline as BFS/pagerank, generalized to
@@ -11873,6 +11877,19 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows with broadcast joins.
 
     FULL SQL ORACLE (_sql_markov_stationary)."""
+    _, pi = _markov_chain(spark, sf_dir)
+    return pi.select(F.col("typ").alias("event_type"),
+                     F.col("score").cast("long").alias("stat_q"))
+
+
+def _markov_chain(spark: SparkSession, sf_dir: str
+                  ) -> tuple[DataFrame, DataFrame]:
+    """The event-type Markov chain of q_markov_stationary and
+    q_entropy_rate: (e, pi) with e = (f, t, n, row_total) the exact
+    transition counts and their row totals, and pi = (typ, score) the
+    MS_ROUNDS-round quantized power iteration over them.  e and every
+    round of pi are localCheckpoint'ed (graph.py's lineage rule): the
+    rounds read the 25-row matrix, never the corpus window again."""
     ev = _events_micros(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("tm", "event_id")
     mat = (ev.select("user_id", "event_type", "tm", "event_id",
@@ -11882,10 +11899,9 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("nxt").alias("t"))
            .agg(F.count("*").alias("n")))
     tot = mat.groupBy("f").agg(F.sum("n").alias("row_total"))
-    e = mat.join(F.broadcast(tot), "f").persist()
+    e = mat.join(F.broadcast(tot), "f").localCheckpoint()
     types = e.select(F.col("f").alias("typ")).distinct()
     pi = types.select("typ", F.lit(MS_INIT).cast("long").alias("score"))
-    inter = []
     for _ in range(MS_ROUNDS):
         nxt = (e.join(F.broadcast(pi.withColumnRenamed("typ", "f")), "f")
                .select(F.col("t").alias("typ"),
@@ -11893,14 +11909,8 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy("typ").agg(F.sum("c").alias("m")))
         pi = (types.join(nxt, "typ", "left")
               .select("typ", F.coalesce(F.col("m"), F.lit(0))
-                      .cast("long").alias("score"))).persist()
-        inter.append(pi)
-    pi.count()
-    for df in inter[:-1]:
-        df.unpersist()
-    e.unpersist()
-    return pi.select(F.col("typ").alias("event_type"),
-                     F.col("score").cast("long").alias("stat_q"))
+                      .cast("long").alias("score"))).localCheckpoint()
+    return e, pi
 
 
 def _sql_markov_stationary() -> str:
@@ -11996,8 +12006,7 @@ def q_dtw_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events_micros(spark, sf_dir)
     cnt = (ev.select("event_type", F.expr("tm div 86400000000").alias("day"))
-           .groupBy("event_type", "day").agg(F.count("*").alias("y"))
-           .persist())
+           .groupBy("event_type", "day").agg(F.count("*").alias("y")))
     days = cnt.select("day").distinct()
     types = cnt.select("event_type").distinct()
     ser = (types.crossJoin(days)
@@ -12015,7 +12024,6 @@ def q_dtw_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.event_type").alias("type_b"),
         F.col("a.n_days").alias("n_days"),
         dtw_udf(F.col("a.ys"), F.col("b.ys")).alias("dtw"))
-    cnt.unpersist()
     return out
 
 
@@ -12270,7 +12278,7 @@ def q_ewma_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_ewma_hours)."""
     ev = _events_micros(spark, sf_dir)
     ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")).persist())
+           .groupBy("x").agg(F.count("*").alias("y")))
     contrib = (ser.withColumn("k", F.explode(F.sequence(
         F.lit(1), F.lit(EWMA_K))))
         .select((F.col("x") + F.col("k")).alias("tx"),
@@ -12288,7 +12296,6 @@ def q_ewma_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.when(F.col("num") > 0, ratio).alias("ratio_q"),
                    ((F.col("num") > 0)
                     & (ratio >= F.lit(EWMA_BURST_Q))).alias("burst"))
-    ser.unpersist()
     return out
 
 
@@ -12343,7 +12350,7 @@ def q_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     items = (li.select(F.col("l_orderkey").alias("o"),
                        F.col("l_partkey").alias("p"))
-             .distinct().persist())
+             .distinct())
     part_n = items.groupBy("p").agg(F.count("*").alias("n"))
     tot = items.agg(F.countDistinct("o").alias("n_orders"))
     a = items.alias("a")
@@ -12364,7 +12371,6 @@ def q_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("nb").cast("long").alias("nb"),
                    F.expr("(supp * n_orders * 1000000) div (na * nb)")
                    .cast("long").alias("lift_q")))
-    items.unpersist()
     return (out.orderBy(F.col("lift_q").desc(), "p_a", "p_b")
             .limit(CP_TOPK))
 
@@ -12414,7 +12420,7 @@ def q_holt_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = HOLT_K
     ev = _events_micros(spark, sf_dir)
     ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")).persist())
+           .groupBy("x").agg(F.count("*").alias("y")))
     c1 = (ser.withColumn("k", F.explode(F.sequence(F.lit(1), F.lit(K))))
           .select((F.col("x") + F.col("k")).alias("tx"),
                   F.expr(f"CAST(shiftleft(y, CAST({K} - k AS INT)) "
@@ -12443,7 +12449,6 @@ def q_holt_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
         fnum.cast("long").alias("fnum"),
         F.expr(f"(({3 * w} * s1num - 2 * s2num) * 1000000) "
                f"div {w * w}").cast("long").alias("forecast_q"))
-    ser.unpersist()
     return out
 
 
@@ -12499,8 +12504,7 @@ def q_ccf_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_ccf_types)."""
     ev = _events_micros(spark, sf_dir)
     ser = (ev.select("event_type", F.expr("tm div 3600000000").alias("x"))
-           .groupBy("event_type", "x").agg(F.count("*").alias("y"))
-           .persist())
+           .groupBy("event_type", "x").agg(F.count("*").alias("y")))
     ranked = (ser.groupBy("event_type").agg(F.sum("y").alias("n_tot"))
               .withColumn("rk", F.row_number().over(
                   Window.orderBy(F.col("n_tot").desc(), "event_type"))))
@@ -12546,7 +12550,6 @@ def q_ccf_types(spark: SparkSession, sf_dir: str) -> DataFrame:
                F.round(num.cast("double")
                        / F.sqrt(dx.cast("double") * dy.cast("double")), 6))
         .alias("r"))
-    ser.unpersist()
     return out
 
 
@@ -12620,7 +12623,6 @@ def q_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select("source", F.explode(
         analysis.tokens(F.lower(F.col("text")))).alias("token"))
     cnt = tok.groupBy("source", "token").agg(F.count("*").alias("c"))
-    cnt = cnt.persist()
     totals = cnt.groupBy("source").agg(F.sum("c").alias("t"))
     vocab = (cnt.groupBy("token").agg(F.sum("c").alias("g"))
              .orderBy(F.col("g").desc(), "token").limit(STYLO_M)
@@ -12631,7 +12633,6 @@ def q_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("source", "token",
                      F.expr(f"(coalesce(c, 0) * {STYLO_FSCALE}) div t")
                      .alias("f")))
-    cells = cells.persist()
     var = (cells.groupBy("token")
            .agg(F.sum("f").alias("sf"),
                 F.sum(F.col("f") * F.col("f")).alias("sff"))
@@ -12655,8 +12656,6 @@ def q_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select("src_a", "src_b",
                    F.col("n_w").cast("long").alias("n_w"),
                    F.col("delta_q").cast("long").alias("delta_q")))
-    cnt.unpersist()
-    cells.unpersist()
     return out
 
 
@@ -13028,7 +13027,6 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                     analysis.tokens(F.lower(F.col("text"))).alias("a"))
     tf = (t.select("doc_id", F.explode("a").alias("tok"))
           .groupBy("doc_id", "tok").agg(F.count("*").alias("tf")))
-    tf = tf.persist()
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     tot = dl.agg(F.count("*").alias("nn"), F.sum("dl").alias("s"))
     dfr = tf.groupBy("tok").agg(F.count("*").alias("df"))
@@ -13062,7 +13060,6 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("r1").cast("long").alias("r1"),
                    F.col("r2").cast("long").alias("r2"),
                    F.col("rrf_q").cast("long").alias("rrf_q")))
-    tf.unpersist()
     return out
 
 
@@ -13271,14 +13268,12 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = F.col("tok").isin(*RAKE_STOP)
     seg = (tok.withColumn("grp", F.sum(stop.cast("int")).over(w))
            .where(~stop))
-    seg = seg.persist()
     ph = (seg.groupBy("doc_id", "grp")
           .agg(F.count("*").alias("len"),
                F.array_join(F.transform(
                    F.array_sort(F.collect_list(F.struct("pos", "tok"))),
                    lambda s: s.tok), " ").alias("ptext"))
           .where(F.col("len") <= RAKE_MAXLEN))
-    ph = ph.persist()
     members = seg.join(ph.select("doc_id", "grp", "len", "ptext"),
                        ["doc_id", "grp"])
     wstat = (members.groupBy("tok")
@@ -13294,8 +13289,6 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
            .orderBy(F.col("score_q").desc(), "ptext").limit(RAKE_TOPK)
            .select("ptext", F.col("n_occ").cast("long").alias("n_occ"),
                    F.col("score_q").cast("long").alias("score_q")))
-    seg.unpersist()
-    ph.unpersist()
     return out
 
 
@@ -13458,7 +13451,7 @@ def q_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_perm_entropy)."""
     ev = _events_micros(spark, sf_dir)
     ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")).persist())
+           .groupBy("x").agg(F.count("*").alias("y")))
     hor = ser.agg(F.min("x").alias("x_min"), F.max("x").alias("x_max"))
     spine = hor.select(
         F.explode(F.sequence("x_min", "x_max")).alias("t"), "x_max")
@@ -13492,7 +13485,6 @@ def q_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("p_q"),
                    lq.alias("lq"),
                    (F.col("n") * lq).cast("long").alias("term_q")))
-    ser.unpersist()
     return out
 
 
@@ -13554,7 +13546,7 @@ def q_hurst_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_hurst_var)."""
     ev = _events_micros(spark, sf_dir)
     ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")).persist())
+           .groupBy("x").agg(F.count("*").alias("y")))
     hor = ser.agg(F.min("x").alias("x_min"), F.max("x").alias("x_max"))
     spine = (hor.select(
         F.explode(F.sequence("x_min", "x_max")).alias("t"),
@@ -13588,7 +13580,6 @@ def q_hurst_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = fit.select(
         "n_pts", "su", "sv", "suuq", "suvq", "slope", "intercept",
         F.round(F.col("slope") / 2.0, 6).alias("hurst"))
-    ser.unpersist()
     return out
 
 
@@ -13652,7 +13643,7 @@ def q_chi2_indep(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_chi2_indep)."""
     docs = _docs(spark, sf_dir)
     cells = (docs.groupBy("lang", "source")
-             .agg(F.count("*").alias("o")).persist())
+             .agg(F.count("*").alias("o")))
     nl = cells.groupBy("lang").agg(F.sum("o").alias("n_l"))
     ns = cells.groupBy("source").agg(F.sum("o").alias("n_s"))
     tot = cells.agg(F.sum("o").alias("nn"))
@@ -13672,7 +13663,6 @@ def q_chi2_indep(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.expr("((nn * o - n_l * n_s) * (nn * o - n_l * n_s) "
                           "* 1000) div (nn * n_l * n_s)")
                    .cast("long").alias("term_q")))
-    cells.unpersist()
     return out
 
 
@@ -13714,7 +13704,7 @@ def q_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_concentration)."""
     pts = _points(spark, sf_dir)
-    cnt = (pts.groupBy("domain").agg(F.count("*").alias("c")).persist())
+    cnt = pts.groupBy("domain").agg(F.count("*").alias("c"))
     tot = cnt.agg(F.sum("c").alias("n_pages"),
                   F.count("*").alias("n_domains"),
                   F.sum(F.col("c") * F.col("c")).alias("sumsq"))
@@ -13728,7 +13718,6 @@ def q_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .cast("long").alias("hhi_q"),
                    F.expr(f"(top_c * 1000000) div n_pages")
                    .cast("long").alias("cr{}_q".format(CONC_TOPK))))
-    cnt.unpersist()
     return out
 
 
@@ -14232,8 +14221,7 @@ def q_location_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:
     tl = (pts.select(cells.tile_x(F.col("lon"), DIV_Z).alias("tx"),
                      cells.tile_y(F.col("lat"), DIV_Z).alias("ty"),
                      "lang")
-          .groupBy("tx", "ty", "lang").agg(F.count("*").alias("c"))
-          .persist())
+          .groupBy("tx", "ty", "lang").agg(F.count("*").alias("c")))
     nt = tl.groupBy("tx", "ty").agg(F.sum("c").alias("n_t"))
     nl = tl.groupBy("lang").agg(F.sum("c").alias("c_l"))
     tot = tl.agg(F.sum("c").alias("nn"))
@@ -14249,7 +14237,6 @@ def q_location_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("c_l").cast("long").alias("c_l"),
                    F.expr("(c * nn * 1000000) div (n_t * c_l)")
                    .cast("long").alias("lq_q")))
-    tl.unpersist()
     return out
 
 
@@ -14517,28 +14504,7 @@ def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized relations.
 
     FULL SQL ORACLE (_sql_entropy_rate)."""
-    ev = _events_micros(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("tm", "event_id")
-    mat = (ev.select("user_id", "event_type", "tm", "event_id",
-                     F.lead("event_type").over(w).alias("nxt"))
-           .where(F.col("nxt").isNotNull())
-           .groupBy(F.col("event_type").alias("f"),
-                    F.col("nxt").alias("t"))
-           .agg(F.count("*").alias("n")))
-    tot = mat.groupBy("f").agg(F.sum("n").alias("row_total"))
-    e = mat.join(F.broadcast(tot), "f").persist()
-    types = e.select(F.col("f").alias("typ")).distinct()
-    pi = types.select("typ", F.lit(MS_INIT).cast("long").alias("score"))
-    inter = []
-    for _ in range(MS_ROUNDS):
-        nxt = (e.join(F.broadcast(pi.withColumnRenamed("typ", "f")), "f")
-               .select(F.col("t").alias("typ"),
-                       F.expr("(score * n) div row_total").alias("c"))
-               .groupBy("typ").agg(F.sum("c").alias("m")))
-        pi = (types.join(nxt, "typ", "left")
-              .select("typ", F.coalesce(F.col("m"), F.lit(0))
-                      .cast("long").alias("score"))).persist()
-        inter.append(pi)
+    e, pi = _markov_chain(spark, sf_dir)
     lnq = F.round(F.log(F.col("row_total").cast("double")
                         / F.col("n").cast("double")) * 1e6, 0) \
         .cast("long")
@@ -14552,9 +14518,6 @@ def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("h_f_q").cast("long").alias("h_f_q"),
                    F.expr(f"(score * h_f_q) div {MS_INIT}")
                    .cast("long").alias("wh_q")))
-    for df in inter[:-1]:
-        df.unpersist()
-    e.unpersist()
     return out
 
 

@@ -1,8 +1,8 @@
 """EPSG catalog factory: authority-code -> proj-string from the vendored
-public EPSG registry (proj_spark/data/epsg_catalog.json.gz, extracted by
-tools/vendor_epsg.py from the same SQL tables the reference compiles
-into proj.db — src/iso19111/factory.cpp:126-292 is the reference
-analogue of this module).
+public EPSG registry (proj_spark/data/epsg_catalog.json.gz, extracted
+from the same SQL tables the reference compiles into proj.db; see
+FIXTURES.md §6).  src/iso19111/factory.cpp:126-292 is the reference
+analogue of this module.
 
 Lowering rules:
   - geographic CRS: +proj=longlat + ellipsoid + prime meridian

@@ -17,12 +17,25 @@ a standard variant; both engines implement the same rule.
 
 Scale plan (100 TB / 1e8-domain graph): the edge relation is the big
 side — it is shuffled ONCE onto `src` when the out-weight totals are
-computed, then persisted; each of the `iters` rounds is one join
-(broadcast while the rank relation fits, the co-partitioned sort-merge
-join reuses the persisted edge partitioning otherwise) plus one
-map-side-combined hash aggregation on `dst`.  Rank relations are
-persisted per round and the previous round unpersisted, truncating the
-iterative lineage exactly like text/components.py's pointer-jumping CC.
+computed, then checkpointed; each of the `iters` rounds is one join
+(broadcast while the rank relation fits, a sort-merge join against the
+checkpointed edges otherwise) plus one map-side-combined hash
+aggregation on `dst`.
+
+Lineage rule for the loops here and in text/components.py: a loop that
+replaces a relation each round ends the round in `.localCheckpoint()`,
+and a stop on an empty frontier asks `.isEmpty()` of that checkpoint
+(kcore_peel is the one exception on purpose: its rounds are narrow
+broadcast semi-joins, so it stays one lazy plan).  The checkpoint is a
+TRUE lineage cut — the next round's plan starts from the stored rows,
+so neither Catalyst's plan tree nor the recomputation grows with the
+round count.  `persist()` is not: a cached relation keeps its whole
+logical plan, and whatever a loop persists stays in the session cache
+until someone unpersists it.
+A relation every round re-reads without replacing it (an edge set) is
+materialized once before the loop: checkpointed here, or persisted and
+then unpersisted by the same function (components.py's edge set, the
+k-means lattice and the MinHash barriers in __spark_entry__.py).
 
 Reference analogue: this is the engine's second iterative-dataflow
 operator next to connected_components; the reference's own iterative
@@ -50,30 +63,19 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     """
     base = (PR_DEN - PR_NUM) * init // PR_DEN
     w_tot = edges.groupBy("src").agg(F.sum("w").alias("w_tot"))
-    e = edges.join(w_tot, "src").persist()
+    e = edges.join(w_tot, "src").localCheckpoint()
     rank = nodes.select("node", F.lit(init).cast("long").alias("score"))
-    inter = []
     for _ in range(iters):
         contrib = (e.join(F.broadcast(rank.withColumnRenamed("node", "src")),
                           "src")
                    .select(F.col("dst").alias("node"),
                            F.expr("(score * w) div w_tot").alias("c")))
         incoming = contrib.groupBy("node").agg(F.sum("c").alias("m"))
-        nxt = (nodes.join(incoming, "node", "left")
-               .select("node",
-                       (F.lit(base)
-                        + F.expr(f"({PR_NUM} * coalesce(m, 0)) div {PR_DEN}")
-                        ).cast("long").alias("score"))).persist()
-        inter.append(nxt)
-        rank = nxt
-    # ONE materializing job fills every per-round cache (each round's
-    # broadcast build executes exactly once), then the intermediates
-    # and the edge relation can be dropped; only the final rank stays
-    # cached for the caller's collect.
-    rank.count()
-    for df in inter[:-1]:
-        df.unpersist()
-    e.unpersist()
+        rank = (nodes.join(incoming, "node", "left")
+                .select("node",
+                        (F.lit(base)
+                         + F.expr(f"({PR_NUM} * coalesce(m, 0)) div {PR_DEN}")
+                         ).cast("long").alias("score"))).localCheckpoint()
     return rank
 
 
@@ -113,34 +115,27 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame,
     Scale plan: level-synchronous frontier expansion — each round is
     ONE equi-join of the (small, shrinking) frontier against the edge
     relation plus a distinct and an anti-join against the visited set;
-    the edge relation is persisted once and reused every round (on a
+    the edge relation is checkpointed once and reused every round (on a
     cluster, pre-partitioned by src so the frontier join is
-    co-located).  Rounds persist their (tiny) frontier and the loop
-    early-stops when a frontier is empty, so lineage stays truncated —
-    the same discipline as pagerank() above and the pointer-jumping CC.
+    co-located).  Each round checkpoints its (tiny) frontier and the
+    loop early-stops when a frontier is empty.  The visited set is the
+    union of the checkpointed levels, so its plan is a flat union of
+    cut leaves — the lineage rule of the module docstring.
     """
-    e = edges.select("src", "dst").distinct().persist()
-    visited = seeds.select(F.col("node"),
-                           F.lit(0).cast("long").alias("hops")).persist()
+    e = edges.select("src", "dst").distinct().localCheckpoint()
+    visited = (seeds.select(F.col("node"), F.lit(0).cast("long").alias("hops"))
+               .localCheckpoint())
     frontier = visited.select("node")
-    interm = [visited]        # every persisted round artifact but the result
     for h in range(1, max_depth + 1):
         nxt = (frontier.join(e, frontier["node"] == e["src"])
                .select(F.col("dst").alias("node")).distinct()
                .join(visited.select("node"), "node", "left_anti")
                .select("node", F.lit(h).cast("long").alias("hops"))
-               .persist())
-        interm.append(nxt)
-        if nxt.limit(1).count() == 0:
+               .localCheckpoint())
+        if nxt.isEmpty():
             break
-        visited = visited.union(nxt).persist()
-        interm.append(visited)
+        visited = visited.union(nxt)
         frontier = nxt.select("node")
-    visited.count()
-    for df in interm:
-        if df is not visited:
-            df.unpersist()
-    e.unpersist()
     return visited
 
 
@@ -158,32 +153,25 @@ def multi_bfs_hops(edges: DataFrame, seeds: DataFrame,
     fans out each edge to at most |seeds| labeled copies (the
     centrality use case keeps |seeds| small and the per-round distinct
     bounds the frontier by |seeds| x |nodes|).  The edge relation is
-    persisted once; rounds persist their (seed, node) frontier and the
-    loop early-stops on an empty frontier, truncating iterative lineage
-    exactly like bfs_hops/pagerank above."""
-    e = edges.select("src", "dst").distinct().persist()
-    visited = seeds.select(F.col("seed"), F.col("seed").alias("node"),
-                           F.lit(0).cast("long").alias("hops")).persist()
+    checkpointed once; each round checkpoints its (seed, node) frontier
+    and the loop early-stops on an empty frontier, exactly like
+    bfs_hops above."""
+    e = edges.select("src", "dst").distinct().localCheckpoint()
+    visited = (seeds.select(F.col("seed"), F.col("seed").alias("node"),
+                            F.lit(0).cast("long").alias("hops"))
+               .localCheckpoint())
     frontier = visited.select("seed", "node")
-    interm = [visited]
     for h in range(1, max_depth + 1):
         nxt = (frontier.join(e, frontier["node"] == e["src"])
                .select("seed", F.col("dst").alias("node")).distinct()
                .join(visited.select("seed", "node"),
                      ["seed", "node"], "left_anti")
                .select("seed", "node", F.lit(h).cast("long").alias("hops"))
-               .persist())
-        interm.append(nxt)
-        if nxt.limit(1).count() == 0:
+               .localCheckpoint())
+        if nxt.isEmpty():
             break
-        visited = visited.union(nxt).persist()
-        interm.append(visited)
+        visited = visited.union(nxt)
         frontier = nxt.select("seed", "node")
-    visited.count()
-    for df in interm:
-        if df is not visited:
-            df.unpersist()
-    e.unpersist()
     return visited
 
 
@@ -265,46 +253,34 @@ def weighted_hops(edges: DataFrame, seeds: DataFrame,
     round) against the edge relation, takes a per-node MIN of the
     candidate labels, and merges with the running best via one
     groupBy-min.  The frontier shrinks as labels converge, the edge
-    relation is persisted once (on a cluster, pre-partitioned by src so
-    the frontier join co-locates), per-round artifacts are persisted
-    and unpersisted so lineage stays truncated, and the loop early-
-    stops on an empty frontier — the same discipline as bfs_hops().
+    relation is checkpointed once (on a cluster, pre-partitioned by src
+    so the frontier join co-locates), each round checkpoints the
+    improved frontier and the running best, and the loop early-stops on
+    an empty frontier — the same discipline as bfs_hops().
     Work per round is O(|frontier| x avg-degree), never |V| x |E|.
     """
     e = (edges.groupBy("src", "dst").agg(F.min("w").alias("w"))
-         .persist())
-    best = seeds.select(F.col("node"),
-                        F.lit(0).cast("long").alias("dist")).persist()
+         .localCheckpoint())
+    best = (seeds.select(F.col("node"), F.lit(0).cast("long").alias("dist"))
+            .localCheckpoint())
     frontier = best
-    interm = [best]
     for _ in range(rounds):
-        # alias both sides: `frontier` descends from `e` after round 1
-        # (improved <- cand <- e), so unqualified refs are ambiguous
-        f = frontier.select(F.col("node").alias("f_node"),
-                            F.col("dist").alias("f_dist"))
-        cand = (f.join(e, F.col("f_node") == F.col("src"))
+        cand = (frontier.join(e, frontier["node"] == e["src"])
                 .select(F.col("dst").alias("node"),
-                        (F.col("f_dist") + F.col("w")).alias("d"))
+                        (F.col("dist") + F.col("w")).alias("d"))
                 .groupBy("node").agg(F.min("d").alias("d")))
         old = best.select(F.col("node"), F.col("dist").alias("old"))
         improved = (cand.join(old, "node", "left")
                     .where(F.col("old").isNull()
                            | (F.col("d") < F.col("old")))
                     .select("node", F.col("d").alias("dist"))
-                    .persist())
-        interm.append(improved)
-        if improved.limit(1).count() == 0:
+                    .localCheckpoint())
+        if improved.isEmpty():
             break
         best = (best.union(improved)
                 .groupBy("node").agg(F.min("dist").alias("dist"))
-                .persist())
-        interm.append(best)
+                .localCheckpoint())
         frontier = improved
-    best.count()
-    for df in interm:
-        if df is not best:
-            df.unpersist()
-    e.unpersist()
     return best
 
 
@@ -430,10 +406,8 @@ def ppr(edges: DataFrame, seeds: DataFrame,
     """
     base = (PR_DEN - PR_NUM) * init // PR_DEN
     w_tot = edges.groupBy("src").agg(F.sum("w").alias("w_tot"))
-    e = edges.join(w_tot, "src").persist()
-    seeds = seeds.persist()
+    e = edges.join(w_tot, "src").localCheckpoint()
     rank = seeds.select("node", F.lit(init).cast("long").alias("score"))
-    inter = []
     for _ in range(iters):
         contrib = (e.join(F.broadcast(rank.withColumnRenamed("node", "src")),
                           "src")
@@ -442,19 +416,13 @@ def ppr(edges: DataFrame, seeds: DataFrame,
         incoming = contrib.groupBy("node").agg(F.sum("c").alias("m"))
         # sparse union of (teleport at seeds) + (damped incoming): a
         # FULL OUTER join of two small relations, never the node universe
-        nxt = (incoming.join(seeds.withColumn("is_seed", F.lit(1)),
-                             "node", "full_outer")
-               .select("node",
-                       (F.when(F.col("is_seed").isNotNull(), F.lit(base))
-                        .otherwise(F.lit(0))
-                        + F.expr(f"({PR_NUM} * coalesce(m, 0)) div {PR_DEN}")
-                        ).cast("long").alias("score"))).persist()
-        inter.append(nxt)
-        rank = nxt
-    rank.count()
-    for df in inter[:-1]:
-        df.unpersist()
-    e.unpersist()
+        rank = (incoming.join(seeds.withColumn("is_seed", F.lit(1)),
+                              "node", "full_outer")
+                .select("node",
+                        (F.when(F.col("is_seed").isNotNull(), F.lit(base))
+                         .otherwise(F.lit(0))
+                         + F.expr(f"({PR_NUM} * coalesce(m, 0)) div {PR_DEN}")
+                         ).cast("long").alias("score"))).localCheckpoint()
     return rank
 
 

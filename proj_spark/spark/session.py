@@ -27,7 +27,7 @@ def get_spark(app: str = "proj_spark", master: str | None = None,
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_root not in pp.split(":"):
         os.environ["PYTHONPATH"] = f"{pkg_root}:{pp}" if pp else pkg_root
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", _default_cpus()))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus, 8)
     b = (
@@ -39,8 +39,8 @@ def get_spark(app: str = "proj_spark", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # local-mode executor sizing: the driver JVM hosts all 32 task
-        # threads, so an 8g heap GC-thrashes once a long suite accumulates
+        # local-mode executor sizing: the driver JVM hosts every task
+        # thread, so an 8g heap GC-thrashes once a long suite accumulates
         # codegen classes + broadcasts (measured: 39-query steady pass
         # 138 s at 8g vs 111 s at 24g, knn_join 23 s -> 10 s).  On a real
         # cluster this is executor memory, sized per-executor as usual.
@@ -50,6 +50,12 @@ def get_spark(app: str = "proj_spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
     )
     return b.getOrCreate()
+
+
+def _default_cpus() -> int:
+    """The CPUs this process may run on: its affinity mask, which a
+    cpuset or `taskset` can make smaller than the host's CPU count."""
+    return len(os.sched_getaffinity(0))
 
 
 def _default_driver_mem() -> str:

@@ -9,7 +9,7 @@ a window, and returns only k x |Q| rows — which the driver can hold.
 The round loop is coordinated on the driver, but all per-row work stays
 distributed: ring cells are generated with native ``sequence``/
 ``explode`` expressions (no Python cell loops), each round's top-k rows
-are persisted DataFrames (never collected), and the only driver
+are localCheckpoint'ed DataFrames (never collected), and the only driver
 materializations are the query coordinates (once, |Q| rows) and a
 per-round (query_id, count, k-th distance) stats aggregate used to
 decide completion.  Deciding "done" in Python avoids the anti-join
@@ -170,11 +170,12 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
     stragglers (empty oceans) fall back to a brute-force pass.
 
     Distributed-loop contract: result rows are NEVER collected to the
-    driver — each round's top-k is a persisted DataFrame, completed
-    queries are split off with a broadcast semi-join, and the returned
-    DataFrame is the union of the persisted parts.  The only collects
-    are the |Q| query coordinates (once) and a |pending|-row stats
-    aggregate per round.
+    driver — each round's top-k is localCheckpoint'ed (graph.py's
+    lineage rule), completed queries are split off with a broadcast
+    semi-join, and the returned DataFrame is the union of those
+    splits plus the lazy brute-force part.  The only collects are the
+    |Q| query coordinates (once) and a |pending|-row stats aggregate
+    per round.
     """
     spark = data.sparkSession
     d = data.select(
@@ -242,7 +243,8 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
                     F.least(F.col("_qy") + rl, nl))))
                 .withColumn("_cell", cells.pack_cell(z, F.col("_x"), F.col("_y"))))
         joined = F.broadcast(cand).join(d, F.col("_cell") == F.col("_dcell"), "inner")
-        topk = topk_of(joined).persist()
+        # lazy: the stats collect below is the job that fills it
+        topk = topk_of(joined).localCheckpoint(eager=False)
         stats = {r[0]: (r[1], r[2]) for r in
                  topk.groupBy(query_id)
                      .agg(F.count("*").alias("cnt"), F.max("dist_m").alias("kth"))
@@ -259,20 +261,15 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
             else:
                 still.append((qid, qlon, qlat))
         if done_ids:
-            done = topk.join(
+            parts.append(topk.join(
                 F.broadcast(spark.createDataFrame(done_ids, id_schema)),
-                query_id, "semi").persist()
-            done.count()  # materialize before the round's topk is unpersisted
-            parts.append(done)
-        topk.unpersist()
+                query_id, "semi"))
         remaining = still
         ring *= 2
     if remaining:
         # brute force the stragglers: tiny query side x full data scan
         rem_df = F.broadcast(spark.createDataFrame(remaining, q_schema))
-        brute = topk_of(rem_df.crossJoin(d)).persist()
-        brute.count()
-        parts.append(brute)
+        parts.append(topk_of(rem_df.crossJoin(d)))
 
     out_schema = StructType([
         StructField(query_id, qid_field.dataType),

@@ -262,24 +262,18 @@ def band_bucket_expr(sig_col: str, band: int, rows_per_band: int) -> Column:
 
 def banded_signatures(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 64,
-                      bands: int = 16, shingle: int = 5,
-                      bucket: str = "m31") -> DataFrame:
+                      bands: int = 16, shingle: int = 5) -> DataFrame:
     """(id, band, bucket) rows: one per document per LSH band — the
     relation both the batch candidate join and the streaming registry
-    key on."""
+    key on.  Buckets are band_bucket_expr's oracle-reproducible
+    arithmetic."""
     rows_per_band = num_hashes // bands
     mh = minhash_udf(num_hashes, shingle)
     sig = docs.select(F.col(id_col), mh(F.col(text_col)).alias("sig"))
-    if bucket == "m31":
-        buckets = [F.struct(F.lit(bi).alias("band"),
-                            band_bucket_expr("sig", bi, rows_per_band)
-                            .alias("bucket"))
-                   for bi in range(bands)]
-    else:
-        buckets = [F.struct(
-            F.lit(bi).alias("band"),
-            F.hash(F.slice("sig", bi * rows_per_band + 1, rows_per_band))
-            .alias("bucket")) for bi in range(bands)]
+    buckets = [F.struct(F.lit(bi).alias("band"),
+                        band_bucket_expr("sig", bi, rows_per_band)
+                        .alias("bucket"))
+               for bi in range(bands)]
     return sig.select(
         F.col(id_col),
         F.explode(F.array(*buckets)).alias("bb"),
@@ -288,15 +282,10 @@ def banded_signatures(docs: DataFrame, text_col: str = "text",
 
 def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 64,
-                           bands: int = 16, shingle: int = 5,
-                           bucket: str = "m31") -> DataFrame:
-    """Candidate near-dup pairs via banded minhash (id_a < id_b).
-
-    bucket="m31" (default) uses the oracle-reproducible arithmetic
-    banding; bucket="spark_hash" keeps the engine-internal F.hash over
-    the band slice (slightly cheaper, not SQL-portable)."""
+                           bands: int = 16, shingle: int = 5) -> DataFrame:
+    """Candidate near-dup pairs via banded minhash (id_a < id_b)."""
     banded = banded_signatures(docs, text_col, id_col, num_hashes, bands,
-                               shingle, bucket)
+                               shingle)
     # the band join broadcasts one side, so pair generation + the partial
     # distinct run in the PROBE side's partitioning — repartition it, or a
     # single-file source serializes the whole O(sum bucket^2) pair blowup

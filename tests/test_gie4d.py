@@ -1,5 +1,5 @@
 """3D/4D gie corpora: axisswap.gie, unitconvert.gie, ellipsoid.gie,
-GDA.gie (vendored by tools/vendor_gie4d.py).
+GDA.gie (vendored into tests/gie4d_vendored.json; FIXTURES.md §6).
 
 Covers the axis-permutation, unit-conversion (linear + vertical + time),
 ellipsoid-resolution and Helmert (GDA) operations at the reference's own

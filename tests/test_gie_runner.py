@@ -75,21 +75,36 @@ def test_geod_cli_direct_inverse_consistency(capsys, monkeypatch):
     assert abs(back - azi2) < 1e-5
 
 
-def test_dhdn_synthesized_grid_runs_all_vectors():
-    """require_grid synthesis (round-3): DHDN_ETRS89.gie's blocks are
-    BETA2007.gsb-gated and ran 0/0 without the grid file.  Synthesizing
-    an NTv2 grid from the file's own vectors (each DHDN point sits on
-    the 1-arc-minute lattice, so every vector pins one node) exercises
-    the full hgridshift path — NTv2 parse, bilinear lookup, inverse
-    iteration, datum=potsdam expansion — and every vector passes."""
+def test_dhdn_synthesized_grid_runs_all_vectors(tmp_path):
+    """require_grid synthesis: a BETA2007.gsb-gated DHDN block runs 0/0
+    without the grid file.  Synthesizing an NTv2 grid from the block's
+    own vectors (each DHDN point sits on the 1-arc-minute lattice, so
+    every vector pins one node) exercises the hgridshift path — NTv2
+    parse, bilinear lookup, datum=potsdam expansion — and every vector
+    passes.  The block holds the grid-derived DHDN_ETRS89.gie vectors
+    inlined in test_planner.py, DHDN -> ETRS89 (gie's inverse
+    direction).  The other direction is left out: the synthetic grid is
+    zero between the pinned nodes, so nad_cvt's inverse iteration
+    contracts by only ~0.17 per step there and, like the reference's,
+    gives up after 10 iterations on about half of the points."""
+    from test_planner import DHDN_VECTORS
+
     from proj_spark.gie import run_gie, synthesize_require_grids
     from proj_spark.operations.datum import GRID_REGISTRY
-    path = os.path.join(GIE_DIR, "DHDN_ETRS89.gie")
-    made = synthesize_require_grids(path)
+    lines = ["<gie>", "operation proj=latlong datum=potsdam",
+             "tolerance 1 mm", "require_grid BETA2007.gsb",
+             "direction inverse"]
+    for dlon, dlat, elon, elat in DHDN_VECTORS:
+        lines += [f"accept {dlon:.12f} {dlat:.12f}",
+                  f"expect {elon:.12f} {elat:.12f}"]
+    path = tmp_path / "dhdn.gie"
+    path.write_text("\n".join(lines + ["</gie>"]) + "\n")
+    assert run_gie(str(path))[0] == 0       # gated off without the grid
+    made = synthesize_require_grids(str(path))
     try:
-        assert made.get("BETA2007.gsb", 0) >= 30
-        total, failed, messages = run_gie(path)
+        assert made.get("BETA2007.gsb", 0) == len(DHDN_VECTORS)
+        total, failed, messages = run_gie(str(path))
         assert failed == 0, messages[:5]
-        assert total == 64
+        assert total == len(DHDN_VECTORS)
     finally:
         GRID_REGISTRY.pop("BETA2007.gsb", None)

@@ -1,7 +1,7 @@
 """Run every vendored gie golden vector against the implemented registry.
 
 Vector corpus: tests/gie_vendored.json, extracted verbatim from the
-reference's test/gie/builtins.gie (PROJ 6.3.0) by tools/vendor_gie.py.
+reference's test/gie/builtins.gie (PROJ 6.3.0); FIXTURES.md §6.
 Tolerance semantics follow src/apps/gie.cpp:502-515: per-axis compare,
 projected axes in meters; angular axes converted at ~111319.49 m/deg.
 

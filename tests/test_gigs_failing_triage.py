@@ -3,7 +3,7 @@
 
 The reference ships 13 GIGS files it KEEPS failing (excluded from its
 own make-check).  One (5101.4-jhs) fully passes the engine and is
-PROMOTED into the vendored suite (tools/vendor_gigs.py).  The other 12
+PROMOTED into the vendored suite (FIXTURES.md §6).  The other 12
 fail for structural reasons the reference shares (grads-as-degrees
 +init coordinates, projection-only +init pipelines, absent NADCON/NTv2
 grids, variant-convention disagreements) — parity-neutral.
@@ -50,8 +50,8 @@ def test_gigs_failing_triage(fname):
     assert (total - failed, total) == (want_pass, want_total), (
         f"{fname}: engine now passes {total - failed}/{total} "
         f"(pinned {want_pass}/{want_total}) — re-triage this file "
-        f"(COVERAGE.md) and, if it fully passes, promote it via "
-        f"tools/vendor_gigs.py PROMOTED_FAILING")
+        f"(COVERAGE.md) and, if it fully passes, promote it into "
+        f"tests/gigs_vendored.json (FIXTURES.md §6)")
 
 
 def test_gigs_promoted_file_stays_green():

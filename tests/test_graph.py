@@ -141,3 +141,32 @@ def test_betweenness_bounded_rejects_depth_lt_2(spark):
     s = spark.createDataFrame([(1,)], "s long")
     with _pytest.raises(ValueError, match="depth >= 2"):
         betweenness_bounded(e, s, depth=1)
+
+
+def test_iterative_operators_leave_the_cache_empty(spark):
+    """Each loop cuts its lineage with localCheckpoint, which the
+    session's cache manager never sees: once an operator's result is
+    collected, nothing is left registered for the caller to clear."""
+    from proj_spark.graph import bfs_hops, multi_bfs_hops, ppr, weighted_hops
+    from proj_spark.spatial.knn import knn_join
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    edges = _edges(spark, [(0, 1, 2), (1, 2, 1), (2, 0, 3), (2, 3, 1)])
+    seeds = spark.createDataFrame([(0,)], "node long")
+    pts = spark.createDataFrame(
+        [(i, 0.01 * i, 0.02 * i) for i in range(20)],
+        "id long, lon double, lat double")
+    queries = spark.createDataFrame(
+        [(1, 0.05, 0.1)], "query_id long, lon double, lat double")
+    runs = {
+        "pagerank": lambda: pagerank(edges, _nodes(spark, 4)),
+        "ppr": lambda: ppr(edges, seeds),
+        "bfs_hops": lambda: bfs_hops(edges, seeds),
+        "multi_bfs_hops": lambda: multi_bfs_hops(
+            edges, seeds.withColumnRenamed("node", "seed")),
+        "weighted_hops": lambda: weighted_hops(edges, seeds),
+        "knn_join": lambda: knn_join(queries, pts, k=3, data_id="id"),
+    }
+    for name, run in runs.items():
+        assert run().collect(), name
+        assert cache.isEmpty(), name

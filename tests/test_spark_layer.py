@@ -644,3 +644,12 @@ def test_half_pairs_matches_nested_loop(spark):
                   if max(abs(g[2] - g[4]), abs(g[3] - g[5])) <= W}
     assert got_within == within
     assert {(1, 2), (3, 4), (5, 6), (7, 8), (8, 9), (7, 10)} <= within
+
+
+def test_default_cpus_follow_the_affinity_mask(monkeypatch):
+    """get_spark's local[N] default is the CPUs this process may use,
+    not a fixed count: a 3-CPU affinity mask gives 3."""
+    from proj_spark.spark import session
+    monkeypatch.setattr(session.os, "sched_getaffinity",
+                        lambda pid: {0, 2, 5})
+    assert session._default_cpus() == 3
