@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 
 from proj_spark import temporal
 from proj_spark.pages import CITY_CENTERS, extract_geotags, pages_table
+from proj_spark.spark.udf import kernel_udf
 from proj_spark.spatial import cells
 from proj_spark.spatial.knn import (EARTH_R, haversine_expr, haversine_sql,
                                     knn_join, knn_self_join, radius_join)
@@ -939,11 +940,15 @@ pts AS (
   SELECT url, lon, lat,
          CAST(FLOOR(lat / {dlat}) AS BIGINT) AS k
   FROM pages
+),
+nbr AS (
+  -- the neighbor band is a plain column so pts joins it by hash
+  SELECT url, lon, lat, k + d AS nk
+  FROM pts CROSS JOIN (VALUES (-1), (0), (1)) ds(d)
 )
 SELECT a.url AS id_a, b.url AS id_b, ROUND({dist}, 3) AS dist_m
-FROM pts a
-CROSS JOIN (VALUES (-1), (0), (1)) ds(d)
-JOIN pts b ON b.k = a.k + ds.d AND a.url < b.url
+FROM nbr a
+JOIN pts b ON b.k = a.nk AND a.url < b.url
 WHERE {dist} <= {RADIUS_M!r}"""
 
 
@@ -2000,8 +2005,18 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes ~half of J~0.45 pairs) is pruned before any array ships.
     The (num_hashes, rows_per_band) pair is the density-matched
     mh_params knob: hot-shingle corpora saturate 4-hash band keys
-    quadratically at scale (see mh_params for the measurements)."""
-    from proj_spark.text.dedup import band_bucket_expr, minhash_sig_set_udf
+    quadratically at scale (see mh_params for the measurements).
+
+    Recall contract: a pair of Jaccard similarity J becomes a candidate
+    with probability 1 - (1 - J^r)^b (r rows per band, b bands).  With
+    64 hashes in 16 bands of 4 (<= 20k docs) that is >= 0.99 for
+    J >= 0.71 and 0.64 at the 0.5 verify threshold; with 128 hashes in
+    16 bands of 8 (above 20k docs) it is >= 0.99 for J >= 0.85 and 0.06
+    at J = 0.5.  Every returned pair is exact, but neither setting is
+    exhaustive at the threshold: about a third of the J = 0.5 pairs are
+    missed at <= 20k docs, and most of them above 20k."""
+    from proj_spark.text.dedup import (band_bucket_expr, minhash_sig_set_udf,
+                                       set_jaccard)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     num_hashes, rows_per_band = mh_params(_n_docs(sf_dir))
     n_bands = num_hashes // rows_per_band
@@ -2036,12 +2051,8 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand.count()
     sa = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = (F.when(union > F.lit(0), inter.cast("double") / union.cast("double"))
-           .otherwise(F.lit(1.0)))
     verified = (cand.join(sa, "id_a").join(sb, "id_b")
-                .withColumn("jaccard", F.round(jac, 6))
+                .withColumn("jaccard", F.round(set_jaccard("sh_a", "sh_b"), 6))
                 .where(F.col("jaccard") >= 0.5)
                 .select(F.col("id_a").cast("long"), F.col("id_b").cast("long"),
                         "jaccard"))
@@ -2344,33 +2355,20 @@ def q_crs_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operation actually used, making the dispatch itself part of the
     checked result."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
     from proj_spark.planner import crs_to_crs
 
     t = crs_to_crs("EPSG:4230", "EPSG:4258")
-    names = [c.name for c in t.candidates]
+    names = np.array([c.name for c in t.candidates], dtype=object)
     fallback = t._fallback_index()
-    schema = StructType([
-        StructField("lon_etrs", DoubleType()),
-        StructField("lat_etrs", DoubleType()),
-        StructField("op", StringType()),
-    ])
 
-    def _f(lon, lat):
-        x = np.radians(lon.to_numpy(np.float64))
-        y = np.radians(lat.to_numpy(np.float64))
+    def dispatch(lon, lat):
+        x, y = np.radians(lon), np.radians(lat)
         ch = t._dispatch(x, y, False)
         ch = np.where(ch < 0, fallback, ch)
         ox, oy, _ = t.fwd3d(x, y)
-        return pd.DataFrame({
-            "lon_etrs": np.degrees(ox),
-            "lat_etrs": np.degrees(oy),
-            "op": np.array(names, dtype=object)[ch],
-        })
+        return np.degrees(ox), np.degrees(oy), names[ch]
 
-    udf = pandas_udf(_f, schema)
+    udf = kernel_udf(dispatch, "lon_etrs double, lat_etrs double, op string")
     pts = _points(spark, sf_dir)
     return (pts.select("url", udf(F.col("lon"), F.col("lat")).alias("o"))
             .select("url",
@@ -2511,9 +2509,6 @@ def q_gridshift_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
     from proj_spark import grids as G
     from proj_spark.operations.datum import GRID_REGISTRY, HGridShift
 
@@ -2529,16 +2524,11 @@ def q_gridshift_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     op = HGridShift({"grids": name, "ellps": "GRS80"})
     GRID_REGISTRY.pop(name, None)   # op holds the loaded GridSet
 
-    schema = StructType([StructField("lon_s", DoubleType()),
-                         StructField("lat_s", DoubleType())])
+    def shift(lon, lat):
+        lam, phi, _ = op.fwd3d(np.radians(lon), np.radians(lat), None)
+        return np.degrees(lam), np.degrees(phi)
 
-    def _f(lon, lat):
-        lam, phi, _ = op.fwd3d(np.radians(lon.to_numpy(np.float64)),
-                               np.radians(lat.to_numpy(np.float64)), None)
-        return pd.DataFrame({"lon_s": np.degrees(lam),
-                             "lat_s": np.degrees(phi)})
-
-    udf = pandas_udf(_f, schema)
+    udf = kernel_udf(shift, "lon_s double, lat_s double")
     pts = _points(spark, sf_dir).where(
         (F.col("lon") > GSB_W + 0.01) & (F.col("lon") < GSB_E - 0.01)
         & (F.col("lat") > GSB_S + 0.01) & (F.col("lat") < GSB_N - 0.01))
@@ -3036,15 +3026,19 @@ pts AS (
          {cells.tile_y_sql('lat', z)} AS cy
   FROM pages
 ),
-nn AS (
-  SELECT a.url, MIN({dist}) AS nn_m
-  FROM pts a
+ring AS (
+  -- the clamped ring cells are plain columns so pts joins them by hash
+  SELECT url, lon, lat,
+         LEAST(GREATEST(cx + dx, 0), {nmax}) AS rx,
+         LEAST(GREATEST(cy + dy, 0), {nmax}) AS ry
+  FROM pts
   CROSS JOIN (VALUES (-1), (0), (1)) dxs(dx)
   CROSS JOIN (VALUES (-1), (0), (1)) dys(dy)
-  JOIN pts b
-    ON b.cx = LEAST(GREATEST(a.cx + dx, 0), {nmax})
-   AND b.cy = LEAST(GREATEST(a.cy + dy, 0), {nmax})
-   AND b.url <> a.url
+),
+nn AS (
+  SELECT a.url, MIN({dist}) AS nn_m
+  FROM ring a
+  JOIN pts b ON b.cx = a.rx AND b.cy = a.ry AND b.url <> a.url
   GROUP BY 1
 ),
 q AS (SELECT CAST(ROUND(nn_m * 1000, 0) AS BIGINT) AS mm FROM nn),
@@ -14672,25 +14666,20 @@ def q_itrf_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: map-side UDF (per-distinct-epoch matmul inside the kernel)
     + one aggregation shuffle."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from proj_spark import create
 
     cart = create("+proj=cart +ellps=GRS80")
     hel = _itrf_helmert()
 
-    @pandas_udf(StructType([StructField("lat2", DoubleType()),
-                            StructField("lon2", DoubleType())]))
-    def _drift(lon, lat, t):
-        lam = np.radians(lon.to_numpy(dtype=np.float64))
-        phi = np.radians(lat.to_numpy(dtype=np.float64))
+    def drift(lon, lat, t):
+        lam, phi = np.radians(lon), np.radians(lat)
         X, Y, Z = cart.fwd3d(lam, phi, np.zeros_like(lam))
-        X2, Y2, Z2 = hel.fwd(X, Y, Z, t.to_numpy(dtype=np.float64))
+        X2, Y2, Z2 = hel.fwd(X, Y, Z, t)
         lam2, phi2, _ = cart.inv3d(X2, Y2, Z2)
-        return pd.DataFrame({"lat2": np.degrees(phi2),
-                             "lon2": np.degrees(lam2)})
+        return np.degrees(phi2), np.degrees(lam2)
+
+    _drift = kernel_udf(drift, "lat2 double, lon2 double")
 
     pts = _points(spark, sf_dir)
     pid = F.regexp_extract("url", r"page/(\d+)$", 1).cast("long")
@@ -14823,9 +14812,6 @@ def q_geoid_heights(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid rides the closure (a few MB) and the bbox filter prunes at
     the scan."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
 
     from proj_spark import create
 
@@ -14833,12 +14819,10 @@ def q_geoid_heights(spark: SparkSession, sf_dir: str) -> DataFrame:
     op = create(f"+proj=vgridshift +grids={GEOID_GRID} +ellps=GRS80")
     w, s, e_, n_ = GEOID_BBOX
 
-    @pandas_udf(DoubleType())
-    def _ortho(lon, lat, z):
-        lam = np.radians(lon.to_numpy(dtype=np.float64))
-        phi = np.radians(lat.to_numpy(dtype=np.float64))
-        _, _, hh = op.fwd3d(lam, phi, z.to_numpy(dtype=np.float64))
-        return pd.Series(hh)
+    def ortho(lon, lat, z):
+        return op.fwd3d(np.radians(lon), np.radians(lat), z)[2]
+
+    _ortho = kernel_udf(ortho, "double")
 
     pts = _points(spark, sf_dir).where(
         (F.col("lon") > w + 0.01) & (F.col("lon") < e_ - 0.01)

@@ -1,10 +1,12 @@
 """pandas-UDF wrappers around the NumPy coordinate kernels.
 
-One compiled Operation (plan-time constants only: floats + small ndarrays)
-is closed over by a scalar pandas UDF; Spark serializes the closure to
-executors once per task. Each Arrow batch (~64k rows) is transformed by a
-single NumPy call — no per-row Python, mirroring the columnar contract of
-the reference's proj_trans_generic (src/4D_api.cpp:353-460).
+Every coordinate kernel crosses the JVM/Python boundary through one
+factory, `kernel_udf`: a scalar pandas UDF that closes over the compiled
+Operation (plan-time constants only: floats + small ndarrays), which
+Spark serializes to executors once per task. Each Arrow batch (~64k
+rows) is transformed by a single NumPy call — no per-row Python,
+mirroring the columnar contract of the reference's proj_trans_generic
+(src/4D_api.cpp:353-460).
 """
 
 from __future__ import annotations
@@ -13,29 +15,35 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StructField, StructType
-
-XY_SCHEMA = StructType([
-    StructField("x", DoubleType()),
-    StructField("y", DoubleType()),
-])
-
-LONLAT_SCHEMA = StructType([
-    StructField("lon", DoubleType()),
-    StructField("lat", DoubleType()),
-])
 
 
-def fwd_udf(op) -> "pandas_udf":
+def kernel_udf(fn, schema: str):
+    """Scalar pandas UDF running the NumPy kernel `fn` once per Arrow
+    batch.  `fn` receives each input column as a float64 ndarray; a
+    tuple it returns fills the fields of the struct DDL `schema`
+    (e.g. "x double, y double") in order, a single array fills a
+    scalar `schema` such as "double".  Spark parses the DDL when the UDF
+    is made, so a SparkSession must be active."""
+    from pyspark.sql.pandas.functions import pandas_udf
+
+    def _f(*cols):
+        out = fn(*(c.to_numpy(np.float64) for c in cols))
+        if isinstance(out, tuple):
+            # integer column labels assign the struct fields by position
+            return pd.DataFrame(dict(enumerate(out)))
+        return pd.Series(out)
+
+    return pandas_udf(_f, schema)
+
+
+def fwd_udf(op):
     """(lon_deg, lat_deg) -> struct(x, y) meters, via op.fwd_deg."""
 
-    @pandas_udf(XY_SCHEMA)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = op.fwd_deg(lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64))
-        return pd.DataFrame({"x": x, "y": y})
+    def fwd(lon, lat):
+        x, y = op.fwd_deg(lon, lat)
+        return x, y
 
-    return _f
+    return kernel_udf(fwd, "x double, y double")
 
 
 def project(df: DataFrame, projstring: str, lon_col: str = "lon", lat_col: str = "lat",
@@ -47,62 +55,37 @@ def project(df: DataFrame, projstring: str, lon_col: str = "lon", lat_col: str =
     """
     from proj_spark import create
 
-    if projstring.strip().startswith("+proj=webmerc"):
-        op = create(projstring)
-        a = op.a
-        lam = F.radians(F.col(lon_col))
-        phi = F.radians(F.col(lat_col))
-        return df.withColumn(out_x, a * lam).withColumn(
-            out_y, a * F.log(F.tan(F.lit(np.pi / 4) + phi / 2)))
     op = create(projstring)
-    u = fwd_udf(op)
+    if projstring.strip().startswith("+proj=webmerc"):
+        return df.withColumn(out_x, webmerc_x(F.col(lon_col), op.a)).withColumn(
+            out_y, webmerc_y(F.col(lat_col), op.a))
     tmp = "_prj"
-    out = df.withColumn(tmp, u(F.col(lon_col), F.col(lat_col)))
+    out = df.withColumn(tmp, fwd_udf(op)(F.col(lon_col), F.col(lat_col)))
     return (out.withColumn(out_x, F.col(f"{tmp}.x"))
                .withColumn(out_y, F.col(f"{tmp}.y"))
                .drop(tmp))
 
 
-def utm_fwd_udf(ellps: str = "GRS80", south: bool = False) -> "pandas_udf":
-    """(lon_deg, lat_deg) -> struct(zone int, x, y): auto-zoned UTM.
+def utm_fwd_udf():
+    """(lon_deg, lat_deg) -> struct(zone int, x, y): auto-zoned UTM on
+    GRS80.
 
-    One UDF handles every zone: per Arrow batch, rows are grouped by zone
-    (np.unique — at most 60 groups) and each group runs the exact etmerc
-    kernel for its zone.  This keeps the whole-table projection a single
-    map-side pass — no per-zone filtering, no repartition — which is the
-    shape that scales: zone mix within a batch costs one extra indexed
-    gather, while 60 filtered passes would scan the table 60 times.
+    One UDF handles every zone: per Arrow batch, UTMBatch runs the exact
+    etmerc kernel with a per-row zone.  This keeps the whole-table
+    projection a single map-side pass — no per-zone filtering, no
+    repartition — which is the shape that scales: 60 filtered passes
+    would scan the table 60 times.
     Zone logic mirrors src/projections/tmerc.cpp:541-589.
     """
-    from pyspark.sql.types import IntegerType
+    from proj_spark.operations.tmerc import UTMBatch
 
-    schema = StructType([
-        StructField("zone", IntegerType()),
-        StructField("x", DoubleType()),
-        StructField("y", DoubleType()),
-    ])
-    suffix = " +south" if south else ""
+    op = UTMBatch({"ellps": "GRS80"})
 
-    @pandas_udf(schema)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        from proj_spark.operations.tmerc import UTMBatch
+    def utm(lon, lat):
+        zone, x, y = op.fwd_deg(lon, lat)
+        return zone.astype(np.int32), x, y
 
-        key = (ellps, south)
-        op = _UTM_OP_CACHE.get(key)
-        if op is None:
-            params = {"ellps": ellps}
-            if south:
-                params["south"] = True
-            op = _UTM_OP_CACHE[key] = UTMBatch(params)
-        zone, x, y = op.fwd_deg(lon.to_numpy(dtype=np.float64),
-                                lat.to_numpy(dtype=np.float64))
-        return pd.DataFrame({"zone": zone.astype(np.int32), "x": x, "y": y})
-
-    return _f
-
-
-# per-executor-worker UTM kernel cache (setup amortized across batches)
-_UTM_OP_CACHE: dict = {}
+    return kernel_udf(utm, "zone int, x double, y double")
 
 
 def webmerc_x(lon: Column, a: float = 6378137.0) -> Column:
@@ -113,7 +96,7 @@ def webmerc_y(lat: Column, a: float = 6378137.0) -> Column:
     return F.lit(a) * F.log(F.tan(F.lit(np.pi / 4) + F.radians(lat) / 2))
 
 
-def datum_pipeline_udf(cart, helmert) -> "pandas_udf":
+def datum_pipeline_udf(cart, helmert):
     """(lon_deg, lat_deg) -> struct(lon, lat) after the canonical
     cart -> helmert -> cart^-1 datum pipeline, FUSED into one Arrow pass.
 
@@ -122,19 +105,17 @@ def datum_pipeline_udf(cart, helmert) -> "pandas_udf":
     JVM->Python transfer for the whole chain instead of three.
     """
 
-    @pandas_udf(LONLAT_SCHEMA)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        lam = np.radians(lon.to_numpy(dtype=np.float64))
-        phi = np.radians(lat.to_numpy(dtype=np.float64))
+    def datum(lon, lat):
+        lam, phi = np.radians(lon), np.radians(lat)
         x, y, z = cart.fwd3d(lam, phi, np.zeros_like(lam))
         x, y, z = helmert.fwd(x, y, z)
         lam2, phi2, _ = cart.inv3d(x, y, z)
-        return pd.DataFrame({"lon": np.degrees(lam2), "lat": np.degrees(phi2)})
+        return np.degrees(lam2), np.degrees(phi2)
 
-    return _f
+    return kernel_udf(datum, "lon double, lat double")
 
 
-def factors_udf(op) -> "pandas_udf":
+def factors_udf(op):
     """(lon_deg, lat_deg) -> struct(h, k, conv, s): proj_factors
     (src/factors.cpp:15-106) as one vectorized Arrow pass — meridional
     scale h, parallel scale k, meridian convergence (rad) and areal
@@ -142,25 +123,14 @@ def factors_udf(op) -> "pandas_udf":
     projection kernel."""
     from proj_spark.operations.factors import factors
 
-    schema = StructType([
-        StructField("h", DoubleType()),
-        StructField("k", DoubleType()),
-        StructField("conv", DoubleType()),
-        StructField("s", DoubleType()),
-    ])
+    def fac(lon, lat):
+        f = factors(op, np.radians(lon), np.radians(lat))
+        return f["h"], f["k"], f["conv"], f["s"]
 
-    @pandas_udf(schema)
-    def _f(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        fac = factors(op,
-                      np.radians(lon.to_numpy(dtype=np.float64)),
-                      np.radians(lat.to_numpy(dtype=np.float64)))
-        return pd.DataFrame({"h": fac["h"], "k": fac["k"],
-                             "conv": fac["conv"], "s": fac["s"]})
-
-    return _f
+    return kernel_udf(fac, "h double, k double, conv double, s double")
 
 
-def geod_inverse_udf(a: float, f: float) -> "pandas_udf":
+def geod_inverse_udf(a: float, f: float):
     """(lat1, lon1, lat2, lon2 degrees) -> struct(s12 m, azi1, azi2 deg):
     the geodesic inverse problem (geod_inverse, src/geodesic.c) batch-
     solved by the vectorized Karney kernel.  Azimuths are normalized to
@@ -168,31 +138,19 @@ def geod_inverse_udf(a: float, f: float) -> "pandas_udf":
     `+ 0.0` collapses IEEE -0.0 so downstream hashing is stable)."""
     from proj_spark.operations.karney import Geodesic
 
-    schema = StructType([
-        StructField("s12", DoubleType()),
-        StructField("azi1", DoubleType()),
-        StructField("azi2", DoubleType()),
-    ])
     g = Geodesic(a, f)
 
-    @pandas_udf(schema)
-    def _f(lat1: pd.Series, lon1: pd.Series,
-           lat2: pd.Series, lon2: pd.Series) -> pd.DataFrame:
-        s12, azi1, azi2 = g.inverse(
-            np.radians(lat1.to_numpy(dtype=np.float64)),
-            np.radians(lon1.to_numpy(dtype=np.float64)),
-            np.radians(lat2.to_numpy(dtype=np.float64)),
-            np.radians(lon2.to_numpy(dtype=np.float64)))
-        a1 = np.degrees(azi1)
-        a2 = np.degrees(azi2)
-        a1 = np.where(a1 < 0.0, a1 + 360.0, a1 + 0.0)
-        a2 = np.where(a2 < 0.0, a2 + 360.0, a2 + 0.0)
-        return pd.DataFrame({"s12": s12, "azi1": a1, "azi2": a2})
+    def inverse(lat1, lon1, lat2, lon2):
+        s12, azi1, azi2 = g.inverse(np.radians(lat1), np.radians(lon1),
+                                    np.radians(lat2), np.radians(lon2))
+        a1, a2 = np.degrees(azi1), np.degrees(azi2)
+        return (s12, np.where(a1 < 0.0, a1 + 360.0, a1 + 0.0),
+                np.where(a2 < 0.0, a2 + 360.0, a2 + 0.0))
 
-    return _f
+    return kernel_udf(inverse, "s12 double, azi1 double, azi2 double")
 
 
-def geod_edge_area_udf(a: float, f: float) -> "pandas_udf":
+def geod_edge_area_udf(a: float, f: float):
     """(lat1, lon1, lat2, lon2 degrees) -> struct(s12 m, area12 m^2): one
     geodesic polygon EDGE's length and signed area term, the per-edge
     accumulation of the reference's geod_polygonarea
@@ -202,24 +160,15 @@ def geod_edge_area_udf(a: float, f: float) -> "pandas_udf":
     kernel stays a flat per-edge batch and the reduction distributes."""
     from proj_spark.operations.karney import Geodesic
 
-    schema = StructType([
-        StructField("s12", DoubleType()),
-        StructField("area12", DoubleType()),
-    ])
     g = Geodesic(a, f)
 
-    @pandas_udf(schema)
-    def _f(lat1: pd.Series, lon1: pd.Series,
-           lat2: pd.Series, lon2: pd.Series) -> pd.DataFrame:
-        s12, _, _, area = g.inverse(
-            np.radians(lat1.to_numpy(dtype=np.float64)),
-            np.radians(lon1.to_numpy(dtype=np.float64)),
-            np.radians(lat2.to_numpy(dtype=np.float64)),
-            np.radians(lon2.to_numpy(dtype=np.float64)),
-            want_area=True)
-        return pd.DataFrame({"s12": s12, "area12": area})
+    def edge_area(lat1, lon1, lat2, lon2):
+        s12, _, _, area = g.inverse(np.radians(lat1), np.radians(lon1),
+                                    np.radians(lat2), np.radians(lon2),
+                                    want_area=True)
+        return s12, area
 
-    return _f
+    return kernel_udf(edge_area, "s12 double, area12 double")
 
 
 def crs_transform_udf(src: str, dst: str, area: tuple | None = None):
@@ -236,23 +185,17 @@ def crs_transform_udf(src: str, dst: str, area: tuple | None = None):
     from proj_spark.planner import crs_to_crs
 
     t = crs_to_crs(src, dst, area)
-    schema = StructType([StructField("x", DoubleType()),
-                         StructField("y", DoubleType()),
-                         StructField("z", DoubleType())])
 
-    def _f(x, y, z=None):
-        xv = x.to_numpy(np.float64)
-        yv = y.to_numpy(np.float64)
-        zv = (np.zeros_like(xv) if z is None
-              else np.nan_to_num(z.to_numpy(np.float64)))
+    def transform(x, y, z=None):
+        z = np.zeros_like(x) if z is None else np.nan_to_num(z)
         if t.src.is_geographic:
-            xv, yv = np.radians(xv), np.radians(yv)
-        ox, oy, oz = t.fwd3d(xv, yv, zv)
+            x, y = np.radians(x), np.radians(y)
+        ox, oy, oz = t.fwd3d(x, y, z)
         if t.dst.is_geographic:
             ox, oy = np.degrees(ox), np.degrees(oy)
-        return pd.DataFrame({"x": ox, "y": oy, "z": oz})
+        return ox, oy, oz
 
-    return pandas_udf(_f, schema)
+    return kernel_udf(transform, "x double, y double, z double")
 
 
 def transform_crs(df: DataFrame, src: str, dst: str,

@@ -31,28 +31,22 @@ boundary, so no point outside the searched box can be closer:
     (the supremum moves to the pole endpoint), so
       d >= R * acos(...) lower-bounds the distance to the actual edge
     segment (which is a subset of that meridian).
-Both bounds are exact on the sphere used by the haversine ranking; for
-the ellipsoidal (vincenty) ranking a 0.995 safety factor absorbs the
-<0.34% flattening discrepancy.
+Both bounds are exact on the sphere used by the haversine ranking.
 
 Ring columns WRAP across the antimeridian (x is taken modulo 2^z, capped
 at a full-world span), so queries near +/-180 see neighbors on the other
 side of the dateline; rows clamp at the mercator pole rows.
 
-Distance column: haversine by default (closed-form, expressible in ANSI
-SQL for oracles); `distance="vincenty"` swaps in the ellipsoidal UDF for
-exact re-ranking.
+Distance column: haversine (closed-form, expressible in ANSI SQL for
+oracles).
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 from pyspark.sql.window import Window
 
@@ -79,29 +73,6 @@ def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
         f"COS(RADIANS({lat1})) * COS(RADIANS({lat2})) * "
         f"POWER(SIN((RADIANS({lon2}) - RADIANS({lon1}))/2), 2)))"
     )
-
-
-@pandas_udf(DoubleType())
-def vincenty_dist_udf(lon1: pd.Series, lat1: pd.Series,
-                      lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    from proj_spark.operations.geodesic import vincenty_inverse
-    s12, _, _ = vincenty_inverse(
-        np.radians(lon1.to_numpy(np.float64)), np.radians(lat1.to_numpy(np.float64)),
-        np.radians(lon2.to_numpy(np.float64)), np.radians(lat2.to_numpy(np.float64)))
-    return pd.Series(s12)
-
-
-@pandas_udf(DoubleType())
-def karney_dist_udf(lon1: pd.Series, lat1: pd.Series,
-                    lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    """Round-off-exact WGS84 ellipsoidal distance (Karney order-6 series;
-    reference src/geodesic.c geod_inverse)."""
-    from proj_spark.operations.karney import Geodesic
-    g = Geodesic(6378137.0, 1 / 298.257223563)
-    s12, _, _ = g.inverse(
-        np.radians(lat1.to_numpy(np.float64)), np.radians(lon1.to_numpy(np.float64)),
-        np.radians(lat2.to_numpy(np.float64)), np.radians(lon2.to_numpy(np.float64)))
-    return pd.Series(s12)
 
 
 def _tile_x(lon: float, z: int) -> int:
@@ -161,7 +132,7 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
              query_id: str = "query_id", data_id: str = "data_id",
              q_lon: str = "lon", q_lat: str = "lat",
              d_lon: str = "lon", d_lat: str = "lat",
-             distance: str = "haversine", max_ring: int = 16) -> DataFrame:
+             max_ring: int = 16) -> DataFrame:
     """k nearest data points per query point.
 
     Returns (query_id, data_id, dist_m, rank) with deterministic
@@ -188,18 +159,8 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
     # only to evaluate the per-query completion bound.
     qrows = [(r[0], float(r[1]), float(r[2]))
              for r in queries.select(query_id, q_lon, q_lat).collect()]
-    safety = 0.995 if distance in ("vincenty", "karney") else 1.0
-
-    def dist_col():
-        if distance == "vincenty":
-            return vincenty_dist_udf(F.col("_qlon"), F.col("_qlat"),
-                                     F.col("_dlon"), F.col("_dlat"))
-        if distance == "karney":
-            return karney_dist_udf(F.col("_qlon"), F.col("_qlat"),
-                                   F.col("_dlon"), F.col("_dlat"))
-        return haversine_expr(F.col("_qlon"), F.col("_qlat"),
-                              F.col("_dlon"), F.col("_dlat"))
-
+    dist = haversine_expr(F.col("_qlon"), F.col("_qlat"),
+                          F.col("_dlon"), F.col("_dlat"))
     q_schema = StructType([
         StructField(query_id, qid_field.dataType),
         StructField("_qlon", DoubleType()),
@@ -210,7 +171,7 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
     w = Window.partitionBy(query_id).orderBy(F.col("dist_m"), F.col(data_id))
 
     def topk_of(cand: DataFrame) -> DataFrame:
-        return (cand.withColumn("dist_m", dist_col())
+        return (cand.withColumn("dist_m", dist)
                 .withColumn("rank", F.row_number().over(w))
                 .where(F.col("rank") <= k)
                 .select(query_id, F.col(data_id), "dist_m", "rank"))
@@ -255,8 +216,7 @@ def knn_join(queries: DataFrame, data: DataFrame, k: int, z: int = 9,
             world = (2 * ring + 1 >= n
                      and qy - ring <= 0 and qy + ring + 1 >= n)
             cnt, kth = stats.get(qid, (0, math.inf))
-            bound = safety * _safe_radius(qlon, qlat, ring, z)
-            if world or (cnt >= k and kth <= bound):
+            if world or (cnt >= k and kth <= _safe_radius(qlon, qlat, ring, z)):
                 done_ids.append((qid,))
             else:
                 still.append((qid, qlon, qlat))

@@ -8,10 +8,8 @@ The theta-join "point inside polygon" becomes:
      small -> Catalyst broadcasts it)
   3. exact point-in-ring test as the post-filter
 
-The exact test is expressed two ways:
-  - `pip_expr`: pure Spark SQL ray-crossing over an array<struct<lon,lat>>
-    ring using aggregate() — no UDF, stays JVM-side; preferred.
-  - `pip_pandas_udf`: Arrow-batched NumPy fallback for very large rings.
+The exact test is `pip_expr`: pure Spark SQL ray-crossing over an
+array<struct<lon,lat>> ring using aggregate() — no UDF, stays JVM-side.
 
 At 100 TB the points side never shuffles: the cover explode is tiny and
 broadcast, and the exact filter is a map-side operation.
@@ -20,11 +18,8 @@ broadcast, and the exact filter is a map-side operation.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from proj_spark.spatial import cells
 
@@ -131,30 +126,6 @@ def pip_expr(lon: Column, lat: Column, ring: Column) -> Column:
     return crossings % 2 == 1
 
 
-@pandas_udf(BooleanType())
-def pip_pandas_udf(lon: pd.Series, lat: pd.Series, ring: pd.Series) -> pd.Series:
-    """NumPy ray-crossing fallback (one python call per Arrow batch)."""
-    out = np.zeros(len(lon), dtype=bool)
-    lon_v = lon.to_numpy(dtype=np.float64)
-    lat_v = lat.to_numpy(dtype=np.float64)
-    # group identical rings within the batch to vectorize over points
-    ring_key = ring.map(lambda r: id(r))
-    for _, idx in pd.Series(range(len(ring))).groupby(ring_key).groups.items():
-        idx = np.asarray(idx)
-        r = ring.iloc[idx[0]]
-        vx = np.array([v["lon"] for v in r])
-        vy = np.array([v["lat"] for v in r])
-        x1, y1 = vx[:-1], vy[:-1]
-        x2, y2 = vx[1:], vy[1:]
-        px = lon_v[idx][:, None]
-        py = lat_v[idx][:, None]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cond = ((y1 > py) != (y2 > py)) & (
-                px < (x2 - x1) * (py - y1) / (y2 - y1) + x1)
-        out[idx] = (cond.sum(axis=1) % 2).astype(bool)
-    return pd.Series(out)
-
-
 def pip_expr_multi(lon: Column, lat: Column, rings: Column) -> Column:
     """Point-in-polygon for a polygon WITH HOLES: even-odd rule over an
     array<array<struct<lon,lat>>> column (outer ring first, then holes).
@@ -203,8 +174,7 @@ def pip_join_multi(points: DataFrame, polygons: DataFrame, z: int = 7,
 
 def pip_join(points: DataFrame, polygons: DataFrame, z: int = 7,
              lon_col: str = "lon", lat_col: str = "lat",
-             id_col: str = "admin_id", ring_col: str = "ring",
-             use_udf: bool = False) -> DataFrame:
+             id_col: str = "admin_id", ring_col: str = "ring") -> DataFrame:
     """points x polygons containment join via cell cover + exact test.
 
     The cover side is explicitly broadcast: admin tables are small
@@ -213,8 +183,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, z: int = 7,
     cover = F.broadcast(cover_cells(polygons, z, ring_col, id_col))
     pts = points.withColumn("_cell", cells.cell_id(F.col(lon_col), F.col(lat_col), z))
     joined = pts.join(cover, pts["_cell"] == cover["cell"], "inner")
-    exact = (pip_pandas_udf(F.col(lon_col), F.col(lat_col), F.col(ring_col))
-             if use_udf else pip_expr(F.col(lon_col), F.col(lat_col), F.col(ring_col)))
+    exact = pip_expr(F.col(lon_col), F.col(lat_col), F.col(ring_col))
     # interior cells need no exact test (Or short-circuits in codegen)
     return (joined.where(F.col("interior") | exact)
             .drop("_cell", "cell", ring_col, "interior"))

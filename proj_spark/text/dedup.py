@@ -10,8 +10,9 @@ in three flavors:
     an O(n^2) similarity search into a shuffle on bucket keys.
   - SimHash: 64-bit sign fingerprint of token hashes; near-dups differ
     in few bits.  Banded into 4x16-bit keys for the same LSH trick.
-  - n-gram Jaccard: exact verification kernel (used standalone for small
-    candidate sets, or as the verify stage after LSH).
+  - n-gram Jaccard: exact verification of a candidate pair's shingle
+    sets (shingle_set_udf) as a JVM expression (set_jaccard), the
+    verify stage after LSH.
 
 All hashing uses explicit integer arithmetic (closed-form, engine-
 independent) — no reliance on Spark's or DuckDB's internal hash().
@@ -26,8 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 MERSENNE61 = (1 << 61) - 1
 
@@ -301,31 +301,6 @@ def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
     return pairs
 
 
-def ngram_jaccard_udf(shingle: int = 5):
-    """pandas UDF over (text_a, text_b) -> exact shingle-set Jaccard.
-
-    Shingle hashing is one vectorized batch pass per side; only the
-    per-pair set intersection (the verify stage over an already-LSH-pruned
-    candidate set, tiny by construction) remains a loop.
-    """
-
-    @pandas_udf(DoubleType())
-    def _f(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        ha = _shingle_hashes(ta, shingle)
-        hb = _shingle_hashes(tb, shingle)
-        out = np.zeros(len(ta))
-        for i, (x, y) in enumerate(zip(ha, hb)):
-            if len(x) == 0 and len(y) == 0:
-                out[i] = 1.0
-                continue
-            inter = np.intersect1d(x, y, assume_unique=True).size
-            union = len(x) + len(y) - inter
-            out[i] = inter / union if union else 0.0
-        return pd.Series(out)
-
-    return _f
-
-
 def shingle_set_udf(shingle: int = 5):
     """pandas UDF: text -> array<long> of sorted unique shingle hashes
     (one distributed batch pass; feeds the pair-verify stage so each
@@ -338,117 +313,14 @@ def shingle_set_udf(shingle: int = 5):
     return _f
 
 
-def ngram_jaccard_pairs_udf(doc_sets):
-    """pandas UDF over (id_a, id_b) -> exact Jaccard via a broadcast
-    id -> sorted-unique-hash-array dictionary.
-
-    The dictionary is the *small side* of the verify (a few MB per 10^4
-    documents — same contract as a broadcast join side); pairs then
-    carry only two ids across Arrow instead of two ~KB arrays, which is
-    the difference between MBs and GBs of transfer at 10^6 candidates.
-    Pass a ``SparkContext.broadcast`` of the dict (preferred: shipped to
-    each executor once, not re-pickled into every task binary) or a
-    plain dict.  For corpora whose dictionary exceeds broadcast size,
-    shard the candidate pairs by id range and broadcast per-shard
-    dictionaries.  Batch intersection is one vectorized sort pass.
-    """
-    is_bc = hasattr(doc_sets, "value")
-
-    @pandas_udf(DoubleType())
-    def _f(ida: pd.Series, idb: pd.Series) -> pd.Series:
-        n = len(ida)
-        if n == 0:
-            return pd.Series(np.zeros(0))
-        d = doc_sets.value if is_bc else doc_sets
-        A = [d[i] for i in ida.to_numpy()]
-        B = [d[i] for i in idb.to_numpy()]
-        return pd.Series(_batch_set_intersection_jaccard(A, B))
-
-    # The UDF is pure, but Catalyst pushes deterministic filters through
-    # Distinct — which would run the (expensive) verify on every
-    # PRE-distinct banded pair (~10x the work on bucket-skewed corpora).
-    # Marking it non-deterministic pins the verify above the dedup.
-    return _f.asNondeterministic()
-
-
-_SET_SENTINEL = np.int64(1) << np.int64(62)   # > any mod-2^61-1 hash
-
-
-def _batch_set_intersection_jaccard(A: list, B: list,
-                                    chunk: int = 1024) -> np.ndarray:
-    """Exact Jaccard for a batch of (sorted-unique array) pairs.
-
-    Pads each pair's two sets into one (chunk, la_max+lb_max) block,
-    row-sorts (a single-key axis-1 sort — measured ~4x cheaper than a
-    global (hash, pair) lexsort), and counts adjacent duplicates: every
-    common value appears exactly twice, every sentinel run contributes
-    pad_count-1, nothing else repeats.
-
-    Processed in cache-sized chunks: a monolithic (n, 2L) matrix at
-    Arrow-batch n (~30k rows x ~600 cols = 150 MB) thrashes DRAM when
-    32 executor workers sort concurrently (measured 7x slowdown vs the
-    same kernel single-process); ~1k-row blocks stay cache-resident."""
-    n = len(A)
-    out = np.empty(n, dtype=np.float64)
-    for c0 in range(0, n, chunk):
-        c1 = min(c0 + chunk, n)
-        Ac, Bc = A[c0:c1], B[c0:c1]
-        m = c1 - c0
-        la = np.array([len(a) for a in Ac], dtype=np.int64)
-        lb = np.array([len(b) for b in Bc], dtype=np.int64)
-        L = int(max(int(la.max()), int(lb.max()), 1))
-        mat = np.full((m, 2 * L), _SET_SENTINEL, dtype=np.int64)
-        rows = np.repeat(np.arange(m), la)
-        cols = np.arange(int(la.sum())) - np.repeat(np.cumsum(la) - la, la)
-        if len(rows):
-            mat[rows, cols] = np.concatenate(Ac)
-        rows = np.repeat(np.arange(m), lb)
-        cols = L + (np.arange(int(lb.sum()))
-                    - np.repeat(np.cumsum(lb) - lb, lb))
-        if len(rows):
-            mat[rows, cols] = np.concatenate(Bc)
-        mat.sort(axis=1)
-        dup = (mat[:, 1:] == mat[:, :-1]).sum(axis=1)
-        pads = 2 * L - la - lb
-        inter = dup - np.maximum(pads - 1, 0)
-        union = la + lb - inter
-        out[c0:c1] = np.where(union > 0, inter / np.maximum(union, 1),
-                              np.where(la + lb == 0, 1.0, 0.0))
-    return out
-
-
-def ngram_jaccard_arrays_udf():
-    """pandas UDF over two sorted-unique hash arrays -> exact Jaccard.
-
-    The LSH verify stage at scale: candidate pairs are broadcast-joined
-    to the per-document set table (array column), and each Arrow batch
-    of pairs is intersected in ONE vectorized lexsort pass — no per-pair
-    Python set work, no re-hashing of text per pair.
-    """
-
-    @pandas_udf(DoubleType())
-    def _f(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        n = len(sa)
-        if n == 0:
-            return pd.Series(np.zeros(0))
-        A = [np.asarray(a, dtype=np.int64) for a in sa]
-        B = [np.asarray(b, dtype=np.int64) for b in sb]
-        la = np.array([len(a) for a in A], dtype=np.int64)
-        lb = np.array([len(b) for b in B], dtype=np.int64)
-        pidx = np.concatenate([np.repeat(np.arange(n), la),
-                               np.repeat(np.arange(n), lb)])
-        h = (np.concatenate(A + B) if (la.sum() + lb.sum())
-             else np.zeros(0, dtype=np.int64))
-        order = np.lexsort((h, pidx))
-        hs, ps = h[order], pidx[order]
-        dup = (hs[1:] == hs[:-1]) & (ps[1:] == ps[:-1])
-        inter = np.bincount(ps[1:][dup], minlength=n)
-        union = la + lb - inter
-        out = np.where(union > 0, inter / np.maximum(union, 1),
-                       np.where(la + lb == 0, 1.0, 0.0))
-        return pd.Series(out)
-
-    return _f
+def set_jaccard(a, b) -> Column:
+    """Exact Jaccard of two sorted-unique shingle-set array columns as a
+    JVM expression (array_intersect): no Python verify stage, and two
+    empty sets count as identical (1.0)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return (F.when(union > F.lit(0), inter.cast("double") / union.cast("double"))
+            .otherwise(F.lit(1.0)))
 
 
 def simhash_udf(shingle: int = 3):

@@ -5,7 +5,8 @@ NumPy passes (31-bit-split Mersenne-61 modmul, segmented reduceat).
 These tests pin them to an independent arbitrary-precision Python-int
 oracle of the published definitions, so any future optimization that
 changes a single signature bit fails loudly.  (No Spark session needed —
-the UDF-wrapped functions are exercised directly via ``.func``.)
+the UDF-wrapped functions are exercised directly via ``.func`` — except
+for the JVM-side set_jaccard verify.)
 """
 
 from __future__ import annotations
@@ -123,21 +124,21 @@ def test_simhash_matches_python_oracle():
         assert int(np.uint64(np.int64(got))) == exp
 
 
-def test_batch_set_intersection_jaccard_exact():
-    """Chunked padded-sort intersection equals the per-pair oracle."""
-    from proj_spark.text.dedup import _batch_set_intersection_jaccard
+def test_set_jaccard_exact(spark):
+    """The JVM array_intersect verify equals the per-pair oracle,
+    empty sets included."""
+    from proj_spark.text.dedup import set_jaccard
     rng = np.random.default_rng(9)
-    A, B, exp = [], [], []
-    for _ in range(3000):
+    rows, exp = [], []
+    for i in range(3000):
         a = np.unique(rng.integers(0, 500, rng.integers(0, 40)))
         b = np.unique(rng.integers(0, 500, rng.integers(0, 40)))
-        A.append(a.astype(np.int64))
-        B.append(b.astype(np.int64))
+        rows.append((i, a.tolist(), b.tolist()))
         inter = np.intersect1d(a, b, assume_unique=True).size
         union = len(a) + len(b) - inter
         exp.append(inter / union if union else 1.0)
-    got = _batch_set_intersection_jaccard(A, B, chunk=256)
-    assert np.allclose(got, exp, atol=0)
-    # chunk-size independence
-    got2 = _batch_set_intersection_jaccard(A, B, chunk=7)
-    assert np.array_equal(got, got2)
+    df = spark.createDataFrame(rows, "i long, a array<long>, b array<long>")
+    got = [r["j"] for r in df.select("i", set_jaccard("a", "b").alias("j"))
+           .orderBy("i").collect()]
+    assert any(len(r[1]) == 0 for r in rows)
+    assert got == exp

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -70,25 +71,24 @@ def test_embed_topk_uses_take_ordered(spark, entry):
 
 
 def test_minhash_verify_not_pushed_below_distinct(spark, entry):
-    """The jaccard verify must evaluate ABOVE the candidate distinct —
-    a deterministic UDF filter would be pushed through the Aggregate
-    and re-verify every pre-distinct banded pair."""
-    from pyspark.sql import functions as F
-    from proj_spark.text.dedup import (minhash_lsh_candidates,
-                                       ngram_jaccard_pairs_udf)
-    import numpy as np
-    docs = entry._docs(spark, SF).select("doc_id", "text")
-    cand = minhash_lsh_candidates(docs, num_hashes=16, bands=4, shingle=5)
-    jac = ngram_jaccard_pairs_udf({i: np.zeros(0, dtype=np.int64)
-                                   for i in range(10**6)})
-    s = plan_of(cand.withColumn("j", jac(F.col("id_a"), F.col("id_b")))
-                .where(F.col("j") >= 0.5))
-    # the Arrow eval node must appear before (above) the aggregates in
-    # the formatted tree — i.e. its node id is smaller
-    lines = s.splitlines()
-    arrow = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    """The jaccard verify must evaluate ABOVE the candidate distinct,
+    never on the pre-distinct banded pairs."""
+    try:
+        s = plan_of(entry.q_minhash_neardup(spark, SF))
+    finally:
+        spark.catalog.clearCache()
+    tree, details = s.split("\n\n", 1)
+    # node ids whose details evaluate the array_intersect verify
+    verify = [re.match(r"\((\d+)\)", b).group(1)
+              for b in re.split(r"\n(?=\(\d+\) )", details.strip())
+              if "array_intersect" in b]
+    assert verify
+    lines = tree.splitlines()
+    first = min(i for i, ln in enumerate(lines)
+                if any(f"({n})" in ln for n in verify))
+    # the formatted tree lists a parent before its children
     agg = next(i for i, ln in enumerate(lines) if "HashAggregate" in ln)
-    assert arrow < agg
+    assert first < agg
 
 
 def test_ngram_pairs_uses_broadcast_anti_join(spark, entry):

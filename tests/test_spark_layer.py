@@ -69,6 +69,36 @@ def test_utm_udf_known_value(spark):
     assert abs(out["y"] - 6210141.32674801) < 1e-6
 
 
+def test_kernel_udf_matches_numpy(spark):
+    """kernel_udf runs the NumPy kernel on float64 arrays and returns its
+    arrays as the struct fields in order, or as one scalar column."""
+    from proj_spark import create
+    from proj_spark.spark.udf import kernel_udf
+    op = create("+proj=utm +zone=32 +ellps=GRS80")
+    rng = np.random.default_rng(5)
+    lon, lat = rng.uniform(3.0, 15.0, 500), rng.uniform(-80.0, 80.0, 500)
+    df = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))],
+        "i long, lon double, lat double")
+
+    def utm(lo, la):
+        x, y = op.fwd_deg(lo, la)
+        return y, x          # field order follows the schema, not names
+
+    def scaled(lo, i):
+        assert lo.dtype == np.float64 and i.dtype == np.float64
+        return lo * i
+
+    xy = kernel_udf(utm, "northing double, easting double")
+    sc = kernel_udf(scaled, "double")
+    rows = (df.select("i", xy("lon", "lat").alias("p"), sc("lon", "i").alias("s"))
+            .orderBy("i").collect())
+    x, y = op.fwd_deg(lon, lat)
+    assert np.array_equal([r["p"]["easting"] for r in rows], x)
+    assert np.array_equal([r["p"]["northing"] for r in rows], y)
+    assert np.array_equal([r["s"] for r in rows], lon * np.arange(500))
+
+
 def test_cells_pack_roundtrip(spark):
     df = spark.createDataFrame([(2.0, 1.0), (-74.0, 40.7), (139.7, 35.7)], ["lon", "lat"])
     z = 12
@@ -242,7 +272,8 @@ def test_knn_matches_bruteforce(spark, geo):
 
 
 def test_dedup_and_stats(spark):
-    from proj_spark.text.dedup import exact_dedup, minhash_lsh_candidates, ngram_jaccard_udf
+    from proj_spark.text.dedup import (exact_dedup, minhash_lsh_candidates,
+                                       set_jaccard, shingle_set_udf)
     from proj_spark.text.analysis import doc_stats, lang_guess
     rows = [
         (1, "the cat sat on the mat and it was happy for a while"),
@@ -258,11 +289,11 @@ def test_dedup_and_stats(spark):
     cands = minhash_lsh_candidates(docs, num_hashes=32, bands=16).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in cands}
     assert (1, 2) in pairs and (1, 3) in pairs  # dup + near-dup found
-    jac = ngram_jaccard_udf()
-    verified = (docs.alias("a").join(docs.alias("b"),
+    sets = docs.select("doc_id", shingle_set_udf()(F.col("text")).alias("sh"))
+    verified = (sets.alias("a").join(sets.alias("b"),
                 F.col("a.doc_id") < F.col("b.doc_id"))
                 .select(F.col("a.doc_id").alias("ia"), F.col("b.doc_id").alias("ib"),
-                        jac(F.col("a.text"), F.col("b.text")).alias("j")))
+                        set_jaccard(F.col("a.sh"), F.col("b.sh")).alias("j")))
     jmap = {(r["ia"], r["ib"]): r["j"] for r in verified.collect()}
     assert jmap[(1, 2)] == 1.0
     assert 0.7 < jmap[(1, 3)] < 1.0

@@ -41,8 +41,7 @@ def main(sf_dir: str, out_dir: str) -> None:
     from proj_spark.text import analysis
     from proj_spark.text.components import dedup_assign
     from proj_spark.text.dedup import (exact_dedup, minhash_lsh_candidates,
-                                       ngram_jaccard_arrays_udf,
-                                       shingle_set_udf)
+                                       set_jaccard, shingle_set_udf)
 
     spark = get_spark()
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -58,13 +57,12 @@ def main(sf_dir: str, out_dir: str) -> None:
     cand = minhash_lsh_candidates(docs1, id_col="doc_id")
     sets = docs1.select("doc_id", shingle_set_udf(5)(F.col("text"))
                         .alias("sh"))
-    jac = ngram_jaccard_arrays_udf()
     edges = (cand
              .join(sets.select(F.col("doc_id").alias("id_a"),
                                F.col("sh").alias("sh_a")), "id_a")
              .join(sets.select(F.col("doc_id").alias("id_b"),
                                F.col("sh").alias("sh_b")), "id_b")
-             .withColumn("j", jac("sh_a", "sh_b"))
+             .withColumn("j", set_jaccard("sh_a", "sh_b"))
              .where(F.col("j") >= JACCARD_TAU)
              .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     assign = dedup_assign(docs1.select("doc_id"), edges)

@@ -3,12 +3,14 @@
 Runs every __spark_entry__.queries() entry at sf0.01 and compares it to
 its oracle_sql() under DuckDB: row count, column names/kinds, and an
 order-insensitive exact value comparison (rows sorted by all columns).
+Each line shows the Spark and the DuckDB seconds.
 
 Usage: python tools/selfcheck.py [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -16,10 +18,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from proj_spark.spark.session import get_spark  # noqa: E402
+from proj_spark.spark.session import _default_cpus, get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -74,7 +77,7 @@ def _adversarial_spark():
     a query leaning on spark.sql.session.timeZone fails exactly here)."""
     from pyspark.sql import SparkSession
     return (SparkSession.builder.appName("selfcheck-adversarial")
-            .master("local[8]")
+            .master(f"local[{_default_cpus()}]")
             .config("spark.sql.shuffle.partitions", "8")
             .config("spark.sql.ansi.enabled", "true")
             .config("spark.sql.session.timeZone", "America/New_York")
@@ -90,11 +93,9 @@ def main() -> int:
     adversarial = "--adversarial" in args
     only = {a for a in args if not a.startswith("--")}
     if adversarial:
-        import os
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         pp = os.environ.get("PYTHONPATH", "")
-        if repo not in pp.split(":"):
-            os.environ["PYTHONPATH"] = f"{repo}:{pp}" if pp else repo
+        if REPO not in pp.split(":"):
+            os.environ["PYTHONPATH"] = f"{REPO}:{pp}" if pp else REPO
         spark = _adversarial_spark()
     else:
         spark = get_spark("selfcheck")
@@ -121,14 +122,15 @@ def main() -> int:
             print(f"FAIL {name}: oracle error: {e}")
             failed.append(name)
             continue
+        secs = f"[spark {t1-t0:.1f}s, duckdb {time.time()-t1:.1f}s]"
         issues = compare(name, sdf, odf)
         if issues:
-            print(f"FAIL {name} [{t1-t0:.1f}s]:")
+            print(f"FAIL {name} {secs}:")
             for i in issues:
                 print(f"  {i}")
             failed.append(name)
         else:
-            print(f"ok {name}: {len(sdf)} rows match  [{t1-t0:.1f}s]")
+            print(f"ok {name}: {len(sdf)} rows match  {secs}")
     spark.stop()
     print("FAILED:" if failed else "ALL OK", ",".join(failed))
     return 1 if failed else 0
