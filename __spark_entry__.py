@@ -32,11 +32,12 @@ import math
 import re
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from proj_spark import temporal
+from proj_spark.graph import edge_sample, undirected
 from proj_spark.pages import CITY_CENTERS, extract_geotags, pages_table
 from proj_spark.spark.udf import kernel_udf
 from proj_spark.spatial import cells
@@ -107,6 +108,38 @@ def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _page_seq() -> Column:
+    """A `_points` row's page ordinal (`i` in `_pages_cte`), parsed
+    from its url."""
+    return F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
+
+
+def _udeg(deg: str, shift: int = 0) -> Column:
+    """Degree column `deg` as exact µdeg integers, round(deg·1e6) as
+    BIGINT, plus `shift`."""
+    v = F.round(F.col(deg) * 1e6, 0).cast("long")
+    return v + F.lit(shift) if shift else v
+
+
+def _udeg_xy(shift: bool = False) -> list[Column]:
+    """`_points`' lon/lat as the µdeg point columns x, y; `shift` adds
+    180e6 / 90e6 so both are non-negative."""
+    return [_udeg("lon", 180_000_000 * shift).alias("x"),
+            _udeg("lat", 90_000_000 * shift).alias("y")]
+
+
+def _sql_udeg(deg: str, shift: int = 0) -> str:
+    """SQL twin of `_udeg`."""
+    v = f"CAST(ROUND({deg} * 1e6, 0) AS BIGINT)"
+    return f"{v} + {shift}" if shift else v
+
+
+def _sql_udeg_xy(shift: bool = False) -> str:
+    """SQL twin of `_udeg_xy`: the select items x, y over `pages`."""
+    return (f"{_sql_udeg('lon', 180_000_000 * shift)} AS x, "
+            f"{_sql_udeg('lat', 90_000_000 * shift)} AS y")
+
+
 def _udeg_pairs(t: DataFrame, s: int) -> DataFrame:
     """Point pairs of `t` (pid, x, y in µdeg, plus payload) within
     Chebyshev distance `s`, each unordered pair once, as a_<c>, b_<c>
@@ -122,6 +155,44 @@ def _udeg_pairs(t: DataFrame, s: int) -> DataFrame:
     return (cells.half_pairs(t.withColumn("cx", cx).withColumn("cy", cy),
                              ["cx", "cy"], half, "pid")
             .withColumn("d", d).where(F.col("d") <= s))
+
+
+def _sql_udeg_pairs(t: str, s: int, cols: tuple[str, ...] = ()) -> str:
+    """SQL twin of `_udeg_pairs`: the CTE `pairs` of the point pairs of
+    CTE `t` (pid, x, y in µdeg, plus `cols`) within Chebyshev distance
+    `s`, each unordered pair once, as a_<c>, b_<c> and their distance
+    d.  Grid cells of width `s` over the shifted, non-negative
+    coordinates and each point's 3x3 neighbour cells are CTE columns,
+    so the pair join is a hash equi-join before the exact box test."""
+    ab = ", ".join(f"a.{c} AS a_{c}, b.{c} AS b_{c}"
+                   for c in ("pid", "x", "y", *cols))
+    return f"""{t}_cell AS (SELECT *, (x + 180000000) // {s} AS cx,
+                       (y + 90000000) // {s} AS cy FROM {t}),
+{t}_ring AS (SELECT *, cx + dx AS rx, cy + dy AS ry FROM {t}_cell
+             CROSS JOIN (VALUES (-1), (0), (1)) dxs(dx)
+             CROSS JOIN (VALUES (-1), (0), (1)) dys(dy)),
+pairs AS (SELECT {ab}, GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS d
+          FROM {t}_ring a JOIN {t}_cell b
+            ON b.cx = a.rx AND b.cy = a.ry AND a.pid < b.pid
+           AND ABS(a.x - b.x) <= {s} AND ABS(a.y - b.y) <= {s})"""
+
+
+def _sql_toks(text: str = "text") -> str:
+    """SQL twin of analysis.tokens: the whitespace token list of
+    `text`."""
+    return (f"list_filter(regexp_split_to_array(trim({text}), '\\s+'), "
+            "x -> x != '')")
+
+
+_SQL_TOKS = _sql_toks("lower(text)")
+
+
+def _sql_cell_counts(z: int) -> str:
+    """SQL twin of stats.cell_counts over `pages`: the CTE cl(tx, ty,
+    x) of occupied zoom-`z` tile page counts."""
+    return f"""cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
+              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
+       FROM pages GROUP BY 1, 2)"""
 
 
 def _pages_cte(n: int) -> str:
@@ -171,6 +242,32 @@ links AS (SELECT src, dst FROM (
             UNION ALL
             SELECT src, (h // 17) % {N_DOMAINS} AS dst FROM link_h)
           WHERE src != dst)"""
+
+
+def _sql_edge_sample(a: str, b: str, mod: int) -> str:
+    """SQL twin of graph.edge_sample."""
+    return f"({a} * 1000003 + {b}) % {mod} = 0"
+
+
+def _sql_und(mod: int | None = None, name: str = "und") -> str:
+    """SQL twin of graph.undirected over `_links_cte`'s links: the CTE
+    `name`(a, b), sampled at 1/`mod` when given."""
+    und = ("SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b"
+           "\n          FROM links")
+    if mod is None:
+        return f"{name} AS ({und})"
+    return f"""{name} AS (SELECT a, b FROM (
+          {und})
+        WHERE {_sql_edge_sample('a', 'b', mod)})"""
+
+
+# The a < b < c triangles of CTE und(a, b), each once, as tri(x, y, z).
+_SQL_TRI = """tri AS (
+  SELECT e1.a AS x, e1.b AS y, e2.b AS z
+  FROM und e1
+  JOIN und e2 ON e2.a = e1.a AND e2.b > e1.b
+  JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b
+)"""
 
 
 # ---------------------------------------------------------------------------
@@ -1326,7 +1423,7 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_text_stats() -> dict[str, str]:
     """DuckDB twins of the analysis.py per-document expressions."""
-    toks = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t != '')"
+    toks = _sql_toks()
     n_tok = f"len({toks})"
     tot = f"list_aggregate(list_transform({toks}, t -> len(t)), 'sum')"
     mtl = f"(CASE WHEN {n_tok} > 0 THEN CAST({tot} AS DOUBLE) / {n_tok} ELSE 0.0 END)"
@@ -1382,8 +1479,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_lang_guess() -> str:
     """DuckDB twin of analysis.lang_guess (argmax stopword hits)."""
-    toks = ("list_distinct(list_transform(list_filter("
-            "regexp_split_to_array(trim(text), '\\s+'), t -> t != ''), t -> lower(t)))")
+    toks = f"list_distinct({_SQL_TOKS})"
     hits = {lang: f"len(list_intersect({toks}, {words!r}))"
             for lang, words in analysis.STOPWORDS.items()}
     best = "GREATEST(" + ", ".join(hits.values()) + ")"
@@ -1406,9 +1502,8 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_token_topk() -> str:
-    return """SELECT token, COUNT(*) AS n
-FROM (SELECT unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                                t -> t != '')) AS token
+    return f"""SELECT token, COUNT(*) AS n
+FROM (SELECT unnest({_SQL_TOKS}) AS token
       FROM documents)
 GROUP BY 1 ORDER BY n DESC, token LIMIT 30"""
 
@@ -1433,9 +1528,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_chunk_dedup() -> str:
     w = CHUNK_W
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
-    return f"""WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
+    return f"""WITH t AS (SELECT doc_id, {_sql_toks()} AS toks FROM documents),
 ch AS (
   SELECT doc_id,
          unnest([{{'pos': i,
@@ -1470,8 +1563,6 @@ def q_gopher_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_gopher_rep() -> str:
     from proj_spark.text.repetition import (DUP_TOKEN_MAX_FRAC,
                                             TOP_BIGRAM_MAX_SHARE)
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
     return f"""WITH t AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
@@ -1479,7 +1570,7 @@ def _sql_gopher_rep() -> str:
               THEN [toks[i] || ' ' || toks[i+1]
                     for i in generate_series(1, len(toks) - 1)]
               ELSE [] END AS bigrams
-  FROM (SELECT doc_id, {toks} AS toks FROM documents)
+  FROM (SELECT doc_id, {_sql_toks()} AS toks FROM documents)
 ), bg AS (
   SELECT doc_id, n_tokens, n_distinct, unnest(bigrams) AS bigram FROM t
 ), counts AS (
@@ -1551,14 +1642,10 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist())
 
 
-def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared exact n-gram Jaccard pipeline over the <=DF_CAP
-    vocabulary, computed distributed: the _capped_shingles relation ->
-    self-equi-join on shingle -> count = |intersection| -> |union| from
-    per-doc set sizes.  This is the shuffle-on-shingle plan that scales
-    (no O(n^2) cross join, no unbounded per-key pair blowup).  Returns
-    (id_a, id_b, jaccard) with id_a < id_b, jaccard unrounded; feeds
-    both the top-k query and the dedup-group assignment."""
+def _shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The doc pairs id_a < id_b sharing a _capped_shingles shingle,
+    with n_inter = |S_a cap S_b| and the set sizes na, nb: one
+    self-equi-join on shingle plus the broadcast per-doc sizes."""
     sh = _capped_shingles(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
@@ -1569,7 +1656,18 @@ def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count("*").alias("n_inter")))
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("nb"))
-    return (inter.join(F.broadcast(sa), "id_a").join(F.broadcast(sb), "id_b")
+    return inter.join(F.broadcast(sa), "id_a").join(F.broadcast(sb), "id_b")
+
+
+def _ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared exact n-gram Jaccard pipeline over the <=DF_CAP
+    vocabulary, computed distributed: _shingle_overlap's |intersection|
+    -> |union| from the per-doc set sizes.  This is the
+    shuffle-on-shingle plan that scales (no O(n^2) cross join, no
+    unbounded per-key pair blowup).  Returns (id_a, id_b, jaccard) with
+    id_a < id_b, jaccard unrounded; feeds both the top-k query and the
+    dedup-group assignment."""
+    return (_shingle_overlap(spark, sf_dir)
             .select(F.col("id_a").cast("long").alias("id_a"),
                     F.col("id_b").cast("long").alias("id_b"),
                     (F.col("n_inter").cast("double")
@@ -1682,14 +1780,22 @@ FROM assigned a JOIN sized s USING (comp_id)"""
 EMB_K = 20
 
 
+def _embeddings_query(spark: SparkSession, sf_dir: str
+                      ) -> tuple[DataFrame, list[float]]:
+    """(vec_id, embedding as array<double>) of the embeddings table,
+    and the query vector: vec_id 0's embedding, fetched to the driver."""
+    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+           .select("vec_id", F.col("embedding").cast("array<double>")
+                   .alias("embedding")))
+    qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
+    return emb, [float(v) for v in qrow[0]]
+
+
 def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k over the embeddings table (JVM-side dot
     product, no UDF; global top-k via orderBy().limit())."""
     from proj_spark.text.similarity import brute_force_topk
-    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-           .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")))
-    qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(v) for v in qrow[0]]
+    emb, query = _embeddings_query(spark, sf_dir)
     res = brute_force_topk(emb, query, EMB_K)
     return res.select(F.col("vec_id").cast("long").alias("vec_id"), "cosine")
 
@@ -1869,11 +1975,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-path op gets a full DuckDB value oracle (unlike the LSH
     variant's rows-only check)."""
     from proj_spark.text.similarity import ivf_topk
-    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-           .select("vec_id", F.col("embedding").cast("array<double>")
-                   .alias("embedding")))
-    qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(v) for v in qrow[0]]
+    emb, query = _embeddings_query(spark, sf_dir)
     res = ivf_topk(emb, query, EMB_K, dim=64, n_cells=IVF_CELLS,
                    nprobe=IVF_NPROBE)
     return res.select(F.col("cell").cast("long").alias("cell"),
@@ -2646,6 +2748,25 @@ def _events_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
                      temporal.epoch_micros(ev, "ts").alias("tm"))
 
 
+_HOUR = "tm div 3600000000"               # an event's hour (tm in µs)
+_SQL_HOUR = "epoch_us(ts) // 3600000000"   # its SQL twin, from events.ts
+
+
+def _hourly(ev: DataFrame, *keys: str, count: str = "y") -> DataFrame:
+    """The hourly event series of `_events_micros` rows: (*keys, x,
+    count), x the `_HOUR` bucket and `count` its number of events."""
+    return (ev.select(*keys, F.expr(_HOUR).alias("x"))
+            .groupBy(*keys, "x").agg(F.count("*").alias(count)))
+
+
+def _sql_hourly(name: str = "ser", key: str = "", count: str = "y") -> str:
+    """SQL twin of `_hourly` over events, as the CTE `name`."""
+    k, g = (f"{key}, ", "1, 2") if key else ("", "1")
+    return f"""{name} AS (
+  SELECT {k}{_SQL_HOUR} AS x, CAST(COUNT(*) AS BIGINT) AS {count}
+  FROM events GROUP BY {g})"""
+
+
 IJ_CELL_US = 7_200_000_000        # 2 h cells >= the longest interval
 IJ_EPOCH0_US = 1_704_067_200_000_000   # 2024-01-01T00:00:00Z
 IJ_N_WINDOWS = 400
@@ -2871,9 +2992,7 @@ def q_lisa_quadrants(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_lisa_quadrants(n: int) -> str:
     z = MORANS_Z
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 lg AS (SELECT a.tx, a.ty,
               CAST(SUM(b.x) AS BIGINT) AS lag, COUNT(*) AS k
        FROM cl a JOIN cl b
@@ -2922,10 +3041,7 @@ def q_std_ellipse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_std_ellipse(n: int) -> str:
     from proj_spark.spatial.stats import _RAD2DEG, _SDE_USHIFT, _SDE_VSHIFT
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT domain,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) + 180000000 AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) + 90000000 AS y
-      FROM pages),
+t AS (SELECT domain, {_sql_udeg_xy(shift=True)} FROM pages),
 c AS (SELECT domain, COUNT(*) AS n_pages,
              SUM(x) // COUNT(*) AS cx, SUM(y) // COUNT(*) AS cy
       FROM t GROUP BY 1),
@@ -3078,14 +3194,11 @@ def q_cross_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one shuffle on the 2-D grid key for the pair join, hash agg
     to <= |langs|^2 * |scales| rows, then window + two broadcast joins
-    on the TINY aggregate.  FULL SQL ORACLE (_sql_cross_k): unpruned
-    theta join, same classification and assembly."""
+    on the TINY aggregate.  FULL SQL ORACLE (_sql_cross_k): the full
+    3x3-cell box-pair join (_sql_udeg_pairs), same classification and
+    assembly."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select(
-        seq.alias("pid"), F.col("lang"),
-        F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-        F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+    t = pts.select(_page_seq().alias("pid"), F.col("lang"), *_udeg_xy())
     pairs = (_udeg_pairs(t, RIPLEY_SCALES[-1])
              .select("d", F.least("a_lang", "b_lang").alias("lang_a"),
                      F.greatest("a_lang", "b_lang").alias("lang_b")))
@@ -3117,21 +3230,15 @@ def q_cross_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_cross_k(n: int) -> str:
     S = RIPLEY_SCALES[-1]
-    scales = ", ".join(f"({s})" for s in RIPLEY_SCALES)
+    scales = ", ".join(str(s) for s in RIPLEY_SCALES)
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT i AS pid, lang,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
-      FROM pages),
-p AS (SELECT GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS d,
-             LEAST(a.lang, b.lang) AS lang_a,
-             GREATEST(a.lang, b.lang) AS lang_b
-      FROM t a JOIN t b
-        ON a.pid < b.pid
-       AND ABS(a.x - b.x) <= {S} AND ABS(a.y - b.y) <= {S}),
-per AS (SELECT s.s AS scale_udeg, lang_a, lang_b, COUNT(*) AS n_pairs
-        FROM p JOIN (VALUES {scales}) s(s) ON p.d <= s.s
-        GROUP BY 1, 2, 3),
+t AS (SELECT i AS pid, lang, {_sql_udeg_xy()} FROM pages),
+{_sql_udeg_pairs("t", S, ("lang",))},
+p AS (SELECT d, LEAST(a_lang, b_lang) AS lang_a,
+             GREATEST(a_lang, b_lang) AS lang_b FROM pairs),
+per AS (SELECT scale_udeg, lang_a, lang_b, COUNT(*) AS n_pairs
+        FROM (SELECT *, unnest([{scales}]) AS scale_udeg FROM p)
+        WHERE d <= scale_udeg GROUP BY 1, 2, 3),
 per2 AS (SELECT *, CAST(SUM(n_pairs) OVER (PARTITION BY scale_udeg)
                         AS BIGINT) AS n_pairs_all
          FROM per),
@@ -3254,9 +3361,7 @@ def q_quadrat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_quadrat(n: int) -> str:
     z, q = QUADRAT_Z, 1 << (2 * QUADRAT_Z)
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 a AS (SELECT COUNT(*) AS n_occupied, CAST(SUM(x) AS BIGINT) AS n_pts,
              CAST(SUM(x * x) AS BIGINT) AS sum_sq
       FROM cl)
@@ -3363,11 +3468,9 @@ def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_source_mix() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
     return f"""WITH per AS (
   SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len({toks})) AS BIGINT) AS n_tokens
+         CAST(SUM(len({_sql_toks()})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY 1),
 q AS (SELECT *, CAST(ROUND(SQRT(CAST(n_docs AS DOUBLE)) * 1e6, 0) AS BIGINT)
                AS s_q FROM per),
@@ -3428,10 +3531,8 @@ def q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_seq_pack() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
     return f"""WITH t AS (
-  SELECT source, doc_id, CAST(len({toks}) AS BIGINT) AS tok
+  SELECT source, doc_id, CAST(len({_sql_toks()}) AS BIGINT) AS tok
   FROM documents),
 c AS (SELECT source, tok,
              CAST(SUM(tok) OVER (PARTITION BY source ORDER BY doc_id
@@ -3551,9 +3652,7 @@ def q_tile_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_tile_gini(n: int) -> str:
     z = GINI_Z
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 r AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x, tx, ty) AS i FROM cl),
 a AS (SELECT COUNT(*) AS n_cells, CAST(SUM(x) AS BIGINT) AS n_pages,
              CAST(SUM(i * x) AS BIGINT) AS s_ix
@@ -3596,6 +3695,15 @@ def _loglog_sums(pts: DataFrame) -> DataFrame:
         F.sum("u").alias("su"), F.sum("v").alias("sv"),
         F.sum(F.expr("(u * u) div 1000000")).alias("suuq"),
         F.sum(F.expr("(u * v) div 1000000")).alias("suvq"))
+
+
+# SQL twin of `_loglog_sums` over uv(u, v), as the CTE `a`.
+_SQL_FIT_SUMS = """\
+a AS (SELECT COUNT(*) AS n_pts, CAST(SUM(u) AS BIGINT) AS su,
+             CAST(SUM(v) AS BIGINT) AS sv,
+             CAST(SUM((u * u) // 1000000) AS BIGINT) AS suuq,
+             CAST(SUM((u * v) // 1000000) AS BIGINT) AS suvq
+      FROM uv)"""
 
 
 _SQL_FIT = """
@@ -3642,10 +3750,8 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_zipf_fit() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
     return f"""WITH tk AS (
-  SELECT unnest({toks}) AS tok FROM documents),
+  SELECT unnest({_sql_toks()}) AS tok FROM documents),
 cnts AS (SELECT tok, COUNT(*) AS cnt FROM tk GROUP BY 1
          ORDER BY cnt DESC, tok LIMIT {ZIPF_K}),
 rk AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank
@@ -3653,11 +3759,7 @@ rk AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank
 uv AS (SELECT CAST(ROUND(LN(CAST(rank AS DOUBLE)) * 1e6, 0) AS BIGINT) AS u,
               CAST(ROUND(LN(CAST(cnt AS DOUBLE)) * 1e6, 0) AS BIGINT) AS v
        FROM rk),
-a AS (SELECT COUNT(*) AS n_pts, CAST(SUM(u) AS BIGINT) AS su,
-             CAST(SUM(v) AS BIGINT) AS sv,
-             CAST(SUM((u * u) // 1000000) AS BIGINT) AS suuq,
-             CAST(SUM((u * v) // 1000000) AS BIGINT) AS suvq
-      FROM uv)
+{_SQL_FIT_SUMS}
 SELECT n_pts, su, sv, suuq, suvq,{_SQL_FIT}
 FROM a"""
 
@@ -3695,11 +3797,7 @@ dist AS (SELECT d, COUNT(*) AS n_d FROM deg GROUP BY 1),
 uv AS (SELECT CAST(ROUND(LN(CAST(d AS DOUBLE)) * 1e6, 0) AS BIGINT) AS u,
               CAST(ROUND(LN(CAST(n_d AS DOUBLE)) * 1e6, 0) AS BIGINT) AS v
        FROM dist),
-a AS (SELECT COUNT(*) AS n_pts, CAST(SUM(u) AS BIGINT) AS su,
-             CAST(SUM(v) AS BIGINT) AS sv,
-             CAST(SUM((u * u) // 1000000) AS BIGINT) AS suuq,
-             CAST(SUM((u * v) // 1000000) AS BIGINT) AS suvq
-      FROM uv),
+{_SQL_FIT_SUMS},
 st AS (SELECT COUNT(*) AS n_nodes, CAST(SUM(d) AS BIGINT) AS n_edges
        FROM deg)
 SELECT n_pts, su, sv, suuq, suvq, n_nodes, n_edges,{_SQL_FIT}
@@ -3719,11 +3817,7 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-k cut is engine-independent.  FULL SQL ORACLE
     (_sql_pq_topk) — see text/similarity.py pq_topk."""
     from proj_spark.text.similarity import pq_topk
-    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-           .select("vec_id", F.col("embedding").cast("array<double>")
-                   .alias("embedding")))
-    qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(v) for v in qrow[0]]
+    emb, query = _embeddings_query(spark, sf_dir)
     res = pq_topk(emb, query, EMB_K, dim=64, m=PQ_M, n_codes=PQ_CODES)
     return res.select(F.col("vec_id").cast("long").alias("vec_id"),
                       "adc_q", "cosine")
@@ -3791,8 +3885,7 @@ def q_od_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_od_flows): same LEAD + rollup in DuckDB."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select("domain", seq.alias("seq"),
+    t = pts.select("domain", _page_seq().alias("seq"),
                    cells.tile_x(F.col("lon"), OD_Z).alias("tx"),
                    cells.tile_y(F.col("lat"), OD_Z).alias("ty"))
     w = Window.partitionBy("domain").orderBy("seq")
@@ -3844,9 +3937,7 @@ def _sql_gearys_c(n: int) -> str:
     xb = "(CAST(t_sum AS DOUBLE) / n_cells)"
     den = f"s_sq - ((n_cells * {xb}) * {xb})"
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 pr AS (SELECT a.x AS xi, b.x AS xj
        FROM cl a JOIN cl b
          ON (b.tx = a.tx + 1 AND b.ty = a.ty)
@@ -3872,9 +3963,7 @@ def _sql_morans_i(n: int) -> str:
     num = f"(s_pairs - ({xb} * s_i)) + ((w_pairs * {xb}) * {xb})"
     den = f"s_sq - ((n_cells * {xb}) * {xb})"
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 pr AS (SELECT a.x AS xi, b.x AS xj
        FROM cl a JOIN cl b
          ON (b.tx = a.tx + 1 AND b.ty = a.ty)
@@ -3917,9 +4006,7 @@ def _sql_heatmap(n: int) -> str:
     z = HEATMAP_Z
     side = 1 << z
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 sc AS (SELECT tx + dx AS tx2, ty + dy AS ty2, x * w AS wx,
               CASE WHEN dx = 0 AND dy = 0 THEN x ELSE 0 END AS own
        FROM cl CROSS JOIN {_kernel_values_sql()})
@@ -3988,9 +4075,7 @@ def q_dense_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_dense_clusters(n: int) -> str:
     z, side = DENSE_Z, 1 << DENSE_Z
     return f"""WITH RECURSIVE {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 dense AS (SELECT tx * {side} + ty AS id, tx, ty, x
           FROM cl WHERE x >= {_dense_min(n)}),
 e AS (SELECT a.id AS src, b.id AS dst
@@ -4156,16 +4241,8 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_triangles(n: int) -> str:
     return f"""WITH {_links_cte(n)},
-und AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {TRI_SAMPLE_MOD} = 0),
-tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM und e1
-  JOIN und e2 ON e2.a = e1.a AND e2.b > e1.b
-  JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b
-)
+{_sql_und(TRI_SAMPLE_MOD)},
+{_SQL_TRI}
 SELECT CAST(node AS BIGINT) AS domain, CAST(COUNT(*) AS BIGINT) AS n_tri
 FROM (SELECT x AS node FROM tri
       UNION ALL SELECT y FROM tri
@@ -4255,9 +4332,7 @@ def _sql_getis_hotspots(n: int) -> str:
     vt = ("((CAST(n_cells AS DOUBLE) * k - k * k) / "
           "(CAST(n_cells AS DOUBLE) - 1.0))")
     return f"""WITH {_pages_cte(n)},
-cl AS (SELECT {cells.tile_x_sql('lon', z)} AS tx,
-              {cells.tile_y_sql('lat', z)} AS ty, COUNT(*) AS x
-       FROM pages GROUP BY 1, 2),
+{_sql_cell_counts(z)},
 win AS (SELECT a.tx AS tx, a.ty AS ty,
                CAST(SUM(b.x) AS BIGINT) AS w_sum, COUNT(*) AS k
         FROM cl a CROSS JOIN {_kernel_values_sql()}
@@ -4380,9 +4455,8 @@ def q_domain_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent); max_step is order-independent by definition.
     """
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
     w = Window.partitionBy("domain").orderBy("seq")
-    t = (pts.select("domain", seq.alias("seq"), "lat", "lon")
+    t = (pts.select("domain", _page_seq().alias("seq"), "lat", "lon")
          .withColumn("plat", F.lag("lat").over(w))
          .withColumn("plon", F.lag("lon").over(w)))
     st = t.withColumn("step", haversine_expr(
@@ -4742,10 +4816,9 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ccnet_buckets() -> str:
-    return """WITH tok AS (
+    return f"""WITH tok AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-         unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS token
+         unnest({_SQL_TOKS}) AS token
   FROM documents
 ), vocab AS (
   SELECT token, COUNT(*) AS cnt FROM tok GROUP BY 1
@@ -4774,10 +4847,9 @@ def q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_distinctive_terms() -> str:
-    return """WITH tok AS (
+    return f"""WITH tok AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id, lang,
-         unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS token
+         unnest({_SQL_TOKS}) AS token
   FROM documents
 ), tf AS (
   SELECT lang, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2
@@ -4806,7 +4878,7 @@ def q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     its page: n_canon == n_pages and no cross-page merges."""
     from proj_spark.text.urlnorm import canonical_url
     pages = pages_table(spark, _n_pages(sf_dir), N_DOMAINS)
-    i = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
+    i = _page_seq()
     h = F.pmod(i * F.lit(2654435761), F.lit(2 ** 31))
     base = pages.select(
         "url", F.regexp_extract("url", r"site(\d+)\.", 1).alias("domain"),
@@ -4908,9 +4980,8 @@ def q_path_densify(spark: SparkSession, sf_dir: str) -> DataFrame:
     (undefined midpoint) would yield |p1+p2| ~ 0; jittered city data
     never produces them, and atan2(0, 0) = 0 in both engines anyway."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
     w = Window.partitionBy("domain").orderBy("seq")
-    t = (pts.select("domain", seq.alias("seq"), "lat", "lon")
+    t = (pts.select("domain", _page_seq().alias("seq"), "lat", "lon")
          .withColumn("nlat", F.lead("lat").over(w))
          .withColumn("nlon", F.lead("lon").over(w))
          .where(F.col("nlat").isNotNull()))
@@ -5065,8 +5136,7 @@ def _sql_cmsketch_tokens() -> str:
         f"SELECT token, {r} AS r, {sk.cm_col_sql('tid', r)} AS col FROM probes"
         for r in range(sk.CM_D))
     return f"""WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS token
+  SELECT unnest({_SQL_TOKS}) AS token
   FROM documents
 ), cnt AS (
   SELECT token, COUNT(*) AS n, {tid} AS tid FROM tok GROUP BY 1
@@ -5145,8 +5215,7 @@ def _sql_dup_spans() -> str:
     k = DUP_K
     return f"""WITH tok AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     t -> t != '') AS l
+         {_SQL_TOKS} AS l
   FROM documents
 ), win AS (
   SELECT doc_id, i AS pos, array_to_string(l[i:i + {k - 1}], chr(31)) AS wkey
@@ -5190,12 +5259,7 @@ def q_domain_gyration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_domain_gyration): identical arithmetic."""
     pts = _points(spark, sf_dir)
-    t = pts.select(
-        "domain",
-        (F.round(F.col("lon") * 1e6, 0).cast("long")
-         + F.lit(180_000_000)).alias("x"),
-        (F.round(F.col("lat") * 1e6, 0).cast("long")
-         + F.lit(90_000_000)).alias("y"))
+    t = pts.select("domain", *_udeg_xy(shift=True))
     c = (t.groupBy("domain")
          .agg(F.count("*").alias("n_pages"),
               F.sum("x").alias("sx"), F.sum("y").alias("sy"))
@@ -5216,10 +5280,7 @@ def q_domain_gyration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_domain_gyration(n: int) -> str:
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT domain,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) + 180000000 AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) + 90000000 AS y
-      FROM pages),
+t AS (SELECT domain, {_sql_udeg_xy(shift=True)} FROM pages),
 c AS (SELECT domain, COUNT(*) AS n_pages,
              SUM(x) // COUNT(*) AS cx, SUM(y) // COUNT(*) AS cy
       FROM t GROUP BY 1)
@@ -5276,11 +5337,7 @@ def q_hausdorff_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with identical integer arithmetic."""
     pts = _points(spark, sf_dir)
     dom = F.col("domain").cast("long")
-    t = (pts.select(dom.alias("dom"),
-                    F.regexp_extract("url", r"/page/(\d+)$", 1)
-                    .cast("long").alias("pid"),
-                    F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-                    F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+    t = (pts.select(dom.alias("dom"), _page_seq().alias("pid"), *_udeg_xy())
          .where((F.col("dom") >= HAUS_DOM_LO) & (F.col("dom") <= HAUS_DOM_HI)))
     # density gate (measured crossover): at <= 600k pages the selected
     # footprints are ~3k points total and the grid plan's ~10 extra
@@ -5365,9 +5422,7 @@ def _hausdorff_allpairs(t: DataFrame) -> DataFrame:
 
 def _sql_hausdorff_pairs(n: int) -> str:
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT CAST(domain AS BIGINT) AS dom, i AS pid,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
+t AS (SELECT CAST(domain AS BIGINT) AS dom, i AS pid, {_sql_udeg_xy()}
       FROM pages
       WHERE CAST(domain AS BIGINT) BETWEEN {HAUS_DOM_LO} AND {HAUS_DOM_HI}),
 m AS (SELECT a.dom, b.dom AS partner, a.pid,
@@ -5395,10 +5450,9 @@ def q_cluster_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     even, where HALF_UP engines disagree with round-to-nearest ones).
     One shuffle."""
     pts = _points(spark, sf_dir)
-    lat6 = F.round(F.col("lat") * 1e6, 0).cast("long")
-    lon6 = F.round(F.col("lon") * 1e6, 0).cast("long")
     agg = (pts.select(cells.cell_id(F.col("lon"), F.col("lat"), 6)
-                      .alias("cell6"), lat6.alias("lat6"), lon6.alias("lon6"))
+                      .alias("cell6"), _udeg("lat").alias("lat6"),
+                      _udeg("lon").alias("lon6"))
            .groupBy("cell6")
            .agg(F.count("*").alias("n_pages"),
                 F.sum("lat6").alias("slat"), F.sum("lon6").alias("slon")))
@@ -5417,9 +5471,9 @@ def _sql_cluster_centroids(n: int) -> str:
     return f"""WITH {_pages_cte(n)}
 SELECT {cells.cell_id_sql('lon', 'lat', 6)} AS cell6,
        COUNT(*) AS n_pages,
-       CAST(FLOOR(CAST(SUM(CAST(ROUND(lat * 1000000.0, 0) AS BIGINT)) AS DOUBLE)
+       CAST(FLOOR(CAST(SUM({_sql_udeg('lat')}) AS DOUBLE)
                   / COUNT(*)) AS BIGINT) AS c_lat6,
-       CAST(FLOOR(CAST(SUM(CAST(ROUND(lon * 1000000.0, 0) AS BIGINT)) AS DOUBLE)
+       CAST(FLOOR(CAST(SUM({_sql_udeg('lon')}) AS DOUBLE)
                   / COUNT(*)) AS BIGINT) AS c_lon6
 FROM pages GROUP BY 1"""
 
@@ -5534,9 +5588,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_decontaminate() -> str:
     nn = 13
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "x -> x != '')")
-    return f"""WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
+    return f"""WITH t AS (SELECT doc_id, {_sql_toks()} AS toks FROM documents),
 ngr AS (
   SELECT doc_id,
          unnest(list_distinct([array_to_string(toks[i+1:i+{nn}], ' ')
@@ -5629,8 +5681,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_skyline() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "x -> x != '')")
+    toks = _sql_toks()
     return f"""WITH m AS (
   SELECT lang, CAST(doc_id AS BIGINT) AS doc_id,
          CAST(len({toks}) AS BIGINT) AS n_tokens,
@@ -5656,9 +5707,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lm_score() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "x -> x != '')")
-    return f"""WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
+    return f"""WITH t AS (SELECT doc_id, {_sql_toks()} AS toks FROM documents),
 bgl AS (
   SELECT doc_id,
          unnest([{{'w1': toks[i+1], 'bg': toks[i+1] || ' ' || toks[i+2]}}
@@ -5846,10 +5895,7 @@ def _crawl_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     geotagged pages chained by page number, filtered to city-local
     hops (|dx|,|dy| <= {SI_MAX_UDEG} µdeg) and non-degenerate."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select("domain", seq.alias("seq"),
-                   F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-                   F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+    t = pts.select("domain", _page_seq().alias("seq"), *_udeg_xy())
     w = Window.partitionBy("domain").orderBy("seq")
     segs = (t.select(F.col("seq").alias("id"), F.col("domain").alias("grp"),
                      F.col("x").alias("x1"), F.col("y").alias("y1"),
@@ -5887,10 +5933,7 @@ def _sql_seg_intersect(n: int) -> str:
     from proj_spark.spatial.overlay import seg_self_join_sql
     inner = seg_self_join_sql("segf")
     return f"""WITH {_pages_cte(n)},
-pts AS (SELECT domain, i AS seq,
-               CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-               CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
-        FROM pages),
+pts AS (SELECT domain, i AS seq, {_sql_udeg_xy()} FROM pages),
 segs AS (SELECT seq AS id, domain AS grp, x AS x1, y AS y1,
                 LEAD(x) OVER (PARTITION BY domain ORDER BY seq) AS x2,
                 LEAD(y) OVER (PARTITION BY domain ORDER BY seq) AS y2
@@ -5931,18 +5974,14 @@ def q_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, then the tiny totals relation (6 rows + the scalar W) joins
     back broadcast.  The corpus is scanned once however large it is.
 
-    FULL SQL ORACLE (_sql_join_counts): the unpruned theta join with
-    identical integer statistics."""
+    FULL SQL ORACLE (_sql_join_counts): the full 3x3-cell box-pair
+    join (_sql_udeg_pairs) with identical integer statistics."""
     pts = _points(spark, sf_dir)
     # persisted: the typed point relation feeds BOTH join sides plus
     # the language totals and the global count — four references, each
     # otherwise re-running the html scan + geotag regexes (9.4 s ->
     # ~5 s at sf0.1).  Four narrow columns, plan-keyed cache.
-    t = pts.select(
-        F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long").alias("pid"),
-        "lang",
-        F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-        F.round(F.col("lat") * 1e6, 0).cast("long").alias("y")).persist()
+    t = pts.select(_page_seq().alias("pid"), "lang", *_udeg_xy()).persist()
     obs = (_udeg_pairs(t, JC_S_UDEG)
            .select(F.least("a_lang", "b_lang").alias("lang_a"),
                    F.greatest("a_lang", "b_lang").alias("lang_b"))
@@ -5973,18 +6012,13 @@ def q_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_join_counts(n: int) -> str:
     S = JC_S_UDEG
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT i AS pid, lang,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
-      FROM pages),
+t AS (SELECT i AS pid, lang, {_sql_udeg_xy()} FROM pages),
+{_sql_udeg_pairs("t", S, ("lang",))},
 obs AS (
-  SELECT LEAST(a.lang, b.lang) AS lang_a,
-         GREATEST(a.lang, b.lang) AS lang_b,
+  SELECT LEAST(a_lang, b_lang) AS lang_a,
+         GREATEST(a_lang, b_lang) AS lang_b,
          COUNT(*) AS n_pairs
-  FROM t a JOIN t b
-    ON a.pid < b.pid
-   AND ABS(a.x - b.x) <= {S} AND ABS(a.y - b.y) <= {S}
-  GROUP BY 1, 2),
+  FROM pairs GROUP BY 1, 2),
 tot AS (SELECT lang, COUNT(*) AS n_l FROM t GROUP BY 1),
 nn AS (SELECT COUNT(*) AS n FROM t),
 ww AS (SELECT SUM(n_pairs) AS w FROM obs)
@@ -6022,13 +6056,10 @@ def q_knox_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition of a time-bucketed layout instead of the whole relation;
     the join stays the same.
 
-    FULL SQL ORACLE (_sql_knox_pairs): the unpruned theta join."""
+    FULL SQL ORACLE (_sql_knox_pairs): the full 3x3-cell box-pair join
+    (_sql_udeg_pairs), then the time gate."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select(
-        seq.alias("pid"),
-        F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-        F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+    t = pts.select(_page_seq().alias("pid"), *_udeg_xy())
     S, T = KNOX_S_UDEG, KNOX_T_S
     offs = ([(dx, dy, 1) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
             + [(dx, dy, 0) for (dx, dy) in
@@ -6077,17 +6108,12 @@ def q_knox_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_knox_pairs(n: int) -> str:
     S, T = KNOX_S_UDEG, KNOX_T_S
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT i AS pid,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
-      FROM pages)
-SELECT a.pid AS pid_a, b.pid AS pid_b,
-       b.x - a.x AS dx_udeg, b.y - a.y AS dy_udeg,
-       b.pid - a.pid AS dt_s
-FROM t a JOIN t b
-  ON a.pid < b.pid
- AND ABS(a.x - b.x) <= {S} AND ABS(a.y - b.y) <= {S}
- AND b.pid - a.pid <= {T}"""
+t AS (SELECT i AS pid, {_sql_udeg_xy()} FROM pages),
+{_sql_udeg_pairs("t", S)}
+SELECT a_pid AS pid_a, b_pid AS pid_b,
+       b_x - a_x AS dx_udeg, b_y - a_y AS dy_udeg,
+       b_pid - a_pid AS dt_s
+FROM pairs WHERE b_pid - a_pid <= {T}"""
 
 
 RIPLEY_SCALES = (25_000, 50_000, 100_000)   # µdeg box half-widths
@@ -6105,14 +6131,10 @@ def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     then each pair's max(|dx|, |dy|) is bucketed into every scale it
     fits: exact integer counts, no per-scale re-scan.
 
-    FULL SQL ORACLE (_sql_ripley_k): the unpruned theta join with the
-    same CASE bucketing."""
+    FULL SQL ORACLE (_sql_ripley_k): the full 3x3-cell box-pair join
+    (_sql_udeg_pairs) with the same per-scale bucketing."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select(
-        seq.alias("pid"),
-        F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-        F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+    t = pts.select(_page_seq().alias("pid"), *_udeg_xy())
     pairs = _udeg_pairs(t, RIPLEY_SCALES[-1]).select("d")
     scale = F.explode(F.array(*[F.lit(s) for s in RIPLEY_SCALES]))
     return (pairs.select("d", scale.alias("scale_udeg"))
@@ -6123,19 +6145,13 @@ def q_ripley_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ripley_k(n: int) -> str:
     S = RIPLEY_SCALES[-1]
-    scales = ", ".join(f"({s})" for s in RIPLEY_SCALES)
+    scales = ", ".join(str(s) for s in RIPLEY_SCALES)
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT i AS pid,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
-      FROM pages),
-p AS (SELECT GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS d
-      FROM t a JOIN t b
-        ON a.pid < b.pid
-       AND ABS(a.x - b.x) <= {S} AND ABS(a.y - b.y) <= {S})
-SELECT s.s AS scale_udeg, COUNT(*) AS n_pairs
-FROM p JOIN (VALUES {scales}) s(s) ON p.d <= s.s
-GROUP BY 1"""
+t AS (SELECT i AS pid, {_sql_udeg_xy()} FROM pages),
+{_sql_udeg_pairs("t", S)}
+SELECT scale_udeg, COUNT(*) AS n_pairs
+FROM (SELECT d, unnest([{scales}]) AS scale_udeg FROM pairs)
+WHERE d <= scale_udeg GROUP BY 1"""
 
 
 HULL_Z = 5           # hull groups: z5 webmerc tiles (11.25 deg)
@@ -6148,8 +6164,7 @@ def _hull_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pts.select(
         cells.tile_x(F.col("lon"), HULL_Z).alias("tile_x"),
         cells.tile_y(F.col("lat"), HULL_Z).alias("tile_y"),
-        F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-        F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+        *_udeg_xy())
 
 
 def q_convex_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6184,9 +6199,7 @@ def _quickhull_cte(n: int) -> str:
 
     cr_e = cross("e.ax", "e.ay", "e.bx", "e.by", "p.x", "p.y")
     return f"""{_pages_cte(n)},
-pts AS (SELECT DISTINCT {tx} AS tx, {ty} AS ty,
-               CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-               CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
+pts AS (SELECT DISTINCT {tx} AS tx, {ty} AS ty, {_sql_udeg_xy()}
         FROM pages),
 lpt AS (SELECT tx, ty, x AS lx, y AS ly FROM (
           SELECT tx, ty, x, y,
@@ -6328,18 +6341,14 @@ def q_traj_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval at its deviation argmax."""
     from proj_spark.spatial.simplify import simplify_stats
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select("domain", seq.alias("seq"), "lat", "lon")
+    t = pts.select("domain", _page_seq().alias("seq"), "lat", "lon")
     return simplify_stats(t, DP_TOL_AREA)
 
 
 def _sql_traj_simplify(n: int) -> str:
     dev = "ABS((b.x - a.x) * (p.y - a.y) - (b.y - a.y) * (p.x - a.x))"
     return f"""WITH RECURSIVE {_pages_cte(n)},
-pts AS (SELECT domain, i AS seq,
-               CAST(ROUND(lon * 1000000.0) AS BIGINT) AS x,
-               CAST(ROUND(lat * 1000000.0) AS BIGINT) AS y
-        FROM pages),
+pts AS (SELECT domain, i AS seq, {_sql_udeg_xy()} FROM pages),
 bounds AS (SELECT domain, MIN(seq) AS lo, MAX(seq) AS hi
            FROM pts GROUP BY 1),
 iv(domain, lo, hi) AS (
@@ -6502,7 +6511,7 @@ def q_hotspot_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic."""
     pts = _points(spark, sf_dir)
     n = _n_pages(sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
+    seq = _page_seq()
     # floor((seq*B)/n) on doubles is exact here: seq*B < 2^53 and a
     # non-integer quotient sits >= 1/n from the next integer, far above
     # double rounding error — so it equals the oracle's integer // .
@@ -6799,14 +6808,11 @@ def q_semivariogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scan, no theta join.  The squared z-difference is symmetric, so
     candidate pair order is irrelevant.
 
-    FULL SQL ORACLE (_sql_semivariogram): the unpruned theta join with
-    the same CASE bucketing and integer statistics."""
+    FULL SQL ORACLE (_sql_semivariogram): the full 3x3-cell box-pair
+    join (_sql_udeg_pairs) with the same CASE bucketing and integer
+    statistics."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select(
-        seq.alias("pid"),
-        F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-        F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+    t = pts.select(_page_seq().alias("pid"), *_udeg_xy())
     t = t.withColumn("z", _semivar_z(F.col("x"), F.col("y")))
     # inline, not _udeg_pairs' `d`: a thrice-read column would keep an
     # extra Project in the plan
@@ -6829,19 +6835,13 @@ def q_semivariogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_semivariogram(n: int) -> str:
     S = SEMIVAR_LAGS[-1]
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT i AS pid,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
-      FROM pages),
+t AS (SELECT i AS pid, {_sql_udeg_xy()} FROM pages),
 tz AS (SELECT pid, x, y,
               ((x + 180000000) // {SEMIVAR_ZCELL}) * 3
               + ((y + 90000000) // {SEMIVAR_ZCELL}) * 5 AS z
        FROM t),
-p AS (SELECT GREATEST(ABS(a.x - b.x), ABS(a.y - b.y)) AS d,
-             (a.z - b.z) * (a.z - b.z) AS sq
-      FROM tz a JOIN tz b
-        ON a.pid < b.pid
-       AND ABS(a.x - b.x) <= {S} AND ABS(a.y - b.y) <= {S})
+{_sql_udeg_pairs("tz", S, ("z",))},
+p AS (SELECT d, (a_z - b_z) * (a_z - b_z) AS sq FROM pairs)
 SELECT CAST(CASE WHEN d <= {SEMIVAR_LAGS[0]} THEN {SEMIVAR_LAGS[0]}
                  WHEN d <= {SEMIVAR_LAGS[1]} THEN {SEMIVAR_LAGS[1]}
                  ELSE {SEMIVAR_LAGS[2]} END AS BIGINT) AS lag_udeg,
@@ -6886,8 +6886,7 @@ def q_url_edit_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_url_edit_pairs): the same deletion expansion
     via range+substr in DuckDB, raw-string join, DuckDB levenshtein."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    u = pts.select(seq.alias("pid"),
+    u = pts.select(_page_seq().alias("pid"),
                    F.expr("substring(url, 9)").alias("s"))
     sig = (u.select("pid", "s", F.explode(F.concat(
         F.array(F.col("s")),
@@ -6972,13 +6971,8 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches of the kernel's symmetrization, and (lazily) each
     # round's broadcast — without this the upstream distinct over the
     # full link graph re-runs ~6x (measured 14 s -> ~5 s at sf0.1)
-    und = (_domain_links(spark, sf_dir)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .where((F.col("a") * 1000003 + F.col("b"))
-                  % KCORE_SAMPLE_MOD == 0)
-           .persist())
+    und = undirected(_domain_links(spark, sf_dir),
+                     KCORE_SAMPLE_MOD).persist()
     # one-row relation, materialized ONCE so the per-round broadcasts
     # reuse it instead of re-deriving the whole edge pipeline
     k = (und.select(F.explode(F.array("a", "b")).alias("u"))
@@ -7000,10 +6994,7 @@ e{r} AS (SELECT e.u, e.v FROM e{r-1} e
          JOIN v{r} x ON e.u = x.u JOIN v{r} y ON e.v = y.u)""")
     chain = ",\n".join(rounds)
     return f"""WITH {_links_cte(n)},
-und AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {KCORE_SAMPLE_MOD} = 0),
+{_sql_und(KCORE_SAMPLE_MOD)},
 e0 AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 kv AS (SELECT COUNT(*) // COUNT(DISTINCT u) + 1 AS kval FROM e0),
 {chain}
@@ -7033,8 +7024,7 @@ def q_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_cocitation): identical cap + join + HAVING
     over the independently re-derived edge set."""
     e = (_domain_links(spark, sf_dir).distinct()
-         .where((F.col("src") * 1000003 + F.col("dst"))
-                % COCITE_SAMPLE_MOD == 0))
+         .where(edge_sample("src", "dst", COCITE_SAMPLE_MOD)))
     odeg = e.groupBy("src").agg(F.count("*").alias("od"))
     kept = e.join(
         F.broadcast(odeg.where(F.col("od") <= COCITE_OUTDEG_CAP)
@@ -7052,7 +7042,7 @@ def _sql_cocitation(n: int) -> str:
     return f"""WITH {_links_cte(n)},
 ed AS (SELECT DISTINCT src, dst FROM links),
 es AS (SELECT src, dst FROM ed
-       WHERE (src * 1000003 + dst) % {COCITE_SAMPLE_MOD} = 0),
+       WHERE {_sql_edge_sample('src', 'dst', COCITE_SAMPLE_MOD)}),
 odeg AS (SELECT src, COUNT(*) AS od FROM es GROUP BY 1),
 kept AS (SELECT es.src, es.dst FROM es JOIN odeg USING (src)
          WHERE od <= {COCITE_OUTDEG_CAP}),
@@ -7111,8 +7101,6 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("lift").desc(), "x", "y").limit(PMI_TOPK))
 
 
-_SQL_TOKS = ("list_filter(regexp_split_to_array(trim(lower(text)), "
-             "'\\s+'), x -> x != '')")
 
 
 def _sql_token_pmi() -> str:
@@ -7342,13 +7330,7 @@ def q_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_link_pred): identical sample, cap, wedge
     join, and division."""
-    und = (_domain_links(spark, sf_dir)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .where((F.col("a") * 1000003 + F.col("b"))
-                  % LP_SAMPLE_MOD == 0)
-           .persist())
+    und = undirected(_domain_links(spark, sf_dir), LP_SAMPLE_MOD).persist()
     sym = (und.select(F.col("a").alias("z"), F.col("b").alias("nbr"))
            .union(und.select(F.col("b").alias("z"),
                              F.col("a").alias("nbr"))))
@@ -7378,10 +7360,7 @@ def q_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_link_pred(n: int) -> str:
     return f"""WITH {_links_cte(n)},
-und AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {LP_SAMPLE_MOD} = 0),
+{_sql_und(LP_SAMPLE_MOD)},
 sym AS (SELECT a AS z, b AS nbr FROM und
         UNION ALL SELECT b, a FROM und),
 deg AS (SELECT z, CAST(COUNT(*) AS BIGINT) AS deg FROM sym GROUP BY 1),
@@ -7425,13 +7404,8 @@ def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_stay_points): identical windows + agg."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select(
-        "domain", seq.alias("seq"),
-        (F.round(F.col("lon") * 1e6, 0).cast("long")
-         + F.lit(180_000_000)).alias("x"),
-        (F.round(F.col("lat") * 1e6, 0).cast("long")
-         + F.lit(90_000_000)).alias("y"))
+    t = pts.select("domain", _page_seq().alias("seq"),
+                   *_udeg_xy(shift=True))
     w = Window.partitionBy("domain").orderBy("seq")
     brk = F.when(F.lag("x").over(w).isNull(), F.lit(0)).when(
         F.greatest(F.abs(F.col("x") - F.lag("x").over(w)),
@@ -7456,10 +7430,7 @@ def q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_stay_points(n: int) -> str:
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT domain, i AS seq,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) + 180000000 AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) + 90000000 AS y
-      FROM pages),
+t AS (SELECT domain, i AS seq, {_sql_udeg_xy(shift=True)} FROM pages),
 l AS (SELECT domain, seq, x, y,
              LAG(x) OVER (PARTITION BY domain ORDER BY seq) AS px,
              LAG(y) OVER (PARTITION BY domain ORDER BY seq) AS py
@@ -7611,7 +7582,7 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_label_prop): the same rounds as CTE pairs."""
     und = _lpa_und(spark, sf_dir)
-    sym = _lpa_sym(und)
+    sym = _sym(und)
     lab = _lpa_labels(sym)
     return (lab.groupBy("lab").agg(F.count("*").alias("n_nodes"))
             .select(F.col("lab").cast("long").alias("community"),
@@ -7630,16 +7601,11 @@ def _lpa_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     CacheManager keys the entry by canonicalized plan, so label_prop
     and modularity share ONE copy per (corpus, sample) — the same
     amortization _ngram_jaccard documents."""
-    return (_domain_links(spark, sf_dir)
-            .select(F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"))
-            .distinct()
-            .where((F.col("a") * 1000003 + F.col("b"))
-                   % LPA_SAMPLE_MOD == 0)
-            .persist())
+    return undirected(_domain_links(spark, sf_dir), LPA_SAMPLE_MOD).persist()
 
 
-def _lpa_sym(und: DataFrame) -> DataFrame:
+def _sym(und: DataFrame) -> DataFrame:
+    """Both orientations (u, v) of the undirected edges (a, b)."""
     return (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
             .union(und.select(F.col("b").alias("u"),
                               F.col("a").alias("v"))))
@@ -7674,10 +7640,7 @@ lab{r} AS (SELECT u, lab FROM (
         WHERE rn = 1)""")
     chain = ",\n".join(rounds)
     return f"""{_links_cte(n)},
-und AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {LPA_SAMPLE_MOD} = 0),
+{_sql_und(LPA_SAMPLE_MOD)},
 sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 lab0 AS (SELECT DISTINCT u, u AS lab FROM sym),
 {chain}"""
@@ -8003,8 +7966,7 @@ def _sql_dsir_weights() -> str:
     return f"""WITH tok AS (
   SELECT CAST(doc_id AS BIGINT) AS doc_id,
          CASE WHEN lang = '{DSIR_LANG}' THEN 1 ELSE 0 END AS tgt,
-         list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                     t -> t != '') AS a
+         {_SQL_TOKS} AS a
   FROM documents
 ), feat AS (
   SELECT doc_id, tgt, unnest(a) AS f FROM tok
@@ -8164,11 +8126,7 @@ uv AS (
                             AS DOUBLE)) * 5e5, 0) AS BIGINT) AS u,
          CAST(ROUND(LN(CAST(n_hops AS DOUBLE)) * 1e6, 0) AS BIGINT) AS v
   FROM od),
-a AS (SELECT COUNT(*) AS n_pts, CAST(SUM(u) AS BIGINT) AS su,
-             CAST(SUM(v) AS BIGINT) AS sv,
-             CAST(SUM((u * u) // 1000000) AS BIGINT) AS suuq,
-             CAST(SUM((u * v) // 1000000) AS BIGINT) AS suvq
-      FROM uv)
+{_SQL_FIT_SUMS}
 SELECT n_pts, su, sv, suuq, suvq,{_SQL_FIT}
 FROM a"""
 
@@ -8258,10 +8216,8 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_theil_sen() -> str:
-    return """WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), pr AS (
+    return f"""WITH {_sql_hourly()},
+pr AS (
   SELECT b.y - a.y AS dy, b.x - a.x AS dx
   FROM ser a JOIN ser b ON a.x < b.x
 ), sl AS (
@@ -8473,10 +8429,8 @@ def q_acf_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_acf_hours() -> str:
-    return f"""WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1
-), lags AS (SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag),
+    return f"""WITH {_sql_hourly()},
+lags AS (SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag),
 j AS (
   SELECT l.lag, a.y AS ya, b.y AS yb
   FROM ser a CROSS JOIN lags l JOIN ser b ON a.x + l.lag = b.x
@@ -8527,7 +8481,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring."""
     from proj_spark.graph import modularity
     und = _lpa_und(spark, sf_dir)
-    lab = _lpa_labels(_lpa_sym(und))
+    lab = _lpa_labels(_sym(und))
     return modularity(und, lab)
 
 
@@ -8577,11 +8531,7 @@ def q_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caching the skinny directed edge list keeps the corpus synthesis
     # to ONE pass per (corpus) via the plan-keyed cache.
     links = _domain_links(spark, sf_dir).persist()
-    und = (links.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .where(F.col("a") != F.col("b")).distinct()
-           .where((F.col("a") * 1000003 + F.col("b"))
-                  % TRI_SAMPLE_MOD == 0))
+    und = undirected(links, TRI_SAMPLE_MOD)
     deg = (und.select(F.col("a").alias("domain"))
            .union(und.select("b"))
            .groupBy("domain").agg(F.count("*").alias("deg")))
@@ -8599,16 +8549,8 @@ def q_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_clustering_coef(n: int) -> str:
     return f"""WITH {_links_cte(n)},
-und AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {TRI_SAMPLE_MOD} = 0),
-tri AS (
-  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-  FROM und e1
-  JOIN und e2 ON e2.a = e1.a AND e2.b > e1.b
-  JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b
-),
+{_sql_und(TRI_SAMPLE_MOD)},
+{_SQL_TRI},
 tc AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS n_tri
        FROM (SELECT x AS node FROM tri
              UNION ALL SELECT y FROM tri
@@ -8633,11 +8575,7 @@ def _full_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     (symmetric union, degree joins); without the barrier each reference
     re-runs the corpus synthesis (assortativity measured 28.8 s -> 3.4 s
     at sf0.1).  Plan-keyed cache — both consumers share one copy."""
-    return (_domain_links(spark, sf_dir)
-            .select(F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"))
-            .where(F.col("a") != F.col("b")).distinct()
-            .persist())
+    return undirected(_domain_links(spark, sf_dir)).persist()
 
 
 def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8659,9 +8597,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_assortativity)."""
     und = _full_und(spark, sf_dir)
-    sym = (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .union(und.select(F.col("b").alias("u"),
-                             F.col("a").alias("v"))))
+    sym = _sym(und)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     du = deg.select(F.col("u"), F.col("d").alias("dx"))
     dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dy"))
@@ -8686,8 +8622,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_assortativity(n: int) -> str:
     return f"""WITH {_links_cte(n)},
-und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM links),
+{_sql_und()},
 sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY 1),
 inc AS (SELECT du.d AS dx, dv.d AS dy
@@ -8794,11 +8729,7 @@ uv AS (SELECT
          CAST(ROUND(LN(CAST(cum_tok AS DOUBLE)) * 1e6, 0) AS BIGINT) AS u,
          CAST(ROUND(LN(CAST(cum_vocab AS DOUBLE)) * 1e6, 0) AS BIGINT) AS v
        FROM cum),
-a AS (SELECT COUNT(*) AS n_pts, CAST(SUM(u) AS BIGINT) AS su,
-             CAST(SUM(v) AS BIGINT) AS sv,
-             CAST(SUM((u * u) // 1000000) AS BIGINT) AS suuq,
-             CAST(SUM((u * v) // 1000000) AS BIGINT) AS suvq
-      FROM uv)
+{_SQL_FIT_SUMS}
 SELECT n_pts, su, sv, suuq, suvq,{_SQL_FIT}
 FROM a"""
 
@@ -8840,10 +8771,8 @@ def q_vocab_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_vocab_richness() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
     return f"""WITH tk AS (
-  SELECT unnest({toks}) AS tok FROM documents),
+  SELECT unnest({_sql_toks()}) AS tok FROM documents),
 cnts AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM tk GROUP BY 1),
 a AS (SELECT CAST(COUNT(*) AS BIGINT) AS v_types,
              CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -9072,8 +9001,7 @@ def q_cusum_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_cusum_hours)."""
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev)
     w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
     r = ser.select("x",
                    F.sum("y").over(w).alias("p"),
@@ -9097,9 +9025,7 @@ def q_cusum_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_cusum_hours() -> str:
-    return """WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly()},
 r AS (SELECT x,
              SUM(y) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS p,
              ROW_NUMBER() OVER (ORDER BY x) AS i
@@ -9130,8 +9056,7 @@ def q_fano_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny lattice, the single-row horizon broadcast in — the corpus
     shuffles once.  FULL SQL ORACLE (_sql_fano_hours)."""
     ev = _events_micros(spark, sf_dir)
-    cell = (ev.select("event_type", F.expr("tm div 3600000000").alias("x"))
-            .groupBy("event_type", "x").agg(F.count("*").alias("c")))
+    cell = _hourly(ev, "event_type", count="c")
     q = cell.agg((F.max("x") - F.min("x") + 1).alias("q_hours"))
     per = cell.groupBy("event_type").agg(
         F.sum("c").alias("n_events"),
@@ -9151,10 +9076,7 @@ def q_fano_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_fano_hours() -> str:
-    return """WITH cell AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS x,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
+    return f"""WITH {_sql_hourly("cell", "event_type", count="c")},
 q AS (SELECT CAST(MAX(x) - MIN(x) + 1 AS BIGINT) AS q_hours FROM cell),
 per AS (SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_events,
                CAST(SUM(c * c) AS BIGINT) AS s_xx
@@ -9209,8 +9131,7 @@ def q_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_rich_club(n: int) -> str:
     ks = ", ".join(str(k) for k in RICH_KS)
     return f"""WITH {_links_cte(n)},
-und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-        FROM links),
+{_sql_und()},
 deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d
         FROM (SELECT a AS u FROM und UNION ALL SELECT b FROM und)
         GROUP BY 1),
@@ -9280,9 +9201,7 @@ def q_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bigram_entropy() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "x -> x != '')")
-    return f"""WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
+    return f"""WITH t AS (SELECT doc_id, {_sql_toks()} AS toks FROM documents),
 bgl AS (
   SELECT unnest([{{'w1': toks[i+1], 'bg': toks[i+1] || ' ' || toks[i+2]}}
                  for i in generate_series(0, len(toks) - 2)]) AS b
@@ -9426,6 +9345,14 @@ def _sql_year_us(expr: str) -> str:
     return f"(1995 + {terms})"
 
 
+def _supplier_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """supplier rows joined with their (broadcast) nation row."""
+    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    return (spark.read.parquet(f"{sf_dir}/supplier.parquet")
+            .join(F.broadcast(nat),
+                  F.col("s_nationkey") == F.col("n_nationkey")))
+
+
 _REV_C2 = """CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
          * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))"""
 
@@ -9459,9 +9386,7 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_volume_shipping): identical joins+gates."""
     nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    sup = (spark.read.parquet(f"{sf_dir}/supplier.parquet")
-           .join(F.broadcast(nat),
-                 F.col("s_nationkey") == F.col("n_nationkey"))
+    sup = (_supplier_nation(spark, sf_dir)
            .where(F.col("n_name").isin(_Q7_NAT_A, _Q7_NAT_B))
            .select("s_suppkey", F.col("n_name").alias("supp_nation")))
     cust = (spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -9556,9 +9481,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("o_orderkey", "o_year"))
     part = (spark.read.parquet(f"{sf_dir}/part.parquet")
             .where(F.col("p_type") == _Q8_TYPE).select("p_partkey"))
-    sup = (spark.read.parquet(f"{sf_dir}/supplier.parquet")
-           .join(F.broadcast(nat),
-                 F.col("s_nationkey") == F.col("n_nationkey"))
+    sup = (_supplier_nation(spark, sf_dir)
            .select("s_suppkey", F.col("n_name").alias("supp_nation")))
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     items = (li.select("l_orderkey", "l_partkey", "l_suppkey",
@@ -9626,14 +9549,11 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     |nations| x |years| rows.
 
     FULL SQL ORACLE (_sql_product_profit)."""
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
     part = (spark.read.parquet(f"{sf_dir}/part.parquet")
             .where(F.col("p_name").like(_Q9_NAME_PAT))
             .select("p_partkey",
                     _money_cents(F.col("p_retailprice")).alias("retail_c")))
-    sup = (spark.read.parquet(f"{sf_dir}/supplier.parquet")
-           .join(F.broadcast(nat),
-                 F.col("s_nationkey") == F.col("n_nationkey"))
+    sup = (_supplier_nation(spark, sf_dir)
            .select("s_suppkey", F.col("n_name").alias("supp_nation")))
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     orders = o.select(
@@ -10228,11 +10148,8 @@ def q_min_cost_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = (spark.read.parquet(f"{sf_dir}/part.parquet")
              .where(F.col("p_size") == _Q2_SIZE)
              .select(F.col("p_partkey").cast("long").alias("p_partkey")))
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
     reg = spark.read.parquet(f"{sf_dir}/region.parquet")
-    sup = (spark.read.parquet(f"{sf_dir}/supplier.parquet")
-           .join(F.broadcast(nat),
-                 F.col("s_nationkey") == F.col("n_nationkey"))
+    sup = (_supplier_nation(spark, sf_dir)
            .join(F.broadcast(reg),
                  F.col("n_regionkey") == F.col("r_regionkey"))
            .where(F.col("r_name") == _Q2_REGION)
@@ -10294,10 +10211,7 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_important_stock)."""
     ps = _partsupp(spark, sf_dir)
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    sup = (spark.read.parquet(f"{sf_dir}/supplier.parquet")
-           .join(F.broadcast(nat),
-                 F.col("s_nationkey") == F.col("n_nationkey"))
+    sup = (_supplier_nation(spark, sf_dir)
            .where(F.col("n_name") == _Q11_NATION)
            .select(F.col("s_suppkey").cast("long").alias("s_suppkey")))
     val = (ps.join(F.broadcast(sup),
@@ -10368,10 +10282,7 @@ def q_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                     & (F.col("ps_suppkey") == F.col("sh_sk")), "left")
               .where(2 * F.col("ps_availqty")
                      > F.coalesce(F.col("sh_qty"), F.lit(0))))
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    sup = (spark.read.parquet(f"{sf_dir}/supplier.parquet")
-           .join(F.broadcast(nat),
-                 F.col("s_nationkey") == F.col("n_nationkey"))
+    sup = (_supplier_nation(spark, sf_dir)
            .where(F.col("n_name") == _Q20_NATION)
            .select(F.col("s_suppkey").cast("long").alias("s_suppkey"),
                    "s_name"))
@@ -10458,7 +10369,7 @@ def q_wcc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds (labels start as node ids; every node takes the min over
     itself and its neighbors).  The full domain graph is one giant
     blob (~92k edges on 1k nodes at sf0.01), so a deterministic edge
-    sample — (a*1000003+b) % WCC_SAMPLE_MOD == 0, the kcore/LPA
+    sample — `edge_sample` at 1/WCC_SAMPLE_MOD, the kcore/LPA
     discipline — exposes real component structure; the fixed-round
     result is deterministic and SQL-unrollable (components of diameter
     <= R are exactly labeled; larger ones are the defined R-round
@@ -10470,12 +10381,9 @@ def q_wcc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     label_prop/shortest_paths.
 
     FULL SQL ORACLE (_sql_wcc_sizes): the same rounds as CTEs."""
-    und = (_full_und(spark, sf_dir)
-           .where((F.col("a") * 1000003 + F.col("b"))
-                  % WCC_SAMPLE_MOD == 0))
-    sym = (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .union(und.select(F.col("b").alias("u"),
-                             F.col("a").alias("v"))))
+    und = _full_und(spark, sf_dir).where(
+        edge_sample("a", "b", WCC_SAMPLE_MOD))
+    sym = _sym(und)
     lab = sym.select("u").distinct().select(
         "u", F.col("u").alias("lab"))
     lab = _min_label_rounds(sym, lab, WCC_ROUNDS)
@@ -10486,10 +10394,7 @@ def q_wcc_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_wcc_sizes(n: int) -> str:
     return f"""WITH {_links_cte(n)},
-und AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {WCC_SAMPLE_MOD} = 0),
+{_sql_und(WCC_SAMPLE_MOD)},
 sym AS MATERIALIZED (
   SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
 lab0 AS MATERIALIZED (SELECT DISTINCT u, u AS lab FROM sym),
@@ -10543,9 +10448,7 @@ def q_cell_components(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.col("tid2").alias("b"))
              .union(south.select(F.col("tid").alias("a"),
                                  F.col("tid2").alias("b"))))
-    sym = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .union(edges.select(F.col("b").alias("u"),
-                               F.col("a").alias("v"))))
+    sym = _sym(edges)
     lab = occ.select(F.col("tid").alias("u"),
                      F.col("tid").alias("lab"))
     lab = _min_label_rounds(sym, lab, CC_ROUNDS)
@@ -10656,9 +10559,7 @@ def q_jsd_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_jsd_sources() -> str:
     return f"""WITH toks AS (
-  SELECT source, unnest(list_filter(
-           regexp_split_to_array(trim(lower(text)), '\\s+'),
-           t -> t != '')) AS token
+  SELECT source, unnest({_SQL_TOKS}) AS token
   FROM documents),
 hist AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c
          FROM toks GROUP BY 1, 2),
@@ -10748,9 +10649,7 @@ def q_odds_ratio_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_odds_ratio_terms() -> str:
     return f"""WITH toks AS (
-  SELECT lang, unnest(list_filter(
-           regexp_split_to_array(trim(lower(text)), '\\s+'),
-           t -> t != '')) AS token
+  SELECT lang, unnest({_SQL_TOKS}) AS token
   FROM documents WHERE lang IN ('{ODDS_LANG_A}', '{ODDS_LANG_B}')),
 cell AS (
   SELECT token,
@@ -10840,9 +10739,7 @@ def q_stl_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_stl_hours() -> str:
-    return f"""WITH ser0 AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly("ser0")},
 mm AS (SELECT MIN(x) AS mn, MAX(x) AS mx FROM ser0),
 spine AS (SELECT unnest(generate_series(mn, mx)) AS x, mn, mx FROM mm),
 ser AS (SELECT spine.x AS x, mn, mx, COALESCE(y, 0) AS y
@@ -10903,8 +10800,7 @@ def q_tok_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_tok_fertility() -> str:
     return f"""WITH per AS (
   SELECT lang,
-         len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         t -> t != '')) AS n_ws,
+         len({_SQL_TOKS}) AS n_ws,
          len(regexp_extract_all(lower(text), '{analysis.BPE_PATTERN}'))
            AS n_bpe
   FROM documents)
@@ -10993,8 +10889,7 @@ def q_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_linreg() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
+    toks = _sql_toks()
     return f"""WITH per AS (
   SELECT CAST(len(text) AS BIGINT) AS x1,
          CAST(len(list_filter({toks}, t -> len(t) >= 5)) AS BIGINT) AS x2,
@@ -11106,10 +11001,8 @@ def q_nb_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_nb_lang() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
     return f"""WITH tk AS (
-  SELECT doc_id, lang, unnest({toks}) AS tok FROM documents),
+  SELECT doc_id, lang, unnest({_sql_toks()}) AS tok FROM documents),
 vocab AS (SELECT tok FROM (
   SELECT tok, COUNT(*) AS cnt FROM tk GROUP BY 1
   ORDER BY cnt DESC, tok LIMIT {NB_V})),
@@ -11213,9 +11106,7 @@ def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_textrank() -> str:
     from proj_spark.graph import pagerank_sql
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
-    edges_cte = f"""t AS (SELECT {toks} AS toks FROM documents),
+    edges_cte = f"""t AS (SELECT {_sql_toks()} AS toks FROM documents),
 bgl AS (
   SELECT unnest([{{'a': toks[i+1], 'b': toks[i+2]}}
                  for i in generate_series(0, len(toks) - 2)]) AS p
@@ -11258,13 +11149,8 @@ def q_bearing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_bearing_stats)."""
     pts = _points(spark, sf_dir)
-    seq = F.regexp_extract("url", r"/page/(\d+)$", 1).cast("long")
-    t = pts.select(
-        "domain", seq.alias("seq"),
-        (F.round(F.col("lon") * 1e6, 0).cast("long")
-         + F.lit(180_000_000)).alias("x"),
-        (F.round(F.col("lat") * 1e6, 0).cast("long")
-         + F.lit(90_000_000)).alias("y"))
+    t = pts.select("domain", _page_seq().alias("seq"),
+                   *_udeg_xy(shift=True))
     w = Window.partitionBy("domain").orderBy("seq")
     hops = (t.select("domain", "x", "y",
                      F.lead("x").over(w).alias("x2"),
@@ -11298,10 +11184,7 @@ def q_bearing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_bearing_stats(n: int) -> str:
     return f"""WITH {_pages_cte(n)},
-t AS (SELECT domain, i AS seq,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) + 180000000 AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) + 90000000 AS y
-      FROM pages),
+t AS (SELECT domain, i AS seq, {_sql_udeg_xy(shift=True)} FROM pages),
 hops AS (SELECT domain, x, y,
                 LEAD(x) OVER (PARTITION BY domain ORDER BY seq) AS x2,
                 LEAD(y) OVER (PARTITION BY domain ORDER BY seq) AS y2
@@ -11365,8 +11248,7 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_periodogram)."""
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev)
     phases = spark.createDataFrame(PG_PHASES,
                                    "period long, r long, qc long, qs long")
     periods = spark.createDataFrame([(p,) for p in PG_PERIODS],
@@ -11397,9 +11279,7 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_periodogram() -> str:
     rows = ", ".join(f"({p}, {r}, {qc}, {qs})"
                      for p, r, qc, qs in PG_PHASES)
-    return f"""WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly()},
 ph(period, r, qc, qs) AS (VALUES {rows}),
 ex AS (SELECT ph.period, y, qc, qs
        FROM ser JOIN ph ON ser.x % ph.period = ph.r),
@@ -11613,11 +11493,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_kmeans)."""
     pts = _points(spark, sf_dir)
-    lat = (pts.select(
-        (F.round(F.col("lon") * 1e6, 0).cast("long")
-         + F.lit(180_000_000)).alias("x"),
-        (F.round(F.col("lat") * 1e6, 0).cast("long")
-         + F.lit(90_000_000)).alias("y"))
+    lat = (pts.select(*_udeg_xy(shift=True))
         .groupBy("x", "y").agg(F.count("*").alias("w"))
         .persist())
     cents = _km_init()
@@ -11670,8 +11546,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_kmeans(n: int) -> str:
     seeds = ", ".join(f"({j}, {cx}, {cy})" for j, cx, cy in _km_init())
     parts = [f"""{_pages_cte(n)},
-lat AS (SELECT CAST(ROUND(lon * 1e6, 0) AS BIGINT) + 180000000 AS x,
-               CAST(ROUND(lat * 1e6, 0) AS BIGINT) + 90000000 AS y,
+lat AS (SELECT {_sql_udeg_xy(shift=True)},
                CAST(COUNT(*) AS BIGINT) AS w
         FROM pages GROUP BY 1, 2),
 c0(j, cx, cy) AS (VALUES {seeds})"""]
@@ -11828,8 +11703,7 @@ def q_quality_forest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_quality_forest() -> str:
-    toks = ("list_filter(regexp_split_to_array(trim(text), '\\s+'), "
-            "t -> t != '')")
+    toks = _sql_toks()
     fexpr = [
         "CAST(len(text) AS BIGINT)",
         f"CAST(len({toks}) AS BIGINT)",
@@ -11907,7 +11781,10 @@ def _markov_chain(spark: SparkSession, sf_dir: str
     return e, pi
 
 
-def _sql_markov_stationary() -> str:
+def _sql_markov_chain() -> list[str]:
+    """SQL twin of `_markov_chain`: the CTEs e(f, t, n, row_total),
+    types(typ) and the power-iteration rounds p0..p{MS_ROUNDS}(typ,
+    score)."""
     parts = ["""ev AS (SELECT user_id, event_type, event_id,
              epoch_us(ts) AS tm FROM events)""",
              """mat AS (SELECT event_type AS f,
@@ -11915,11 +11792,12 @@ def _sql_markov_stationary() -> str:
                                       ORDER BY tm, event_id) AS t,
                user_id, tm FROM ev)""",
              """e0 AS (SELECT f, t, CAST(COUNT(*) AS BIGINT) AS n
-        FROM mat WHERE t IS NOT NULL GROUP BY 1, 2)""",
-             """tt AS (SELECT f, SUM(n) AS row_total FROM e0 GROUP BY 1)""",
-             """e AS (SELECT e0.f, e0.t, e0.n, tt.row_total
-      FROM e0 JOIN tt USING (f))""",
-             """types AS (SELECT DISTINCT f AS typ FROM e0)""",
+       FROM mat WHERE t IS NOT NULL GROUP BY 1, 2)""",
+             """rt AS (SELECT f, CAST(SUM(n) AS BIGINT) AS row_total
+       FROM e0 GROUP BY 1)""",
+             "e AS (SELECT e0.f, e0.t, e0.n, rt.row_total "
+             "FROM e0 JOIN rt USING (f))",
+             "types AS (SELECT DISTINCT f AS typ FROM e)",
              f"""p0 AS (SELECT typ, CAST({MS_INIT} AS BIGINT) AS score
        FROM types)"""]
     for r in range(1, MS_ROUNDS + 1):
@@ -11931,7 +11809,11 @@ def _sql_markov_stationary() -> str:
             f"""p{r} AS (SELECT types.typ,
         CAST(COALESCE(m.m, 0) AS BIGINT) AS score
  FROM types LEFT JOIN m{r} m ON m.typ = types.typ)""")
-    return ("WITH " + ",\n".join(parts)
+    return parts
+
+
+def _sql_markov_stationary() -> str:
+    return ("WITH " + ",\n".join(_sql_markov_chain())
             + f"\nSELECT typ AS event_type, score AS stat_q FROM p{MS_ROUNDS}")
 
 
@@ -12072,10 +11954,7 @@ def q_frechet_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = _points(spark, sf_dir)
     t = (pts.select(F.col("domain").cast("long").alias("dom"),
-                    F.regexp_extract("url", r"/page/(\d+)$", 1)
-                    .cast("long").alias("pid"),
-                    F.round(F.col("lon") * 1e6, 0).cast("long").alias("x"),
-                    F.round(F.col("lat") * 1e6, 0).cast("long").alias("y"))
+                    _page_seq().alias("pid"), *_udeg_xy())
          .where((F.col("dom") >= FR_DOM_LO) & (F.col("dom") <= FR_DOM_HI)))
     w = Window.partitionBy("dom").orderBy("pid")
     path = t.withColumn("rn", F.row_number().over(w)) \
@@ -12097,9 +11976,7 @@ def q_frechet_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_frechet_paths(n: int) -> str:
     return f"""WITH RECURSIVE {_pages_cte(n)},
-t AS (SELECT CAST(domain AS BIGINT) AS dom, i AS pid,
-             CAST(ROUND(lon * 1e6, 0) AS BIGINT) AS x,
-             CAST(ROUND(lat * 1e6, 0) AS BIGINT) AS y
+t AS (SELECT CAST(domain AS BIGINT) AS dom, i AS pid, {_sql_udeg_xy()}
       FROM pages
       WHERE CAST(domain AS BIGINT) BETWEEN {FR_DOM_LO} AND {FR_DOM_HI}),
 path AS (SELECT dom, x, y,
@@ -12271,8 +12148,7 @@ def q_ewma_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_ewma_hours)."""
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev)
     contrib = (ser.withColumn("k", F.explode(F.sequence(
         F.lit(1), F.lit(EWMA_K))))
         .select((F.col("x") + F.col("k")).alias("tx"),
@@ -12295,9 +12171,7 @@ def q_ewma_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_ewma_hours() -> str:
     wsum = (1 << EWMA_K) - 1
-    return f"""WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly()},
 contrib AS (
   SELECT s.x + k.k AS tx, s.y << CAST({EWMA_K} - k.k AS INT) AS w
   FROM ser s CROSS JOIN (SELECT unnest(generate_series(1, {EWMA_K})) AS k) k),
@@ -12413,8 +12287,7 @@ def q_holt_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_holt_hours)."""
     K = HOLT_K
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev)
     c1 = (ser.withColumn("k", F.explode(F.sequence(F.lit(1), F.lit(K))))
           .select((F.col("x") + F.col("k")).alias("tx"),
                   F.expr(f"CAST(shiftleft(y, CAST({K} - k AS INT)) "
@@ -12449,9 +12322,7 @@ def q_holt_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_holt_hours() -> str:
     K = HOLT_K
     w = (1 << K) - 1
-    return f"""WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly()},
 c1 AS (
   SELECT s.x + k.k AS tx, s.y << CAST({K} - k.k AS INT) AS w
   FROM ser s CROSS JOIN (SELECT unnest(generate_series(1, {K})) AS k) k),
@@ -12497,8 +12368,7 @@ def q_ccf_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_ccf_types)."""
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select("event_type", F.expr("tm div 3600000000").alias("x"))
-           .groupBy("event_type", "x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev, "event_type")
     ranked = (ser.groupBy("event_type").agg(F.sum("y").alias("n_tot"))
               .withColumn("rk", F.row_number().over(
                   Window.orderBy(F.col("n_tot").desc(), "event_type"))))
@@ -12548,10 +12418,7 @@ def q_ccf_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ccf_types() -> str:
-    return f"""WITH ser AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS x,
-         CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1, 2),
+    return f"""WITH {_sql_hourly(key="event_type")},
 ranked AS (
   SELECT event_type, ROW_NUMBER() OVER (ORDER BY SUM(y) DESC, event_type)
            AS rk
@@ -12656,8 +12523,7 @@ def q_stylometry(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_stylometry() -> str:
     return f"""WITH tok AS (
   SELECT source,
-         unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS token
+         unnest({_SQL_TOKS}) AS token
   FROM documents),
 cnt AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c
         FROM tok GROUP BY 1, 2),
@@ -12766,28 +12632,14 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate max(C_ab, C_ba) >= {CONT_NUM}/{CONT_DEN} is evaluated in
     integers (n_inter * {CONT_DEN} >= {CONT_NUM} * least(na, nb)).
 
-    Plan: identical scale shape to _ngram_jaccard (shuffle-on-shingle
-    with the document-frequency cap bounding per-key pair fan-out);
+    Plan: _ngram_jaccard's _shingle_overlap (shuffle-on-shingle with
+    the document-frequency cap bounding per-key pair fan-out);
     the plan-keyed cache shares ONE materialized shingle relation with
     ngram_pairs/dedup_groups when they run in the same session.
 
     FULL SQL ORACLE (_sql_containment)."""
-    sh = _capped_shingles(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .groupBy(F.col("a.doc_id").alias("id_a"),
-                      F.col("b.doc_id").alias("id_b"))
-             .agg(F.count("*").alias("n_inter")))
-    sa = sizes.select(F.col("doc_id").alias("id_a"),
-                      F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"),
-                      F.col("n_sh").alias("nb"))
-    j = (inter.join(F.broadcast(sa), "id_a").join(F.broadcast(sb), "id_b")
-         .where(F.expr(f"n_inter * {CONT_DEN} >= "
-                       f"{CONT_NUM} * least(na, nb)")))
+    j = _shingle_overlap(spark, sf_dir).where(
+        F.expr(f"n_inter * {CONT_DEN} >= {CONT_NUM} * least(na, nb)"))
     return j.select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
@@ -12875,13 +12727,8 @@ def q_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_truss): the peel unrolled as CTE triples."""
     from proj_spark.graph import truss_peel, truss_support
-    und = (_domain_links(spark, sf_dir)
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .where((F.col("a") * 1000003 + F.col("b"))
-                  % TRUSS_SAMPLE_MOD == 0)
-           .persist())
+    und = undirected(_domain_links(spark, sf_dir),
+                     TRUSS_SAMPLE_MOD).persist()
     sup1 = truss_support(und).persist()
     k = (sup1.agg(F.expr("sum(support) div count(*) + 1")
                   .cast("long").alias("kval"))
@@ -12897,10 +12744,7 @@ def q_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_truss(n: int) -> str:
     from proj_spark.graph import truss_sql
     und_cte = f"""{_links_cte(n)},
-e0 AS (SELECT a, b FROM (
-          SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM links)
-        WHERE (a * 1000003 + b) % {TRUSS_SAMPLE_MOD} = 0)"""
+{_sql_und(TRUSS_SAMPLE_MOD, "e0")}"""
     kv_cte = "kv AS (SELECT SUM(support) // COUNT(*) + 1 AS kval FROM sup1)"
     body = truss_sql(und_cte, kv_cte, rounds=TRUSS_ROUNDS)
     return (f"SELECT CAST(a AS BIGINT) AS domain_a, "
@@ -13444,8 +13288,7 @@ def q_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_perm_entropy)."""
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev)
     hor = ser.agg(F.min("x").alias("x_min"), F.max("x").alias("x_max"))
     spine = hor.select(
         F.explode(F.sequence("x_min", "x_max")).alias("t"), "x_max")
@@ -13483,9 +13326,7 @@ def q_perm_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_perm_entropy() -> str:
-    return """WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly()},
 hor AS (SELECT MIN(x) AS x_min, MAX(x) AS x_max FROM ser),
 spine AS (SELECT unnest(generate_series(x_min, x_max)) AS t, x_max
           FROM hor),
@@ -13539,8 +13380,7 @@ def q_hurst_var(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_hurst_var)."""
     ev = _events_micros(spark, sf_dir)
-    ser = (ev.select(F.expr("tm div 3600000000").alias("x"))
-           .groupBy("x").agg(F.count("*").alias("y")))
+    ser = _hourly(ev)
     hor = ser.agg(F.min("x").alias("x_min"), F.max("x").alias("x_max"))
     spine = (hor.select(
         F.explode(F.sequence("x_min", "x_max")).alias("t"),
@@ -13579,9 +13419,7 @@ def q_hurst_var(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_hurst_var() -> str:
     arr = ", ".join(str(m) for m in HURST_SCALES)
-    return f"""WITH ser AS (
-  SELECT epoch_us(ts) // 3600000000 AS x, CAST(COUNT(*) AS BIGINT) AS y
-  FROM events GROUP BY 1),
+    return f"""WITH {_sql_hourly()},
 hor AS (SELECT MIN(x) AS x_min, MAX(x) AS x_max FROM ser),
 spine AS (
   SELECT t, x_min, x_max, COALESCE(ser.y, 0) AS y0 FROM (
@@ -13601,11 +13439,7 @@ uv AS (SELECT CAST(ROUND(LN(CAST(m AS DOUBLE)) * 1e6, 0) AS BIGINT) AS u,
               CAST(ROUND(LN(CAST((varnum * 1000) // (k * k) AS DOUBLE)
                             / 1e3) * 1e6, 0) AS BIGINT) AS v
        FROM v WHERE (varnum * 1000) // (k * k) > 0),
-a AS (SELECT COUNT(*) AS n_pts, CAST(SUM(u) AS BIGINT) AS su,
-             CAST(SUM(v) AS BIGINT) AS sv,
-             CAST(SUM((u * u) // 1000000) AS BIGINT) AS suuq,
-             CAST(SUM((u * v) // 1000000) AS BIGINT) AS suvq
-      FROM uv)
+{_SQL_FIT_SUMS}
 SELECT CAST(n_pts AS BIGINT) AS n_pts, su, sv, suuq, suvq,{_SQL_FIT},
        ROUND(slope / 2.0, 6) AS hurst
 FROM a"""
@@ -14025,11 +13859,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_mmr_rerank): the greedy rounds unrolled as
     CTE triples over the identical candidate/sim relations."""
     from proj_spark.text.similarity import cosine_expr
-    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-           .select("vec_id", F.col("embedding").cast("array<double>")
-                   .alias("embedding")))
-    qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(v) for v in qrow[0]]
+    emb, query = _embeddings_query(spark, sf_dir)
     cand = (emb.where(F.col("vec_id") != 0)
             .select(F.col("vec_id").cast("long").alias("vec_id"),
                     F.round(cosine_expr(F.col("embedding"), query) * 1e8,
@@ -14406,12 +14236,12 @@ def q_did(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FULL SQL ORACLE (_sql_did)."""
     ev = _events_micros(spark, sf_dir)
-    hor = ev.agg(F.expr("min(tm div 3600000000)").alias("x_min"),
-                 F.expr("max(tm div 3600000000)").alias("x_max"))
+    hor = ev.agg(F.expr(f"min({_HOUR})").alias("x_min"),
+                 F.expr(f"max({_HOUR})").alias("x_max"))
     cells_ = (ev.where(F.col("event_type").isin(DID_TREAT, DID_CTRL))
               .crossJoin(F.broadcast(hor))
               .select((F.col("event_type") == DID_TREAT).alias("treated"),
-                      (F.expr("tm div 3600000000")
+                      (F.expr(_HOUR)
                        >= F.expr("x_min + (x_max - x_min) div 2"))
                       .alias("late"), "cents")
               .groupBy("treated", "late")
@@ -14445,7 +14275,7 @@ def q_did(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_did() -> str:
     return f"""WITH ev AS (
   SELECT event_type, CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-         epoch_us(ts) // 3600000000 AS x
+         {_SQL_HOUR} AS x
   FROM events),
 hor AS (SELECT MIN(x) AS x_min, MAX(x) AS x_max FROM ev),
 cells AS (
@@ -14516,30 +14346,7 @@ def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_entropy_rate() -> str:
-    parts = ["""ev AS (SELECT user_id, event_type, event_id,
-             epoch_us(ts) AS tm FROM events)""",
-             """mat AS (SELECT event_type AS f,
-               LEAD(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY tm, event_id) AS t,
-               user_id, tm FROM ev)""",
-             """e0 AS (SELECT f, t, CAST(COUNT(*) AS BIGINT) AS n
-       FROM mat WHERE t IS NOT NULL GROUP BY 1, 2)""",
-             """rt AS (SELECT f, CAST(SUM(n) AS BIGINT) AS row_total
-       FROM e0 GROUP BY 1)""",
-             "e AS (SELECT e0.f, e0.t, e0.n, rt.row_total "
-             "FROM e0 JOIN rt USING (f))",
-             "types AS (SELECT DISTINCT f AS typ FROM e)",
-             f"""p0 AS (SELECT typ, CAST({MS_INIT} AS BIGINT) AS score
-       FROM types)"""]
-    for r in range(1, MS_ROUNDS + 1):
-        parts.append(
-            f"""m{r} AS (SELECT e.t AS typ,
-        SUM((p.score * e.n) // e.row_total) AS m
- FROM e JOIN p{r - 1} p ON p.typ = e.f GROUP BY 1)""")
-        parts.append(
-            f"""p{r} AS (SELECT types.typ,
-        CAST(COALESCE(m.m, 0) AS BIGINT) AS score
- FROM types LEFT JOIN m{r} m ON m.typ = types.typ)""")
+    parts = _sql_markov_chain()
     parts.append("""hf AS (
   SELECT f, row_total,
          CAST(SUM((n * CAST(ROUND(LN(CAST(row_total AS DOUBLE)

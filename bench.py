@@ -47,16 +47,9 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float],
     # then scans for hours.  Both are reported; regressions should be
     # judged on the steady number (per-query min, see below).
     progress = os.environ.get("SPARK_GRAFT_PROGRESS")
-    # SPARK_GRAFT_SKIP: comma-separated query names to leave out of this
-    # run (recorded by the caller; used for the sf1 certification where
-    # output-bound queries on the near-dup-saturated synthetic corpus
-    # are excluded with measured justification — see BASELINE.md)
-    skip = {s for s in os.environ.get("SPARK_GRAFT_SKIP", "").split(",")
-            if s}
-    headline = [n for n in HEADLINE if n not in skip]
     cold: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in headline:
+    for name in HEADLINE:
         t0 = time.time()
         try:
             df = qs[name](spark, sf_dir)
@@ -80,7 +73,7 @@ def run_queries(spark, sf_dir: str) -> tuple[dict[str, float],
     # estimator for intrinsic plan cost; steal is strictly additive, so
     # min-of-2 never flatters a plan, it only sheds interference.
     for _pass in range(2):
-        for name in headline:
+        for name in HEADLINE:
             if name in errors:
                 continue
             t0 = time.time()
@@ -154,8 +147,6 @@ def main() -> None:
     spark = get_spark("bench")
     queries, cold, errors = run_queries(spark, sf_dir)
     spark.stop()
-    skipped = [s for s in os.environ.get("SPARK_GRAFT_SKIP", "")
-               .split(",") if s]
     payload = {
         "metric": "headline suite wall time (steady state: per-query min "
                   "of 2 passes, robust to co-tenant CPU steal)",
@@ -169,7 +160,6 @@ def main() -> None:
         # each is excluded from the wall-time metric (VERDICT r3 #6:
         # make the 218-vs-headline delta self-explaining in the artifact)
         "excluded": _EXCLUDE_REASONS,
-        "skipped": skipped,
         "errors": errors,
     }
     print(json.dumps(payload))

@@ -45,7 +45,7 @@ kernels are the Newton loops inside projection inverses
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 PR_INIT = 1_000_000_000          # micro-units per node at iteration 0
@@ -175,17 +175,36 @@ def multi_bfs_hops(edges: DataFrame, seeds: DataFrame,
     return visited
 
 
+def edge_sample(a: str, b: str, sample_mod: int) -> Column:
+    """DOULION-style deterministic-hash edge sample (Tsourakakis et al.,
+    KDD'09): keep edge (a, b) iff (a * 1000003 + b) % sample_mod == 0,
+    a rate-1/sample_mod sample that every engine reproduces exactly."""
+    return (F.col(a) * 1000003 + F.col(b)) % sample_mod == 0
+
+
+def undirected(edges: DataFrame,
+               sample_mod: int | None = None) -> DataFrame:
+    """The undirected simple graph (a, b), a < b, underlying directed
+    `edges` (src, dst): direction, self-loops and duplicates dropped;
+    with `sample_mod`, only the `edge_sample` of it."""
+    und = (edges.select(F.least("src", "dst").alias("a"),
+                        F.greatest("src", "dst").alias("b"))
+           .where(F.col("a") != F.col("b")).distinct())
+    if sample_mod is None:
+        return und
+    return und.where(edge_sample("a", "b", sample_mod))
+
+
 def triangle_counts(edges: DataFrame,
                     sample_mod: int | None = None) -> DataFrame:
     """Exact per-node triangle counts of the UNDIRECTED simple graph
     underlying `edges` (direction/self-loops/duplicates dropped).
 
-    ``sample_mod``: optional DOULION-style edge sparsification
-    (Tsourakakis et al., KDD'09) — keep the canonical edge (a, b) iff
-    (a * 1000003 + b) % sample_mod == 0, i.e. a DETERMINISTIC hash
-    sample at rate p = 1/sample_mod.  Counts on the sampled graph are
-    exact and engine-reproducible; the unbiased whole-graph estimate
-    is count / p^3.  This is the standard lever when the graph is
+    ``sample_mod``: optional edge sparsification by `edge_sample`, a
+    DETERMINISTIC hash sample at rate p = 1/sample_mod of the canonical
+    edges (a, b).  Counts on the sampled graph are exact and
+    engine-reproducible; the unbiased whole-graph estimate is
+    count / p^3.  This is the standard lever when the graph is
     dense (the synthetic domain graph approaches completeness as the
     corpus grows — wedge work is Σ deg², and sampling cuts it by p²).
 
@@ -200,12 +219,7 @@ def triangle_counts(edges: DataFrame,
 
     Returns (node, n_tri) for nodes in >= 1 triangle.
     """
-    und = (edges.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .where(F.col("a") != F.col("b")).distinct())
-    if sample_mod is not None:
-        und = und.where(
-            (F.col("a") * 1000003 + F.col("b")) % sample_mod == 0)
+    und = undirected(edges, sample_mod)
     deg = (und.select(F.col("a").alias("node"))
            .union(und.select("b"))
            .groupBy("node").agg(F.count("*").alias("d")))
@@ -509,23 +523,26 @@ def truss_peel(und: DataFrame, k: DataFrame, rounds: int = 3,
 
 def truss_sql(und_cte: str, kv_cte: str, rounds: int = 3) -> str:
     """DuckDB twin of `truss_peel`: unrolled per-round CTE triples
-    (symmetrize -> support -> survivors).  `und_cte` must define
+    (symmetrize -> support -> survivors), each MATERIALIZED: a round
+    reads its predecessor three times, and DuckDB would otherwise
+    inline and recompute the whole chain.  `und_cte` must define
     `e0(a, b)` with a < b; `kv_cte` must define `kv(kval)` and may
     reference `sup1` (the round-1 support relation).  Returns
     `WITH ... SELECT a, b, support`."""
     parts = [und_cte]
     for r in range(1, rounds + 1):
         parts.append(
-            f"s{r - 1} AS (SELECT a AS u, b AS v FROM e{r - 1} "
+            f"s{r - 1} AS MATERIALIZED (SELECT a AS u, b AS v FROM e{r - 1} "
             f"UNION ALL SELECT b, a FROM e{r - 1})")
         parts.append(
-            f"sup{r} AS (SELECT e.a, e.b, COUNT(*) AS support "
+            f"sup{r} AS MATERIALIZED (SELECT e.a, e.b, COUNT(*) AS support "
             f"FROM e{r - 1} e JOIN s{r - 1} x ON x.u = e.a "
             f"JOIN s{r - 1} y ON y.u = e.b AND y.v = x.v GROUP BY 1, 2)")
         if r == 1:
             parts.append(kv_cte)
         parts.append(
-            f"e{r} AS (SELECT a, b FROM sup{r}, kv WHERE support >= kval)")
+            f"e{r} AS MATERIALIZED (SELECT a, b FROM sup{r}, kv "
+            f"WHERE support >= kval)")
     parts.append(
         f"sf AS (SELECT a AS u, b AS v FROM e{rounds} "
         f"UNION ALL SELECT b, a FROM e{rounds})")

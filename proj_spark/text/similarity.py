@@ -387,17 +387,10 @@ def pq_topk(embeddings: DataFrame, query: list[float], k: int,
                             F.col(vec_col).cast("array<double>").alias("_v"))
     cent = ivf_centroids(embeddings, n_codes, dim, vec_col, id_col)
 
-    def sqd(vc: str, cc, sub: int):
-        terms = None
-        for i in range(sub * w + 1, sub * w + w + 1):
-            t = ((F.element_at(vc, i) - F.element_at(cc, i))
-                 * (F.element_at(vc, i) - F.element_at(cc, i)))
-            terms = t if terms is None else terms + t
-        return terms
-
     cross = emb.crossJoin(F.broadcast(cent))
-    aggs = [F.min(F.struct(F.round(sqd("_v", "centroid", s), 8).alias("d"),
-                           F.col("cell").alias("cell"))).alias(f"_b{s}")
+    aggs = [F.min(F.struct(
+                F.round(sqd_q("_v", "centroid", s, w), 8).alias("d"),
+                F.col("cell").alias("cell"))).alias(f"_b{s}")
             for s in range(m)]
     codes = cross.groupBy(id_col).agg(*aggs)
     code_long = codes.select(
@@ -429,8 +422,9 @@ def pq_topk(embeddings: DataFrame, query: list[float], k: int,
 
 
 def sqd_q(qlit, cc, sub: int, w: int):
-    """Chained (q_i - c_i)^2 sum over one subspace — same left-to-right
-    + order as the oracle's textual expression."""
+    """Chained (q_i - c_i)^2 sum over subspace `sub` of width `w`
+    between array columns `qlit` and `cc` — same left-to-right + order
+    as the oracle's textual expression."""
     terms = None
     for i in range(sub * w + 1, sub * w + w + 1):
         t = ((F.element_at(qlit, i) - F.element_at(cc, i))
