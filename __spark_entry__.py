@@ -6964,8 +6964,8 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shrinking survivor set; k travels as a one-row relation, so
     no scalar ever crosses to the driver.
 
-    FULL SQL ORACLE (_sql_kcore): the peel unrolled as 4 CTE pairs
-    (degree -> survivor -> restricted edges)."""
+    FULL SQL ORACLE (_sql_kcore): the peel unrolled as 4 MATERIALIZED
+    CTE triples (degree -> survivor -> restricted edges)."""
     from proj_spark.graph import kcore_peel
     # persist the sampled edge set: it feeds the k derivation, BOTH
     # branches of the kernel's symmetrization, and (lazily) each
@@ -6986,11 +6986,14 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kcore(n: int) -> str:
+    # each round's CTEs are MATERIALIZED, as in graph.truss_sql: a round
+    # reads its predecessor twice, and DuckDB would otherwise inline and
+    # recompute the whole peel chain (41.6 s -> 2.3 s at sf0.01)
     rounds = []
     for r in range(1, KCORE_ROUNDS + 1):
-        rounds.append(f"""d{r} AS (SELECT u, COUNT(*) AS c FROM e{r-1} GROUP BY 1),
-v{r} AS (SELECT u FROM d{r}, kv WHERE c >= kval),
-e{r} AS (SELECT e.u, e.v FROM e{r-1} e
+        rounds.append(f"""d{r} AS MATERIALIZED (SELECT u, COUNT(*) AS c FROM e{r-1} GROUP BY 1),
+v{r} AS MATERIALIZED (SELECT u FROM d{r}, kv WHERE c >= kval),
+e{r} AS MATERIALIZED (SELECT e.u, e.v FROM e{r-1} e
          JOIN v{r} x ON e.u = x.u JOIN v{r} y ON e.v = y.u)""")
     chain = ",\n".join(rounds)
     return f"""WITH {_links_cte(n)},

@@ -8,6 +8,13 @@ Scale design notes (100 TB / 1000-executor target):
     columnar batch API, src/4D_api.cpp:353-460).
   - shuffle.partitions is a *local* default; on a real cluster set it to
     ~2-3x total cores or rely on AQE coalescing from a higher initial.
+  - In local mode Python workers fork from DAEMON_MODULE
+    (proj_spark/spark/daemon.py), which spares each task a re-read of
+    pyspark.zip.  The daemon module must be importable when the daemon
+    starts, and --py-files are added per task, after it is running; so
+    on a cluster get_spark keeps Spark's stock daemon.  To use this one
+    there, install proj_spark on the executors (or set
+    spark.executorEnv.PYTHONPATH) and set spark.python.daemon.module.
 """
 
 from __future__ import annotations
@@ -15,6 +22,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+DAEMON_MODULE = "proj_spark.spark.daemon"
 
 
 def get_spark(app: str = "proj_spark", master: str | None = None,
@@ -49,6 +58,11 @@ def get_spark(app: str = "proj_spark", master: str | None = None,
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # the daemon imports proj_spark from where this driver did, a
+        # directory or a --py-files zip, whoever launched the JVM
+        b = (b.config("spark.python.daemon.module", DAEMON_MODULE)
+             .config("spark.executorEnv.PYTHONPATH", pkg_root))
     return b.getOrCreate()
 
 

@@ -7,6 +7,13 @@ Spark serializes to executors once per task. Each Arrow batch (~64k
 rows) is transformed by a single NumPy call — no per-row Python,
 mirroring the columnar contract of the reference's proj_trans_generic
 (src/4D_api.cpp:353-460).
+
+A UDF stage also pays a fixed cost per task, whatever its kernel does.
+Each task opens with `importlib.invalidate_caches()`, which on CPython
+3.11 makes every zip importer in the worker re-read its archive's
+directory: ~0.25 CPU-s per task over pyspark.zip.  The engine's worker
+daemon (`daemon.py`, named by `get_spark`) re-reads only a changed
+archive; what remains per task is the UDF's unpickling and Arrow set-up.
 """
 
 from __future__ import annotations

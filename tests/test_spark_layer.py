@@ -99,6 +99,22 @@ def test_kernel_udf_matches_numpy(spark):
     assert np.array_equal([r["s"] for r in rows], lon * np.arange(500))
 
 
+def test_workers_run_the_engine_daemon(spark):
+    """The session forks its Python workers from proj_spark's daemon,
+    so a task's zip invalidation is the patched one, not CPython's."""
+    from proj_spark.spark.udf import kernel_udf
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "proj_spark.spark.daemon"
+
+    def invalidation(x):
+        import zipimport
+        return np.full(len(x), zipimport.zipimporter.invalidate_caches.__qualname__,
+                       dtype=object)
+
+    row = spark.range(1).select(kernel_udf(invalidation, "string")("id").alias("q")).first()
+    assert row["q"] == "install.<locals>.invalidate_caches"
+
+
 def test_cells_pack_roundtrip(spark):
     df = spark.createDataFrame([(2.0, 1.0), (-74.0, 40.7), (139.7, 35.7)], ["lon", "lat"])
     z = 12

@@ -22,7 +22,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from proj_spark.spark.session import _default_cpus, get_spark  # noqa: E402
+from proj_spark.spark.session import DAEMON_MODULE, _default_cpus, get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -84,6 +84,7 @@ def _adversarial_spark():
             .config("spark.sql.timestampType", "TIMESTAMP_LTZ")
             .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .config("spark.python.daemon.module", DAEMON_MODULE)
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 
