@@ -2095,13 +2095,10 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_sql_minhash_neardup, HUGEINT arithmetic) reproduces candidates AND
     verified pairs value-for-value.
 
-    ONE Python pass (minhash_sig_set_udf) yields both the signature and
-    the sorted-unique shingle set per document; LSH banding + the
-    candidate self-join key on the signature, and the verify is a pure
-    JVM array_intersect over the shingle sets joined back by id.  No
-    driver-side set dictionary (the previous broadcast-dict verify
-    collected O(corpus) shingle sets to the driver — fine at 10^4 docs,
-    fatal at 10^9), no second text scan, no Python verify stage: at
+    The pipeline is dedup.minhash_near_dups: ONE Python pass yields
+    each document's signature and shingle set, and the verify is a JVM
+    array_intersect over the sets joined back by id.  No driver-side
+    set dictionary, no second text scan, no Python verify stage: at
     100 TB the set join shuffles on doc_id like any other join, and
     candidate volume from near-threshold corpora (LSH at r=4,b=16
     passes ~half of J~0.45 pairs) is pruned before any array ships.
@@ -2117,48 +2114,12 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at J = 0.5.  Every returned pair is exact, but neither setting is
     exhaustive at the threshold: about a third of the J = 0.5 pairs are
     missed at <= 20k docs, and most of them above 20k."""
-    from proj_spark.text.dedup import (band_bucket_expr, minhash_sig_set_udf,
-                                       set_jaccard)
+    from proj_spark.text.dedup import minhash_near_dups
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    num_hashes, rows_per_band = mh_params(_n_docs(sf_dir))
-    n_bands = num_hashes // rows_per_band
-    f = minhash_sig_set_udf(num_hashes=num_hashes, shingle=5)
-    base = (docs.select("doc_id", f(F.col("text")).alias("s"))
-            .select("doc_id", "s.sig", "s.sh")
-            .persist())
-    # materialize once: AQE builds independent exchanges concurrently,
-    # which would race the (expensive) UDF stage into 2-4 duplicate
-    # computations before the cache fills
-    base.count()
-    buckets = [F.struct(F.lit(bi).alias("band"),
-                        band_bucket_expr("sig", bi, rows_per_band)
-                        .alias("bucket")) for bi in range(n_bands)]
-    banded = (base.select("doc_id", F.explode(F.array(*buckets)).alias("bb"))
-              .select("doc_id", "bb.band", "bb.bucket"))
-    # repartition the probe side: a single-file corpus would otherwise
-    # serialize the whole O(sum bucket^2) pair blowup into one task
-    left = banded.repartition(F.col("doc_id")).alias("l")
-    cand = (left.join(banded.alias("r"),
-                      [F.col("l.band") == F.col("r.band"),
-                       F.col("l.bucket") == F.col("r.bucket"),
-                       F.col("l.doc_id") < F.col("r.doc_id")])
-            .select(F.col("l.doc_id").alias("id_a"),
-                    F.col("r.doc_id").alias("id_b"))
-            .distinct()
-            .persist())
-    # materialize the ~10^6-pair candidate set before the verify joins:
-    # measured 12.1 s vs 85 s fused at sf0.1 — left unpersisted, the
-    # verify's join stages re-derive the banded self-join + distinct
-    # repeatedly under AQE stage planning
-    cand.count()
-    sa = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (cand.join(sa, "id_a").join(sb, "id_b")
-                .withColumn("jaccard", F.round(set_jaccard("sh_a", "sh_b"), 6))
-                .where(F.col("jaccard") >= 0.5)
-                .select(F.col("id_a").cast("long"), F.col("id_b").cast("long"),
-                        "jaccard"))
-    return verified.orderBy("id_a", "id_b")
+    d = minhash_near_dups(docs, *mh_params(_n_docs(sf_dir)))
+    return (d.select(F.col("id_a").cast("long"), F.col("id_b").cast("long"),
+                     "jaccard")
+            .orderBy("id_a", "id_b"))
 
 
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4580,8 +4541,8 @@ def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (rolling-hash document fingerprinting,
     Schleimer et al. 2003): one row per (doc, selected k-gram hash).
 
-    Pure higher-order expressions — the polynomial fold and window-min
-    selection run inside codegen; the DuckDB oracle reproduces every
+    The Arrow-batched winnow_kernel runs the polynomial fold and the
+    window-min selection; the DuckDB oracle reproduces every
     hash bit-for-bit (list_reduce's first-element seeding equals the
     init-0 fold).  See proj_spark/text/winnow.py.
     """
@@ -11485,7 +11446,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters keep their previous centroid.  Every round is therefore
     engine-exact, like pagerank's quantized iterates.
 
-    Scale plan: the weighted lattice is persisted once (<= distinct
+    Scale plan: the weighted lattice is checkpointed once (<= distinct
     coordinates, not pages); each round COLLECTS the k centroids (k
     rows) and evaluates the argmin as a pure codegen'd CASE expression
     over literals — zero joins, zero shuffles inside a round beyond
@@ -11498,7 +11459,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     lat = (pts.select(*_udeg_xy(shift=True))
         .groupBy("x", "y").agg(F.count("*").alias("w"))
-        .persist())
+        .localCheckpoint())
     cents = _km_init()
     for _ in range(KM_ROUNDS):
         d2s = [(F.col("x") - F.lit(cx)) * (F.col("x") - F.lit(cx))
@@ -11530,10 +11491,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (lat.select(assign.alias("j"), "w", dmin.alias("d2"))
            .groupBy("j")
            .agg(F.sum("w").alias("n_points"),
-                F.sum(F.expr("w * d2 div 1000000")).alias("wcss_q"))
-           .persist())
-    out.count()     # materialize BEFORE dropping the lattice cache
-    lat.unpersist()
+                F.sum(F.expr("w * d2 div 1000000")).alias("wcss_q")))
     cmap = {j: (cx, cy) for j, cx, cy in cents}
     cent_df = spark.createDataFrame(
         [(j, cx, cy) for j, (cx, cy) in cmap.items()],

@@ -32,10 +32,10 @@ so neither Catalyst's plan tree nor the recomputation grows with the
 round count.  `persist()` is not: a cached relation keeps its whole
 logical plan, and whatever a loop persists stays in the session cache
 until someone unpersists it.
-A relation every round re-reads without replacing it (an edge set) is
-materialized once before the loop: checkpointed here, or persisted and
-then unpersisted by the same function (components.py's edge set, the
-k-means lattice and the MinHash barriers in __spark_entry__.py).
+A relation every round re-reads without replacing it (an edge set, the
+k-means lattice) is materialized once before the loop: checkpointed here
+and in q_kmeans, or persisted and then unpersisted by the same function
+(components.py's edge set).
 
 Reference analogue: this is the engine's second iterative-dataflow
 operator next to connected_components; the reference's own iterative

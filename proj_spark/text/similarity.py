@@ -310,13 +310,11 @@ def _lsh_scored_pairs(embeddings: DataFrame, dim: int, vec_col: str,
 
     _buckets = pandas_udf(_buckets_fn, ArrayType(LongType()))
 
+    # persisted: the self-join reads it twice, and the cache fills once
+    # inside the first action on the result
     b = (embeddings.select(F.col(id_col),
                            F.posexplode(_buckets(vec)).alias("_t", "_b"))
          .persist())
-    # materialize once: the self-join's two sides (and AQE's stage
-    # re-planning) would otherwise run the matmul UDF 2-4x — the same
-    # persist-barrier discipline as the minhash signature stage
-    b.count()
     left = b.alias("l")
     right = b.alias("r")
     idcmp = (F.col(f"l.{id_col}") < F.col(f"r.{id_col}") if canonical

@@ -5,35 +5,28 @@ fingerprint set — the paper's guarantee is that any shared substring of
 length >= w+k-1 between two documents shares at least one selected
 fingerprint, which is what plagiarism/near-dup localization indexes.
 
-Engine formulation — pure higher-order SQL expressions, no UDF:
+Engine formulation — one Arrow-batched kernel (winnow_kernel):
 
-    codes  = unicode code points of the lowercased text   (ONE array/row)
+    codes  = unicode code points of the lowercased text
     h[i]   = fold over codes[i .. i+k-1] of  acc = (acc * B + c) % M
     sel    = distinct { min(h[i .. i+w-1]) : each window }
 
 The rolling hash is a polynomial hash with B = 131, M = 2^31 - 1; the
 fold keeps acc < 2^31 so acc * B + c < 2^39 — no BIGINT overflow, and
 the identical fold is expressible in DuckDB (list_reduce's first-
-element seeding equals Spark's aggregate with init 0, because
-(0*B + c1) % M == c1), giving the oracle bit-equal hashes.
-
-Plan shape: the codes array is materialized once per row (a named
-column), NOT inlined into the per-k-gram lambda — a lambda-captured
-subexpression is re-evaluated per element, turning O(len*k) into
-O(len^2).  Work is O(len * k) arithmetic inside codegen; at 100 TB the
-scan dominates, not the fold (the O(len) prefix-product variant saves
-nothing measurable at k <= 16 and costs a mod-inverse).
+element seeding equals a fold from 0, because (0*B + c1) % M == c1),
+giving the oracle bit-equal hashes.
 
 Fingerprinting is by hash VALUE (the paper's tie-break by rightmost
 position only changes which position is recorded, not the selected
-set), so `array_min` per window is exact.
+set), so the minimum per window is exact.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -41,49 +34,11 @@ HASH_B = 131
 HASH_M = (1 << 31) - 1
 
 
-def char_codes(text: Column) -> Column:
-    """Array of code points of `text` (empty array for empty/null-free
-    use; callers filter nulls)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(text)),
-        lambda i: F.ascii(F.substr(text, i, F.lit(1))).cast("long"))
-
-
-def kgram_hashes(codes: Column, k: int) -> Column:
-    """Rolling polynomial hash of every k-gram, given the codes array.
-
-    Empty array when the document has fewer than k characters.
-    """
-    n = F.size(codes)
-    starts = F.when(n >= k, F.sequence(F.lit(1), n - F.lit(k) + 1)) \
-              .otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        starts,
-        lambda i: F.aggregate(
-            F.slice(codes, i, k),
-            F.lit(0).cast("long"),
-            lambda acc, c: (acc * F.lit(HASH_B) + c) % F.lit(HASH_M)))
-
-
-def winnow_select(hashes: Column, w: int) -> Column:
-    """Distinct window-minimum hashes (the winnowing fingerprint set),
-    sorted ascending.  Documents shorter than one full window fall back
-    to the global minimum (the paper's short-document convention: every
-    document with at least one k-gram gets at least one fingerprint).
-    """
-    n = F.size(hashes)
-    wins = F.when(
-        n >= w,
-        F.transform(F.sequence(F.lit(1), n - F.lit(w) + 1),
-                    lambda i: F.array_min(F.slice(hashes, i, w)))) \
-        .otherwise(F.when(n > 0, F.array(F.array_min(hashes)))
-                   .otherwise(F.array().cast("array<long>")))
-    return F.array_sort(F.array_distinct(wins))
-
-
 def winnow_kernel(k: int, w: int):
     """Arrow-vectorized winnowing selection: text -> sorted distinct
-    window-min hashes, identical integers to the expression form.
+    window-min hashes.  Documents shorter than one full window fall
+    back to their minimum hash (the paper's short-document convention:
+    every document with at least one k-gram gets one fingerprint).
 
     The batch is processed as ONE concatenated code-point array — the
     rolling-hash fold is k vectorized passes over the whole batch and
@@ -91,10 +46,6 @@ def winnow_kernel(k: int, w: int):
     boundaries handled by slicing the global arrays afterwards.  No
     per-row Python in the O(chars) work; int64 arithmetic is exact
     (acc < 2^31, so acc*B + c < 2^39).
-
-    This is the production kernel; `winnow_select` is the pure-
-    expression twin (interpreted higher-order functions — bit-equal
-    but ~50x slower) kept for oracle parity and cross-checking.
     """
 
     @pandas_udf("array<long>")
@@ -136,22 +87,12 @@ def winnow_kernel(k: int, w: int):
 
 
 def fingerprints(docs: DataFrame, k: int = 12, w: int = 16,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 impl: str = "kernel") -> DataFrame:
+                 text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exploded winnowing fingerprints: one row per (doc, selected hash).
-
-    impl="kernel" (default) uses the Arrow-vectorized kernel;
-    impl="expr" the pure-expression form (same integers, used by the
-    equivalence tests and as the documented SQL-oracle twin).
 
     The downstream near-dup index is a shuffle on fp (documents sharing
     a fingerprint land in one bucket) — the same scale shape as the
     shingle and minhash band joins.
     """
-    if impl == "expr":
-        with_codes = docs.withColumn(
-            "_codes", char_codes(F.lower(F.col(text_col))))
-        sel = winnow_select(kgram_hashes(F.col("_codes"), k), w)
-        return with_codes.select(F.col(id_col), F.explode(sel).alias("fp"))
     sel = winnow_kernel(k, w)(F.col(text_col))
     return docs.select(F.col(id_col), F.explode(sel).alias("fp"))

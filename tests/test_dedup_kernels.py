@@ -20,7 +20,7 @@ import pytest
 
 from proj_spark.text import dedup as D
 from proj_spark.text.dedup import (MERSENNE61, _batch_shingles, _fold61,
-                                   _modmul61, _shingle_hashes)
+                                   _modmul61, _shingle_sets)
 
 
 def _py_shingle_set(text: str, width: int) -> list[int]:
@@ -70,12 +70,12 @@ def test_fold61_exact():
 @pytest.mark.parametrize("width", [3, 5, 20])
 def test_batch_shingles_match_python_oracle(width):
     s = _texts()
-    per_doc = _shingle_hashes(s, width)
+    H, starts = _batch_shingles(s, width)
+    per_doc = _shingle_sets(H, starts)
     assert len(per_doc) == len(s)
     for t, got in zip(s, per_doc):
         assert got.tolist() == _py_shingle_set(t, width)
     # batch variant covers every window (with duplicates) in doc order
-    H, starts = _batch_shingles(s, width)
     for d, t in enumerate(s):
         nwin = max(len(t.encode("utf-8")) - width + 1, 0)
         assert starts[d + 1] - starts[d] == nwin

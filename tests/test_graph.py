@@ -147,6 +147,7 @@ def test_iterative_operators_leave_the_cache_empty(spark):
     """Each loop cuts its lineage with localCheckpoint, which the
     session's cache manager never sees: once an operator's result is
     collected, nothing is left registered for the caller to clear."""
+    import __spark_entry__ as entry
     from proj_spark.graph import bfs_hops, multi_bfs_hops, ppr, weighted_hops
     from proj_spark.spatial.knn import knn_join
     spark.catalog.clearCache()
@@ -166,6 +167,7 @@ def test_iterative_operators_leave_the_cache_empty(spark):
             edges, seeds.withColumnRenamed("node", "seed")),
         "weighted_hops": lambda: weighted_hops(edges, seeds),
         "knn_join": lambda: knn_join(queries, pts, k=3, data_id="id"),
+        "q_kmeans": lambda: entry.q_kmeans(spark, "/root/testdata/sf0.001"),
     }
     for name, run in runs.items():
         assert run().collect(), name

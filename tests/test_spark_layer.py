@@ -289,7 +289,7 @@ def test_knn_matches_bruteforce(spark, geo):
 
 def test_dedup_and_stats(spark):
     from proj_spark.text.dedup import (exact_dedup, minhash_lsh_candidates,
-                                       set_jaccard, shingle_set_udf)
+                                       minhash_sig_set_udf, set_jaccard)
     from proj_spark.text.analysis import doc_stats, lang_guess
     rows = [
         (1, "the cat sat on the mat and it was happy for a while"),
@@ -305,7 +305,8 @@ def test_dedup_and_stats(spark):
     cands = minhash_lsh_candidates(docs, num_hashes=32, bands=16).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in cands}
     assert (1, 2) in pairs and (1, 3) in pairs  # dup + near-dup found
-    sets = docs.select("doc_id", shingle_set_udf()(F.col("text")).alias("sh"))
+    sets = docs.select("doc_id",
+                       minhash_sig_set_udf()(F.col("text")).sh.alias("sh"))
     verified = (sets.alias("a").join(sets.alias("b"),
                 F.col("a.doc_id") < F.col("b.doc_id"))
                 .select(F.col("a.doc_id").alias("ia"), F.col("b.doc_id").alias("ib"),

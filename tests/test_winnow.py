@@ -1,5 +1,5 @@
-"""Winnowing fingerprints: scalar-twin equality, the paper's matching
-guarantee, and short-document conventions."""
+"""Winnowing fingerprints: equality with a scalar reference, the
+paper's matching guarantee, and short-document conventions."""
 
 from __future__ import annotations
 
@@ -92,29 +92,29 @@ def test_winnow_pairs_finds_shared_passage(spark, monkeypatch):
     assert all(p == (0, 1) for p in out)
 
 
-def test_kernel_equals_expression_form(spark):
-    """The Arrow kernel and the pure-expression form select identical
-    integer sets — incl. non-ASCII text (code-point arithmetic)."""
+def test_kernel_equals_reference_form(spark):
+    """The Arrow kernel selects the same integer sets as the scalar
+    reference — incl. non-ASCII text (code-point arithmetic)."""
     cases = CASES + ["héllo wörld — ünïcode paragraph with açcents, "
                      "long enough for windows to form properly"]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(cases)],
                                "doc_id long, text string")
     for k, w in ((12, 16), (8, 5)):
-        a = sorted((r.doc_id, r.fp) for r in
-                   winnow.fingerprints(df, k=k, w=w, impl="kernel").collect())
-        b = sorted((r.doc_id, r.fp) for r in
-                   winnow.fingerprints(df, k=k, w=w, impl="expr").collect())
-        assert a == b
+        got = sorted((r.doc_id, r.fp) for r in
+                     winnow.fingerprints(df, k=k, w=w).collect())
+        want = sorted((i, fp) for i, t in enumerate(cases)
+                      for fp in ref_select(t, k, w))
+        assert got == want
 
 
-def test_kernel_equals_expression_on_corpus(spark):
+def test_kernel_equals_reference_on_corpus(spark):
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text"))
-    a = sorted((r.doc_id, r.fp) for r in
-               winnow.fingerprints(docs, impl="kernel").collect())
-    b = sorted((r.doc_id, r.fp) for r in
-               winnow.fingerprints(docs, impl="expr").collect())
-    assert a == b and len(a) > 0
+    got = sorted((r.doc_id, r.fp) for r in
+                 winnow.fingerprints(docs).collect())
+    want = sorted((r.doc_id, fp) for r in docs.collect()
+                  for fp in ref_select(r.text, 12, 16))
+    assert got == want and len(got) > 0
 
 
 def test_bpe_pretokenizer_matches_python_re(spark):

@@ -40,8 +40,7 @@ def main(sf_dir: str, out_dir: str) -> None:
     from proj_spark.spark.session import get_spark
     from proj_spark.text import analysis
     from proj_spark.text.components import dedup_assign
-    from proj_spark.text.dedup import (exact_dedup, minhash_lsh_candidates,
-                                       set_jaccard, shingle_set_udf)
+    from proj_spark.text.dedup import exact_dedup, minhash_near_dups
 
     spark = get_spark()
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -54,16 +53,7 @@ def main(sf_dir: str, out_dir: str) -> None:
 
     # 2. near-dup groups: LSH candidates -> exact Jaccard verify ->
     #    connected components -> keep each group's minimum doc_id
-    cand = minhash_lsh_candidates(docs1, id_col="doc_id")
-    sets = docs1.select("doc_id", shingle_set_udf(5)(F.col("text"))
-                        .alias("sh"))
-    edges = (cand
-             .join(sets.select(F.col("doc_id").alias("id_a"),
-                               F.col("sh").alias("sh_a")), "id_a")
-             .join(sets.select(F.col("doc_id").alias("id_b"),
-                               F.col("sh").alias("sh_b")), "id_b")
-             .withColumn("j", set_jaccard("sh_a", "sh_b"))
-             .where(F.col("j") >= JACCARD_TAU)
+    edges = (minhash_near_dups(docs1, 64, 4, JACCARD_TAU)
              .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     assign = dedup_assign(docs1.select("doc_id"), edges)
     docs2 = (docs1.join(assign.where("is_keep").select("doc_id"),
