@@ -263,9 +263,15 @@ def banded_signatures(docs: DataFrame, text_col: str = "text",
     relation both the batch candidate join and the streaming registry
     key on.  Buckets are band_bucket_expr's oracle-reproducible
     arithmetic."""
-    rows_per_band = num_hashes // bands
     mh = minhash_udf(num_hashes, shingle)
     sig = docs.select(F.col(id_col), mh(F.col(text_col)).alias("sig"))
+    return _band_rows(sig, id_col, bands, num_hashes // bands)
+
+
+def _band_rows(sig: DataFrame, id_col: str, bands: int,
+               rows_per_band: int) -> DataFrame:
+    """(id, band, bucket) rows of a relation with a `sig` minhash column:
+    one per document per band of `rows_per_band` hashes."""
     buckets = [F.struct(F.lit(bi).alias("band"),
                         band_bucket_expr("sig", bi, rows_per_band)
                         .alias("bucket"))
@@ -315,12 +321,12 @@ def set_jaccard(a, b) -> Column:
             .otherwise(F.lit(1.0)))
 
 
-def minhash_near_dups(docs: DataFrame, num_hashes: int, rows_per_band: int,
-                      threshold: float = 0.5) -> DataFrame:
+def minhash_near_dups(docs: DataFrame, num_hashes: int,
+                      rows_per_band: int) -> DataFrame:
     """MinHash-LSH near-dup pairs (id_a, id_b, jaccard) of a (doc_id,
     text) relation, id_a < id_b, whose exact shingle-set Jaccard (rounded
     to 6 dp, so a boundary value classifies identically in every engine)
-    reaches `threshold`.
+    reaches 0.5.
 
     ONE Python pass (minhash_sig_set_udf) yields each document's
     signature and sorted-unique shingle set; bands of `rows_per_band`
@@ -334,18 +340,14 @@ def minhash_near_dups(docs: DataFrame, num_hashes: int, rows_per_band: int,
     base = (docs.select("doc_id", f(F.col("text")).alias("s"))
             .select("doc_id", "s.sig", "s.sh")
             .persist())
-    buckets = [F.struct(F.lit(bi).alias("band"),
-                        band_bucket_expr("sig", bi, rows_per_band)
-                        .alias("bucket"))
-               for bi in range(num_hashes // rows_per_band)]
-    banded = (base.select("doc_id", F.explode(F.array(*buckets)).alias("bb"))
-              .select("doc_id", "bb.band", "bb.bucket"))
+    banded = _band_rows(base, "doc_id", num_hashes // rows_per_band,
+                        rows_per_band)
     cand = band_pairs(banded, "doc_id").persist()
     sa = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (cand.join(sa, "id_a").join(sb, "id_b")
             .withColumn("jaccard", F.round(set_jaccard("sh_a", "sh_b"), 6))
-            .where(F.col("jaccard") >= threshold)
+            .where(F.col("jaccard") >= 0.5)
             .select("id_a", "id_b", "jaccard"))
 
 

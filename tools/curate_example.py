@@ -9,7 +9,7 @@ Funnel (each stage a library operator, no ad-hoc logic):
   documents
     -> exact dedup           (md5 group-by; keep min doc_id per text)
     -> near-dup groups       (minhash LSH candidates -> exact shingle-
-                              Jaccard verify >= tau -> connected
+                              Jaccard verify >= 0.5 -> connected
                               components -> keep the group minimum)
     -> quality gate          (C4/Gopher-style score + token bounds +
                               declared-vs-guessed language agreement)
@@ -30,7 +30,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-JACCARD_TAU = 0.5
 QUALITY_MIN = 0.35
 TOKENS_MIN, TOKENS_MAX = 10, 100_000
 
@@ -53,7 +52,7 @@ def main(sf_dir: str, out_dir: str) -> None:
 
     # 2. near-dup groups: LSH candidates -> exact Jaccard verify ->
     #    connected components -> keep each group's minimum doc_id
-    edges = (minhash_near_dups(docs1, 64, 4, JACCARD_TAU)
+    edges = (minhash_near_dups(docs1, 64, 4)
              .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     assign = dedup_assign(docs1.select("doc_id"), edges)
     docs2 = (docs1.join(assign.where("is_keep").select("doc_id"),
@@ -84,8 +83,8 @@ def main(sf_dir: str, out_dir: str) -> None:
         "kept_fraction": round(n3 / n0, 4) if n0 else None,
         "write": report,
     }), flush=True)
-    docs1.unpersist()
-    docs2.unpersist()
+    # docs1, docs2 and the near-dup stage's signature and candidate caches
+    spark.catalog.clearCache()
 
 
 if __name__ == "__main__":
