@@ -4215,8 +4215,9 @@ def _sql_pagerank_domains(n: int) -> str:
     from proj_spark.graph import pagerank_sql
     edges_cte = f"""{_links_cte(n)},
 e AS (SELECT src, dst, COUNT(*) AS w FROM links GROUP BY 1, 2)"""
-    nodes_cte = f"nodes AS (SELECT range AS node FROM range(0, {N_DOMAINS}))"
-    body = pagerank_sql(edges_cte, nodes_cte, iters=PR_ITERS)
+    teleport_cte = (f"teleport AS (SELECT range AS node "
+                    f"FROM range(0, {N_DOMAINS}))")
+    body = pagerank_sql(edges_cte, teleport_cte, iters=PR_ITERS)
     return (body.replace("SELECT node, score FROM",
                          "SELECT node AS domain, score FROM")
             + f"\nORDER BY score DESC, domain LIMIT {PR_TOPK}")
@@ -11087,8 +11088,8 @@ cw AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS w FROM fp GROUP BY 1, 2),
 e AS (SELECT x AS src, y AS dst, w FROM cw
       UNION ALL
       SELECT y AS src, x AS dst, w FROM cw)"""
-    nodes_cte = "nodes AS (SELECT tok AS node FROM vocab)"
-    body = pagerank_sql(edges_cte, nodes_cte, iters=TR_ITERS)
+    teleport_cte = "teleport AS (SELECT tok AS node FROM vocab)"
+    body = pagerank_sql(edges_cte, teleport_cte, iters=TR_ITERS)
     return (body.replace("SELECT node, score FROM",
                          "SELECT node AS token, score FROM")
             + f"\nORDER BY score DESC, token LIMIT {TR_K}")
@@ -11364,9 +11365,9 @@ CLOSE_DEPTH = 4
 
 def q_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closeness + harmonic centrality of seed domains over the link
-    graph: labeled multi-source BFS (proj_spark/graph.py
-    multi_bfs_hops — one frontier join per round computes ALL seeds'
-    BFS trees simultaneously), then per-seed exact aggregates of the
+    graph: labeled multi-source BFS (proj_spark/graph.py bfs_hops
+    with the seed as the label — one frontier join per round computes
+    ALL seeds' BFS trees simultaneously), then per-seed exact aggregates of the
     hop distances — Bavelas closeness n/sum(d) and the
     harmonic sum of 1/d as floored micro-units.
 
@@ -11377,11 +11378,12 @@ def q_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL SQL ORACLE (_sql_closeness): a recursive CTE carrying the
     seed label with a MIN(h) rollup per (seed, node) — a different
     evaluation strategy over the same deterministic edge set."""
-    from proj_spark.graph import multi_bfs_hops
+    from proj_spark.graph import bfs_hops
     edges = _domain_links(spark, sf_dir)
-    seeds = (spark.range(N_DOMAINS).select(F.col("id").alias("seed"))
+    seeds = (spark.range(N_DOMAINS)
+             .select(F.col("id").alias("seed"), F.col("id").alias("node"))
              .where(F.col("seed") % CLOSE_SEED_MOD == 0))
-    out = multi_bfs_hops(edges, seeds, CLOSE_DEPTH)
+    out = bfs_hops(edges, seeds, CLOSE_DEPTH)
     agg = (out.where(F.col("hops") > 0)
            .groupBy("seed")
            .agg(F.count("*").alias("n_reached"),
@@ -12633,7 +12635,8 @@ def q_ppr_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic-sensitive ranking (Haveliwala WWW 2002) over the same
     deterministic link graph as q_pagerank_domains.
 
-    Exact quantized-integer mass propagation (proj_spark/graph.py ppr):
+    Exact quantized-integer mass propagation (proj_spark/graph.py
+    pagerank with the seeds as its teleport set):
     the rank relation stays SPARSE (seeds + reached nodes only), which
     is the scale argument for PPR — the frontier is tiny next to a
     10^12-page graph, and each of the {PR_ITERS} rounds is one
@@ -12641,24 +12644,25 @@ def q_ppr_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     of two small relations.
 
     FULL SQL ORACLE (_sql_ppr_domains): the identical rounds unrolled
-    as CTEs (graph.py ppr_sql)."""
-    from proj_spark.graph import ppr
+    as CTEs (graph.py pagerank_sql)."""
+    from proj_spark.graph import pagerank
     edges = (_domain_links(spark, sf_dir)
              .groupBy("src", "dst").agg(F.count("*").alias("w")))
     seeds = (spark.range(N_DOMAINS).select(F.col("id").alias("node"))
              .where(F.col("node") % BFS_SEED_MOD == 0))
-    pr = ppr(edges, seeds, iters=PR_ITERS)
+    pr = pagerank(edges, seeds, iters=PR_ITERS)
     return (pr.select(F.col("node").cast("long").alias("domain"), "score")
             .orderBy(F.col("score").desc(), "domain").limit(PPR_TOPK))
 
 
 def _sql_ppr_domains(n: int) -> str:
-    from proj_spark.graph import ppr_sql
+    from proj_spark.graph import pagerank_sql
     edges_cte = f"""{_links_cte(n)},
 e AS (SELECT src, dst, COUNT(*) AS w FROM links GROUP BY 1, 2)"""
-    seeds_cte = (f"seeds AS (SELECT range AS node FROM range(0, {N_DOMAINS}) "
-                 f"WHERE range % {BFS_SEED_MOD} = 0)")
-    body = ppr_sql(edges_cte, seeds_cte, iters=PR_ITERS)
+    teleport_cte = (f"teleport AS (SELECT range AS node "
+                    f"FROM range(0, {N_DOMAINS}) "
+                    f"WHERE range % {BFS_SEED_MOD} = 0)")
+    body = pagerank_sql(edges_cte, teleport_cte, iters=PR_ITERS)
     return (body.replace("SELECT node, score FROM",
                          "SELECT node AS domain, score FROM")
             + f"\nORDER BY score DESC, domain LIMIT {PPR_TOPK}")
@@ -12675,10 +12679,10 @@ def q_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a k-truss connects nodes of a (k-1)-core, never conversely).
 
     The support threshold derives from the data (mean round-1 support
-    + 1, exact integer division) so the peel bites at every corpus
-    scale — the densifying synthetic graph makes any FIXED k trivially
-    empty at sf0.001 or trivially full at sf0.1 (same discipline as
-    kcore's data-derived k).
+    + 1, exact integer division), as kcore's k does, so it tracks the
+    densifying synthetic graph instead of a FIXED k.  It does not make
+    the peel bite at every scale: 306 edges survive at sf0.01, but at
+    sf0.1 the threshold peels every edge and the result is empty.
 
     Scale plan (proj_spark/graph.py truss_peel): per round ONE wedge
     self-join + hash agg + broadcast threshold filter, lazily chained

@@ -1,16 +1,22 @@
-"""Iterative graph analytics over Spark DataFrames (PageRank).
+"""Iterative graph analytics over Spark DataFrames (PageRank, BFS).
 
 Web-curation pipelines rank domains by link authority before sampling
-training data; this module provides a PageRank whose arithmetic is
-*integer-quantized* so that a SQL oracle can replay it bit-exactly:
+training data; this module provides one rank iteration, `pagerank`,
+global or personalized by its teleport set, whose arithmetic is
+*integer-quantized* so that a SQL oracle (`pagerank_sql`) can replay it
+bit-exactly:
 
-  - ranks are BIGINT micro-units (init `I` per node, total mass N*I);
+  - ranks are BIGINT micro-units (init `I` per teleport node);
   - an edge (src -> dst, weight w) carries `(rank[src] * w) div W[src]`
     where W[src] is src's total out-weight (integer floor division);
   - the update is `base + (85 * incoming) div 100` with
-    `base = (15 * I) div 100` — every step is exact 64-bit integer math,
-    identical under any evaluation order, so Spark and DuckDB agree to
-    the last unit no matter how partial aggregation reorders the sums.
+    `base = (15 * I) div 100` on the teleport set (0 elsewhere) — every
+    step is exact 64-bit integer math, identical under any evaluation
+    order, so Spark and DuckDB agree to the last unit no matter how
+    partial aggregation reorders the sums.
+
+The one BFS, `bfs_hops`, is likewise single-source or labeled
+(one BFS per label, all in one pass) by the columns of its seed set.
 
 Dangling mass (nodes with no out-edges) is dropped, not redistributed —
 a standard variant; both engines implement the same rule.
@@ -50,57 +56,76 @@ from pyspark.sql import functions as F
 
 PR_INIT = 1_000_000_000          # micro-units per node at iteration 0
 PR_NUM, PR_DEN = 85, 100         # damping 0.85 as an exact rational
+PR_BASE = (PR_DEN - PR_NUM) * PR_INIT // PR_DEN   # teleport base per round
 
 
-def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
-             init: int = PR_INIT) -> DataFrame:
-    """Quantized PageRank.
+def pagerank(edges: DataFrame, teleport: DataFrame,
+             iters: int = 5) -> DataFrame:
+    """Quantized PageRank with teleport set `teleport`.
 
     edges: (src long, dst long, w long) — aggregated multigraph weights.
-    nodes: (node long) — the full node universe (isolated nodes keep
-    the teleport base).  Returns (node, score) with score in the same
-    integer micro-units.
+    teleport: (node) — where the random surfer restarts.  Each round
+    gives a node the damped incoming mass, plus the teleport base when
+    it is in `teleport`; rank starts at `PR_INIT` on `teleport` only.
+    Returns (node, score) in integer micro-units for every teleport
+    node and every node reached by rank mass.
+
+    Passing the whole node universe (whose edges never leave it) is
+    global PageRank: isolated nodes keep the teleport base.  Passing a
+    seed set is personalized PageRank (the "random surfer restarts at
+    the seeds" variant behind related-page / topic-sensitive ranking,
+    Haveliwala WWW 2002): the rank relation stays SPARSE, seeds plus the
+    nodes their mass reaches, which at web scale is orders of magnitude
+    smaller than the graph.  A round is ONE aggregate over the edge
+    contributions and the teleport set (unioned, grouped by node), so
+    no round ever touches the node universe unless the caller passes
+    it, and none joins the rank relation back onto it.
     """
-    base = (PR_DEN - PR_NUM) * init // PR_DEN
     w_tot = edges.groupBy("src").agg(F.sum("w").alias("w_tot"))
     e = edges.join(w_tot, "src").localCheckpoint()
-    rank = nodes.select("node", F.lit(init).cast("long").alias("score"))
+    rank = teleport.select("node", F.lit(PR_INIT).cast("long").alias("score"))
+    # a teleport row adds no mass and carries the base; max(t) is the
+    # base exactly on the teleport set
+    restart = teleport.select("node", F.lit(0).cast("long").alias("c"),
+                              F.lit(PR_BASE).cast("long").alias("t"))
     for _ in range(iters):
         contrib = (e.join(F.broadcast(rank.withColumnRenamed("node", "src")),
                           "src")
                    .select(F.col("dst").alias("node"),
-                           F.expr("(score * w) div w_tot").alias("c")))
-        incoming = contrib.groupBy("node").agg(F.sum("c").alias("m"))
-        rank = (nodes.join(incoming, "node", "left")
-                .select("node",
-                        (F.lit(base)
-                         + F.expr(f"({PR_NUM} * coalesce(m, 0)) div {PR_DEN}")
-                         ).cast("long").alias("score"))).localCheckpoint()
+                           F.expr("(score * w) div w_tot").alias("c"),
+                           F.lit(0).cast("long").alias("t")))
+        rank = (contrib.unionByName(restart).groupBy("node")
+                .agg((F.max("t")
+                      + F.expr(f"({PR_NUM} * sum(c)) div {PR_DEN}")
+                      ).cast("long").alias("score"))
+                .localCheckpoint())
     return rank
 
 
-def pagerank_sql(edges_cte: str, nodes_cte: str, iters: int = 5,
-                 init: int = PR_INIT) -> str:
-    """DuckDB twin: unrolled per-iteration CTEs replaying `pagerank`.
+def pagerank_sql(edges_cte: str, teleport_cte: str, iters: int = 5) -> str:
+    """DuckDB twin of `pagerank`: unrolled per-iteration CTEs.
 
-    `edges_cte` must define `e(src, dst, w)`; `nodes_cte` must define
-    `nodes(node)`.  Returns the full `WITH ... SELECT node, score` text
-    (no trailing ORDER BY — the caller appends its own).
+    `edges_cte` must define `e(src, dst, w)`; `teleport_cte` must define
+    `teleport(node)`.  Each round FULL OUTER joins the incoming mass
+    with the teleport set, the same rows as `pagerank`'s grouped union.
+    Returns the full `WITH ... SELECT node, score` text (no trailing
+    ORDER BY — the caller appends its own).
     """
-    base = (PR_DEN - PR_NUM) * init // PR_DEN
-    parts = [edges_cte, nodes_cte,
+    parts = [edges_cte, teleport_cte,
              "wt AS (SELECT src, SUM(w) AS w_tot FROM e GROUP BY 1)",
              "ew AS (SELECT e.src, e.dst, e.w, wt.w_tot FROM e JOIN wt USING (src))",
-             f"pr0 AS (SELECT node, CAST({init} AS BIGINT) AS score FROM nodes)"]
+             f"pr0 AS (SELECT node, CAST({PR_INIT} AS BIGINT) AS score "
+             f"FROM teleport)"]
     for k in range(1, iters + 1):
         parts.append(
             f"in{k} AS (SELECT ew.dst AS node, "
             f"SUM((p.score * ew.w) // ew.w_tot) AS m "
             f"FROM ew JOIN pr{k - 1} p ON p.node = ew.src GROUP BY 1)")
         parts.append(
-            f"pr{k} AS (SELECT n.node, CAST({base} + "
+            f"pr{k} AS (SELECT COALESCE(i.node, t.node) AS node, "
+            f"CAST(CASE WHEN t.node IS NOT NULL THEN {PR_BASE} ELSE 0 END + "
             f"({PR_NUM} * COALESCE(i.m, 0)) // {PR_DEN} AS BIGINT) AS score "
-            f"FROM nodes n LEFT JOIN in{k} i ON i.node = n.node)")
+            f"FROM in{k} i FULL OUTER JOIN teleport t ON t.node = i.node)")
     return ("WITH " + ",\n".join(parts)
             + f"\nSELECT node, score FROM pr{iters}")
 
@@ -109,69 +134,41 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame,
              max_depth: int = 4) -> DataFrame:
     """Exact minimum hop count from a seed set, depth-bounded BFS.
 
-    edges: (src long, dst long) — direction respected; seeds: (node).
-    Returns (node, hops) for every node reachable within `max_depth`.
+    edges: (src long, dst long) — direction respected; seeds: (node),
+    plus any number of label columns.  Each distinct label runs its own
+    BFS from its seed nodes, all in one pass.  Returns (labels..., node,
+    hops) for every (labels, node) with node reachable from that label's
+    seeds within `max_depth` (hops 0 = the seeds themselves).
 
     Scale plan: level-synchronous frontier expansion — each round is
     ONE equi-join of the (small, shrinking) frontier against the edge
-    relation plus a distinct and an anti-join against the visited set;
-    the edge relation is checkpointed once and reused every round (on a
-    cluster, pre-partitioned by src so the frontier join is
-    co-located).  Each round checkpoints its (tiny) frontier and the
-    loop early-stops when a frontier is empty.  The visited set is the
-    union of the checkpointed levels, so its plan is a flat union of
-    cut leaves — the lineage rule of the module docstring.
+    relation plus a distinct and an anti-join against the visited set,
+    both keyed on (labels, node); the edge relation is checkpointed once
+    and reused every round (on a cluster, pre-partitioned by src so the
+    frontier join is co-located).  With labels the frontier join fans
+    out each edge to at most |labels| copies (the centrality use case
+    keeps the labels few, and the per-round distinct bounds the frontier
+    by |labels| x |nodes|).  Each round checkpoints its (tiny) frontier
+    and the loop early-stops when a frontier is empty.  The visited set
+    is the union of the checkpointed levels, so its plan is a flat union
+    of cut leaves — the lineage rule of the module docstring.
     """
+    labels = [c for c in seeds.columns if c != "node"]
+    key = labels + ["node"]
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    visited = (seeds.select(F.col("node"), F.lit(0).cast("long").alias("hops"))
+    visited = (seeds.select(*key, F.lit(0).cast("long").alias("hops"))
                .localCheckpoint())
-    frontier = visited.select("node")
+    frontier = visited.select(*key)
     for h in range(1, max_depth + 1):
         nxt = (frontier.join(e, frontier["node"] == e["src"])
-               .select(F.col("dst").alias("node")).distinct()
-               .join(visited.select("node"), "node", "left_anti")
-               .select("node", F.lit(h).cast("long").alias("hops"))
+               .select(*labels, F.col("dst").alias("node")).distinct()
+               .join(visited.select(*key), key, "left_anti")
+               .select(*key, F.lit(h).cast("long").alias("hops"))
                .localCheckpoint())
         if nxt.isEmpty():
             break
         visited = visited.union(nxt)
-        frontier = nxt.select("node")
-    return visited
-
-
-def multi_bfs_hops(edges: DataFrame, seeds: DataFrame,
-                   max_depth: int = 4) -> DataFrame:
-    """Per-seed exact minimum hop counts: labeled level-synchronous BFS
-    from EVERY seed simultaneously.
-
-    edges: (src, dst) — direction respected; seeds: (seed).  Returns
-    (seed, node, hops) for every (seed, node) pair with node reachable
-    from that seed within `max_depth` (hops 0 = the seed itself).
-
-    Scale plan: identical to bfs_hops but the frontier carries the seed
-    label, so one pass computes |seeds| BFS trees — the frontier join
-    fans out each edge to at most |seeds| labeled copies (the
-    centrality use case keeps |seeds| small and the per-round distinct
-    bounds the frontier by |seeds| x |nodes|).  The edge relation is
-    checkpointed once; each round checkpoints its (seed, node) frontier
-    and the loop early-stops on an empty frontier, exactly like
-    bfs_hops above."""
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    visited = (seeds.select(F.col("seed"), F.col("seed").alias("node"),
-                            F.lit(0).cast("long").alias("hops"))
-               .localCheckpoint())
-    frontier = visited.select("seed", "node")
-    for h in range(1, max_depth + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["src"])
-               .select("seed", F.col("dst").alias("node")).distinct()
-               .join(visited.select("seed", "node"),
-                     ["seed", "node"], "left_anti")
-               .select("seed", "node", F.lit(h).cast("long").alias("hops"))
-               .localCheckpoint())
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt)
-        frontier = nxt.select("seed", "node")
+        frontier = nxt.select(*key)
     return visited
 
 
@@ -401,71 +398,6 @@ def modularity(und: DataFrame, lab: DataFrame) -> DataFrame:
         .alias("q_part"))
 
 
-def ppr(edges: DataFrame, seeds: DataFrame,
-        iters: int = 5, init: int = PR_INIT) -> DataFrame:
-    """Personalized PageRank: the teleport vector is the seed set, not
-    the uniform distribution (the "random surfer restarts at the seeds"
-    variant behind related-page / topic-sensitive ranking, Haveliwala
-    WWW 2002).  Same quantized-integer discipline as `pagerank` (the
-    reference's determinism contract: `src/pj_list.h` ops are bit-stable
-    across runs; rank arithmetic here is exact BIGINT so Spark partial
-    -agg reordering cannot perturb a unit).
-
-    edges: (src, dst, w) aggregated weights; seeds: (node) the
-    personalization set.  Returns (node, score) in
-    integer micro-units; nodes never touched by seed mass keep score 0
-    implicitly (the rank relation stays SPARSE — at web scale the
-    frontier is orders of magnitude smaller than the graph, which is
-    the point of PPR over global pagerank).
-    """
-    base = (PR_DEN - PR_NUM) * init // PR_DEN
-    w_tot = edges.groupBy("src").agg(F.sum("w").alias("w_tot"))
-    e = edges.join(w_tot, "src").localCheckpoint()
-    rank = seeds.select("node", F.lit(init).cast("long").alias("score"))
-    for _ in range(iters):
-        contrib = (e.join(F.broadcast(rank.withColumnRenamed("node", "src")),
-                          "src")
-                   .select(F.col("dst").alias("node"),
-                           F.expr("(score * w) div w_tot").alias("c")))
-        incoming = contrib.groupBy("node").agg(F.sum("c").alias("m"))
-        # sparse union of (teleport at seeds) + (damped incoming): a
-        # FULL OUTER join of two small relations, never the node universe
-        rank = (incoming.join(seeds.withColumn("is_seed", F.lit(1)),
-                              "node", "full_outer")
-                .select("node",
-                        (F.when(F.col("is_seed").isNotNull(), F.lit(base))
-                         .otherwise(F.lit(0))
-                         + F.expr(f"({PR_NUM} * coalesce(m, 0)) div {PR_DEN}")
-                         ).cast("long").alias("score"))).localCheckpoint()
-    return rank
-
-
-def ppr_sql(edges_cte: str, seeds_cte: str, iters: int = 5,
-            init: int = PR_INIT) -> str:
-    """DuckDB twin of `ppr`: unrolled per-iteration CTEs.
-
-    `edges_cte` must define `e(src, dst, w)`; `seeds_cte` must define
-    `seeds(node)`.  Returns `WITH ... SELECT node, score` (no ORDER BY).
-    """
-    base = (PR_DEN - PR_NUM) * init // PR_DEN
-    parts = [edges_cte, seeds_cte,
-             "wt AS (SELECT src, SUM(w) AS w_tot FROM e GROUP BY 1)",
-             "ew AS (SELECT e.src, e.dst, e.w, wt.w_tot FROM e JOIN wt USING (src))",
-             f"pr0 AS (SELECT node, CAST({init} AS BIGINT) AS score FROM seeds)"]
-    for k in range(1, iters + 1):
-        parts.append(
-            f"in{k} AS (SELECT ew.dst AS node, "
-            f"SUM((p.score * ew.w) // ew.w_tot) AS m "
-            f"FROM ew JOIN pr{k - 1} p ON p.node = ew.src GROUP BY 1)")
-        parts.append(
-            f"pr{k} AS (SELECT COALESCE(i.node, s.node) AS node, "
-            f"CAST(CASE WHEN s.node IS NOT NULL THEN {base} ELSE 0 END + "
-            f"({PR_NUM} * COALESCE(i.m, 0)) // {PR_DEN} AS BIGINT) AS score "
-            f"FROM in{k} i FULL OUTER JOIN seeds s ON s.node = i.node)")
-    return ("WITH " + ",\n".join(parts)
-            + f"\nSELECT node, score FROM pr{iters}")
-
-
 def truss_support(edges: DataFrame) -> DataFrame:
     """Per-edge triangle support |N(a) cap N(b)| of an undirected simple
     graph given as canonical edges (a < b): one self-join pair — edges
@@ -492,7 +424,8 @@ def truss_peel(und: DataFrame, k: DataFrame, rounds: int = 3,
     k: a ONE-ROW DataFrame (kval long) — the required support, kept as
     a relation (broadcast into each round's filter) so no scalar ever
     crosses to the driver; callers typically derive it from the data
-    (mean round-1 support + 1) so the peel bites at every corpus scale.
+    (q_truss: mean round-1 support + 1, which peels every edge of the
+    sf0.1 link graph).
     Returns the surviving edges with a final support recount
     (a, b, support) — i.e. E_R plus one more support pass over it.
 

@@ -8,8 +8,11 @@ The theta-join "point inside polygon" becomes:
      small -> Catalyst broadcasts it)
   3. exact point-in-ring test as the post-filter
 
-The exact test is `pip_expr`: pure Spark SQL ray-crossing over an
-array<struct<lon,lat>> ring using aggregate() — no UDF, stays JVM-side.
+The exact test is one ray-crossing count (`_ring_crossings`, pure Spark
+SQL over an array<struct<lon,lat>> ring using aggregate() — no UDF,
+stays JVM-side) over one ring edge list (`_ring_edges`): `pip_expr` is
+that count mod 2, `pip_expr_multi` sums it over a polygon's rings, and
+`cover_cells` tests its interior cells against the same edge list.
 
 At 100 TB the points side never shuffles: the cover explode is tiny and
 broadcast, and the exact filter is a map-side operation.
@@ -67,12 +70,8 @@ def cover_cells(polygons: DataFrame, z: int, ring_col: str = "ring",
         F.lit(np.pi) * (1.0 - 2.0 * (F.col("_y") + 1) / F.lit(n)))))
     cy1 = F.degrees(F.atan(F.sinh(
         F.lit(np.pi) * (1.0 - 2.0 * F.col("_y") / F.lit(n)))))
-    edges = F.zip_with(
-        F.slice(F.col(ring_col), 1, F.size(F.col(ring_col)) - 1),
-        F.slice(F.col(ring_col), 2, F.size(F.col(ring_col)) - 1),
-        lambda a, b: F.struct(a["lon"].alias("x1"), a["lat"].alias("y1"),
-                              b["lon"].alias("x2"), b["lat"].alias("y2")),
-    )
+    edges = _ring_edges(F.col(ring_col))
+
     def _edge_touches(e):
         # exact segment / axis-aligned-rect test: bboxes overlap AND the
         # rect's corners do not all lie strictly on one side of the
@@ -102,28 +101,35 @@ def cover_cells(polygons: DataFrame, z: int, ring_col: str = "ring",
     )
 
 
-def pip_expr(lon: Column, lat: Column, ring: Column) -> Column:
-    """Ray-crossing point-in-ring as a pure SQL aggregate expression.
-
-    Walks ring edges (v[i], v[i+1]) with zip_with over the ring and its
-    rotation, counting crossings of the horizontal ray to +inf.  Boundary
-    convention: half-open edges [min, max) — matches the NumPy oracle.
-    """
-    edges = F.zip_with(
+def _ring_edges(ring: Column) -> Column:
+    """The edges (v[i], v[i+1]) of an array<struct<lon,lat>> ring as an
+    array<struct<x1,y1,x2,y2>>: zip_with over the ring and its
+    rotation."""
+    return F.zip_with(
         F.slice(ring, 1, F.size(ring) - 1),
         F.slice(ring, 2, F.size(ring) - 1),
         lambda a, b: F.struct(a["lon"].alias("x1"), a["lat"].alias("y1"),
                               b["lon"].alias("x2"), b["lat"].alias("y2")),
     )
-    crossings = F.aggregate(
-        edges,
+
+
+def _ring_crossings(lon: Column, lat: Column, ring: Column) -> Column:
+    """How many edges of `ring` the horizontal ray from (lon, lat) to
+    +inf crosses, as a pure SQL aggregate expression.  Boundary
+    convention: half-open edges [min, max) — matches the NumPy oracle."""
+    return F.aggregate(
+        _ring_edges(ring),
         F.lit(0),
         lambda acc, e: acc + F.when(
             ((e["y1"] > lat) != (e["y2"] > lat))
             & (lon < (e["x2"] - e["x1"]) * (lat - e["y1"]) / (e["y2"] - e["y1"]) + e["x1"]),
             F.lit(1)).otherwise(F.lit(0)),
     )
-    return crossings % 2 == 1
+
+
+def pip_expr(lon: Column, lat: Column, ring: Column) -> Column:
+    """Ray-crossing point-in-ring: an odd crossing count is inside."""
+    return _ring_crossings(lon, lat, ring) % 2 == 1
 
 
 def pip_expr_multi(lon: Column, lat: Column, rings: Column) -> Column:
@@ -131,22 +137,9 @@ def pip_expr_multi(lon: Column, lat: Column, rings: Column) -> Column:
     array<array<struct<lon,lat>>> column (outer ring first, then holes).
     Total ray crossings over every ring odd <=> inside the filled area
     minus the holes — no per-ring bookkeeping needed."""
-    def ring_crossings(acc0, ring):
-        edges = F.zip_with(
-            F.slice(ring, 1, F.size(ring) - 1),
-            F.slice(ring, 2, F.size(ring) - 1),
-            lambda a, b: F.struct(a["lon"].alias("x1"), a["lat"].alias("y1"),
-                                  b["lon"].alias("x2"), b["lat"].alias("y2")),
-        )
-        return acc0 + F.aggregate(
-            edges, F.lit(0),
-            lambda acc, e: acc + F.when(
-                ((e["y1"] > lat) != (e["y2"] > lat))
-                & (lon < (e["x2"] - e["x1"]) * (lat - e["y1"])
-                   / (e["y2"] - e["y1"]) + e["x1"]),
-                F.lit(1)).otherwise(F.lit(0)))
-
-    total = F.aggregate(rings, F.lit(0), ring_crossings)
+    total = F.aggregate(
+        rings, F.lit(0),
+        lambda acc, ring: acc + _ring_crossings(lon, lat, ring))
     return total % 2 == 1
 
 

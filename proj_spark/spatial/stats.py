@@ -431,6 +431,39 @@ def kulldorff_scan(counts: DataFrame, top_k: int = 20,
         .limit(top_k))
 
 
+def _class_pair_lattice(obs: DataFrame, cls_col: str, ax_col: str,
+                        cnt_col: str) -> tuple[DataFrame, DataFrame]:
+    """The class-pair x axis-value lattice the pairwise distribution
+    tests run on, and the axis values.
+
+    One partial-agg shuffle of ``obs`` to (class, axis value) counts;
+    every unordered class pair cls_a < cls_b with its totals n_a, n_b,
+    crossed with every axis value of the aggregated counts, carries
+    that value's counts c_a and c_b (0 where a class has none).
+    Returns (lattice (cls_b, ax, cls_a, n_a, n_b, c_a, c_b), axis
+    values (ax))."""
+    cnt = (obs.groupBy(cls_col, ax_col)
+           .agg(F.sum(cnt_col).cast("long").alias("_c")))
+    tot = cnt.groupBy(cls_col).agg(F.sum("_c").alias("_n"))
+    classes = tot.select(F.col(cls_col).alias("_cls"), "_n")
+    pairs = (classes.alias("a").crossJoin(classes.alias("b"))
+             .where(F.col("a._cls") < F.col("b._cls"))
+             .select(F.col("a._cls").alias("cls_a"),
+                     F.col("b._cls").alias("cls_b"),
+                     F.col("a._n").alias("n_a"),
+                     F.col("b._n").alias("n_b")))
+    axis = cnt.select(ax_col).distinct()
+    grid = pairs.crossJoin(F.broadcast(axis))
+    ca = cnt.select(F.col(cls_col).alias("cls_a"),
+                    F.col(ax_col), F.col("_c").alias("c_a"))
+    cb = cnt.select(F.col(cls_col).alias("cls_b"),
+                    F.col(ax_col), F.col("_c").alias("c_b"))
+    lattice = (grid.join(ca, ["cls_a", ax_col], "left")
+               .join(cb, ["cls_b", ax_col], "left")
+               .fillna(0, subset=["c_a", "c_b"]))
+    return lattice, axis
+
+
 def emd_pairs(obs: DataFrame, cls_col: str = "cls",
               pos_col: str = "pos", cnt_col: str = "c",
               span: int | None = None) -> DataFrame:
@@ -452,32 +485,14 @@ def emd_pairs(obs: DataFrame, cls_col: str = "cls",
 
     Scale shape: the corpus is touched by exactly one partial-agg
     shuffle to (class, position); everything after runs on the
-    aggregated lattice — |classes| * |positions| rows — via a
-    positions x pairs expansion and one window cumsum per pair.
+    aggregated lattice (`_class_pair_lattice`) — |class pairs| *
+    |positions| rows — with one window cumsum per pair.
     ``span`` defaults to max(pos) - min(pos) over the observed lattice.
 
     Input ``obs``: one row per (class, position) with a count column.
     Returns (cls_a, cls_b, emd_q, emd) for cls_a < cls_b.
     """
-    cnt = (obs.groupBy(cls_col, pos_col)
-           .agg(F.sum(cnt_col).cast("long").alias("_c")))
-    tot = cnt.groupBy(cls_col).agg(F.sum("_c").alias("_n"))
-    classes = tot.select(F.col(cls_col).alias("_cls"), "_n")
-    pairs = (classes.alias("a").crossJoin(classes.alias("b"))
-             .where(F.col("a._cls") < F.col("b._cls"))
-             .select(F.col("a._cls").alias("cls_a"),
-                     F.col("b._cls").alias("cls_b"),
-                     F.col("a._n").alias("n_a"),
-                     F.col("b._n").alias("n_b")))
-    pos = cnt.select(pos_col).distinct()
-    grid = pairs.crossJoin(F.broadcast(pos))
-    ca = cnt.select(F.col(cls_col).alias("cls_a"),
-                    F.col(pos_col), F.col("_c").alias("c_a"))
-    cb = cnt.select(F.col(cls_col).alias("cls_b"),
-                    F.col(pos_col), F.col("_c").alias("c_b"))
-    g = (grid.join(ca, ["cls_a", pos_col], "left")
-         .join(cb, ["cls_b", pos_col], "left")
-         .fillna(0, subset=["c_a", "c_b"]))
+    g, pos = _class_pair_lattice(obs, cls_col, pos_col, cnt_col)
     w = Window.partitionBy("cls_a", "cls_b").orderBy(pos_col)
     g = (g.withColumn("cum_a", F.sum("c_a").over(w))
          .withColumn("cum_b", F.sum("c_b").over(w))
@@ -514,29 +529,10 @@ def ks_pairs(obs: DataFrame, cls_col: str = "cls",
     value attaining the max (``arg_v``, integer tie-break) so the
     location of the largest divergence is part of the checked result.
 
-    Scale shape: one partial-agg shuffle of the corpus to
-    (class, value); the pair expansion and window cumsums run on the
-    aggregated |classes| x |values| lattice only.
+    Scale shape: the same `_class_pair_lattice` as :func:`emd_pairs`;
+    the window cumsums run on the aggregated lattice only.
     """
-    cnt = (obs.groupBy(cls_col, val_col)
-           .agg(F.sum(cnt_col).cast("long").alias("_c")))
-    tot = cnt.groupBy(cls_col).agg(F.sum("_c").alias("_n"))
-    classes = tot.select(F.col(cls_col).alias("_cls"), "_n")
-    pairs = (classes.alias("a").crossJoin(classes.alias("b"))
-             .where(F.col("a._cls") < F.col("b._cls"))
-             .select(F.col("a._cls").alias("cls_a"),
-                     F.col("b._cls").alias("cls_b"),
-                     F.col("a._n").alias("n_a"),
-                     F.col("b._n").alias("n_b")))
-    vals = obs.select(val_col).distinct()
-    grid = pairs.crossJoin(F.broadcast(vals))
-    ca = cnt.select(F.col(cls_col).alias("cls_a"),
-                    F.col(val_col), F.col("_c").alias("c_a"))
-    cb = cnt.select(F.col(cls_col).alias("cls_b"),
-                    F.col(val_col), F.col("_c").alias("c_b"))
-    g = (grid.join(ca, ["cls_a", val_col], "left")
-         .join(cb, ["cls_b", val_col], "left")
-         .fillna(0, subset=["c_a", "c_b"]))
+    g = _class_pair_lattice(obs, cls_col, val_col, cnt_col)[0]
     w = Window.partitionBy("cls_a", "cls_b").orderBy(val_col)
     g = (g.withColumn("_d", F.abs(
         F.sum("c_a").over(w) * F.col("n_b")
@@ -574,29 +570,10 @@ def mwu_pairs(obs: DataFrame, cls_col: str = "cls",
 
     is ONE float expression over the exact integers (u2q, n_a, n_b, T).
 
-    Scale shape: identical to ks_pairs — one corpus shuffle to the
-    (class, value) lattice; pair expansion + window cumsums on the
-    aggregate only.
+    Scale shape: identical to ks_pairs — the same
+    `_class_pair_lattice`, window cumsums on the aggregate only.
     """
-    cnt = (obs.groupBy(cls_col, val_col)
-           .agg(F.sum(cnt_col).cast("long").alias("_c")))
-    tot = cnt.groupBy(cls_col).agg(F.sum("_c").alias("_n"))
-    classes = tot.select(F.col(cls_col).alias("_cls"), "_n")
-    pairs = (classes.alias("a").crossJoin(classes.alias("b"))
-             .where(F.col("a._cls") < F.col("b._cls"))
-             .select(F.col("a._cls").alias("cls_a"),
-                     F.col("b._cls").alias("cls_b"),
-                     F.col("a._n").alias("n_a"),
-                     F.col("b._n").alias("n_b")))
-    vals = obs.select(val_col).distinct()
-    grid = pairs.crossJoin(F.broadcast(vals))
-    ca = cnt.select(F.col(cls_col).alias("cls_a"),
-                    F.col(val_col), F.col("_c").alias("c_a"))
-    cb = cnt.select(F.col(cls_col).alias("cls_b"),
-                    F.col(val_col), F.col("_c").alias("c_b"))
-    g = (grid.join(ca, ["cls_a", val_col], "left")
-         .join(cb, ["cls_b", val_col], "left")
-         .fillna(0, subset=["c_a", "c_b"])
+    g = (_class_pair_lattice(obs, cls_col, val_col, cnt_col)[0]
          .withColumn("ct", F.col("c_a") + F.col("c_b")))
     w = Window.partitionBy("cls_a", "cls_b").orderBy(val_col)
     g = g.withColumn("before",

@@ -206,7 +206,7 @@ def stream_exact_dedup(spark: SparkSession, pages_dir: str,
 
 def stream_minhash_neardup(spark: SparkSession, docs_dir: str,
                            id_col: str = "doc_id", text_col: str = "text",
-                           num_hashes: int = 64, bands: int = 16,
+                           num_hashes: int = 64, rows_per_band: int = 4,
                            shingle: int = 5,
                            max_files_per_trigger: int = 1,
                            state_ttl_ms: int | None = None) -> DataFrame:
@@ -214,11 +214,11 @@ def stream_minhash_neardup(spark: SparkSession, docs_dir: str,
 
     Each document contributes one (band, bucket) row per minhash band via
     the SAME `banded_signatures` relation the batch candidate join uses
-    (`text/dedup.py`).  At corpus scale take the density-matched
-    (num_hashes, rows_per_band) from `__spark_entry__.mh_params` and
-    pass `num_hashes` and `bands = num_hashes // rows_per_band`, so the
-    stream registry and the batch join agree on the banding (hot-shingle
-    saturation measurements: BASELINE.md round-5).  State is keyed by
+    (`text/dedup.py`), with the same (num_hashes, rows_per_band)
+    parameters; at corpus scale take the density-matched pair from
+    `__spark_entry__.mh_params`, so the stream registry and the batch
+    join agree on the banding (hot-shingle saturation measurements:
+    BASELINE.md round-5).  State is keyed by
     (band, bucket); the FIRST
     document to touch a bucket registers as its representative (one
     string of state per distinct bucket), and every later arrival at an
@@ -252,7 +252,7 @@ def stream_minhash_neardup(spark: SparkSession, docs_dir: str,
         docs.select(F.col(id_col).alias("doc_id"),
                     F.col(text_col).alias("text")),
         text_col="text", id_col="doc_id",
-        num_hashes=num_hashes, bands=bands, shingle=shingle)
+        num_hashes=num_hashes, rows_per_band=rows_per_band, shingle=shingle)
     out_schema = StructType([
         StructField("doc_id", id_type),
         StructField("rep_id", id_type),
@@ -298,8 +298,9 @@ def stream_simhash_neardup(spark: SparkSession, docs_dir: str,
                            max_files_per_trigger: int = 1,
                            state_ttl_ms: int | None = None) -> DataFrame:
     """Streaming simhash near-dup registry: same star-graph state design
-    as `stream_minhash_neardup`, keyed by the 4x16-bit simhash bands
-    (pigeonhole: any pair within Hamming distance 3 shares a band).
+    as `stream_minhash_neardup`, keyed by the 4x16-bit simhash bands of
+    `simhash_band_rows`, the batch operator's band keys (pigeonhole: any
+    pair within Hamming distance 3 shares a band).
 
     Output rows carry both signatures so the exact Hamming verify
     (bit_count(sim XOR rep_sim) <= 3) composes downstream exactly as in
@@ -309,21 +310,14 @@ def stream_simhash_neardup(spark: SparkSession, docs_dir: str,
     anchor so the logical registry window stays bounded."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from proj_spark.text.dedup import simhash_udf
+    from proj_spark.text.dedup import simhash_band_rows, simhash_udf
 
     docs = _streaming_reader(spark, docs_dir, max_files_per_trigger)
     id_type = docs.schema[id_col].dataType
     sh = simhash_udf(shingle)
     sig = docs.select(F.col(id_col).alias("doc_id"),
                       sh(F.col(text_col)).alias("sim"))
-    banded = sig.select(
-        "doc_id", "sim",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("band"),
-                     F.shiftrightunsigned(F.col("sim"), 16 * i)
-                     .bitwiseAND(F.lit(0xFFFF)).alias("key"))
-            for i in range(4)
-        ])).alias("bk")).select("doc_id", "sim", "bk.band", "bk.key")
+    banded = simhash_band_rows(sig, "doc_id", "bands")
 
     out_schema = StructType([
         StructField("doc_id", id_type),

@@ -4,18 +4,24 @@ Exact dedup is a hash group-by (map-side partial agg, one shuffle on the
 digest — at 100 TB this is the cheapest possible plan).  Near-dup comes
 in three flavors:
 
-  - MinHash + LSH banding: shingle -> k minhashes -> b bands; candidate
+  - MinHash + LSH banding: shingle -> k minhashes -> bands of
+    `rows_per_band` minhashes (k / rows_per_band bands); candidate
     pairs share a band bucket (equi-join on (band, bucket_hash)), then
     exact Jaccard verifies.  The band join is the standard way to turn
     an O(n^2) similarity search into a shuffle on bucket keys.
   - SimHash: 64-bit sign fingerprint of token hashes; near-dups differ
-    in few bits.  Banded into 4x16-bit keys for the same LSH trick.
+    in few bits.  Banded into 4x16-bit keys for the same LSH trick
+    (simhash_band_rows, shared with the streaming registry).
   - n-gram Jaccard: exact verification of a candidate pair's shingle
     sets (the `sh` field of minhash_sig_set_udf) as a JVM expression
     (set_jaccard), the verify stage after LSH.
 
-Every band self-join is band_pairs; minhash_near_dups is the whole
-MinHash pipeline (signatures, bands, candidates, verify).
+One kernel per step: every MinHash band row is _band_rows, every
+SimHash band row simhash_band_rows, and every document band self-join
+band_pairs; minhash_near_dups is the whole MinHash pipeline
+(signatures, bands, candidates, verify).  text/similarity.py's
+embedding-bucket join keeps its own copy of the join without
+band_pairs' probe-side repartition, which made it slower at sf0.1.
 
 All hashing uses explicit integer arithmetic (closed-form, engine-
 independent) — no reliance on Spark's or DuckDB's internal hash().
@@ -258,24 +264,25 @@ def band_bucket_expr(sig_col: str, band: int, rows_per_band: int) -> Column:
 
 def banded_signatures(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 64,
-                      bands: int = 16, shingle: int = 5) -> DataFrame:
-    """(id, band, bucket) rows: one per document per LSH band — the
-    relation both the batch candidate join and the streaming registry
-    key on.  Buckets are band_bucket_expr's oracle-reproducible
-    arithmetic."""
+                      rows_per_band: int = 4, shingle: int = 5) -> DataFrame:
+    """(id, band, bucket) rows: one per document per LSH band of
+    `rows_per_band` of the `num_hashes` minhashes — the relation both
+    the batch candidate join and the streaming registry key on.
+    Buckets are band_bucket_expr's oracle-reproducible arithmetic."""
     mh = minhash_udf(num_hashes, shingle)
     sig = docs.select(F.col(id_col), mh(F.col(text_col)).alias("sig"))
-    return _band_rows(sig, id_col, bands, num_hashes // bands)
+    return _band_rows(sig, id_col, num_hashes, rows_per_band)
 
 
-def _band_rows(sig: DataFrame, id_col: str, bands: int,
+def _band_rows(sig: DataFrame, id_col: str, num_hashes: int,
                rows_per_band: int) -> DataFrame:
-    """(id, band, bucket) rows of a relation with a `sig` minhash column:
-    one per document per band of `rows_per_band` hashes."""
+    """(id, band, bucket) rows of a relation with a `sig` column of
+    `num_hashes` minhashes: one per document per band of
+    `rows_per_band` hashes."""
     buckets = [F.struct(F.lit(bi).alias("band"),
                         band_bucket_expr("sig", bi, rows_per_band)
                         .alias("bucket"))
-               for bi in range(bands)]
+               for bi in range(num_hashes // rows_per_band)]
     return sig.select(
         F.col(id_col),
         F.explode(F.array(*buckets)).alias("bb"),
@@ -305,10 +312,11 @@ def band_pairs(rows: DataFrame, id_col: str, carry=()) -> DataFrame:
 
 def minhash_lsh_candidates(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id", num_hashes: int = 64,
-                           bands: int = 16, shingle: int = 5) -> DataFrame:
+                           rows_per_band: int = 4,
+                           shingle: int = 5) -> DataFrame:
     """Candidate near-dup pairs via banded minhash (id_a < id_b)."""
     return band_pairs(banded_signatures(docs, text_col, id_col, num_hashes,
-                                        bands, shingle), id_col)
+                                        rows_per_band, shingle), id_col)
 
 
 def set_jaccard(a, b) -> Column:
@@ -335,13 +343,14 @@ def minhash_near_dups(docs: DataFrame, num_hashes: int,
     signatures and the candidates are persisted: the verify reads the
     signatures twice and re-derives the band self-join otherwise
     (measured 12.1 s vs 85 s fused at sf0.1).  Both caches fill once,
-    inside the first action on the result."""
+    inside the first action on the result, and outlive the call:
+    nothing here unpersists them, so the caller clears them
+    (`spark.catalog.clearCache()`) once it is done with the result."""
     f = minhash_sig_set_udf(num_hashes=num_hashes, shingle=5)
     base = (docs.select("doc_id", f(F.col("text")).alias("s"))
             .select("doc_id", "s.sig", "s.sh")
             .persist())
-    banded = _band_rows(base, "doc_id", num_hashes // rows_per_band,
-                        rows_per_band)
+    banded = _band_rows(base, "doc_id", num_hashes, rows_per_band)
     cand = band_pairs(banded, "doc_id").persist()
     sa = base.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = base.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
@@ -420,6 +429,26 @@ def _sim_block_tables(sim_col: str):
     return out
 
 
+def simhash_band_rows(sig: DataFrame, id_col: str,
+                      scheme: str) -> DataFrame:
+    """(id, sim, band, key) rows of a relation with a `sim` simhash
+    column: one per document per band, both for the batch band join and
+    for the streaming registry.  scheme='bands' keys the four 16-bit
+    bands of the simhash; scheme='blocks' the 20 block triples of
+    `_sim_block_tables`."""
+    if scheme == "blocks":
+        keys = _sim_block_tables("sim")
+    else:
+        keys = [F.struct(F.lit(i).alias("band"),
+                         F.shiftrightunsigned(F.col("sim"), 16 * i)
+                         .bitwiseAND(F.lit(0xFFFF)).alias("key"))
+                for i in range(4)]
+    return sig.select(
+        id_col, "sim",
+        F.explode(F.array(*keys)).alias("bk")
+    ).select(id_col, "sim", "bk.band", "bk.key")
+
+
 def simhash_near_dups(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", max_hamming: int = 3,
                       scheme: str = "bands") -> DataFrame:
@@ -440,18 +469,8 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
     """
     sh = simhash_udf()
     sig = docs.select(F.col(id_col), sh(F.col(text_col)).alias("sim"))
-    if scheme == "blocks":
-        keys = _sim_block_tables("sim")
-    else:
-        keys = [F.struct(F.lit(i).alias("band"),
-                         F.shiftrightunsigned(F.col("sim"), 16 * i)
-                         .bitwiseAND(F.lit(0xFFFF)).alias("key"))
-                for i in range(4)]
-    bands = sig.select(
-        id_col, "sim",
-        F.explode(F.array(*keys)).alias("bk")
-    ).select(id_col, "sim", "bk.band", "bk.key")
-    pairs = band_pairs(bands, id_col, carry=("sim",))
+    pairs = band_pairs(simhash_band_rows(sig, id_col, scheme), id_col,
+                       carry=("sim",))
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return pairs.withColumn("hamming", hamming).where(F.col("hamming") <= max_hamming) \
                 .select("id_a", "id_b", "hamming")

@@ -5,6 +5,11 @@ Brute force is the exactness baseline: a single scan with a JVM-side
 dot product (F.aggregate over zip_with) — no UDF, no shuffle except the
 final top-k.  The scale path buckets vectors by random-hyperplane LSH
 (deterministic planes) so queries only scan matching buckets.
+
+The all-pairs LSH queries (knn_pairs_topk, neardup_pairs) share one
+candidate-and-verify kernel, `_lsh_scored_pairs`: a band self-join on
+(table, bucket) with id_a < id_b, so each unordered pair is verified
+once by exact cosine.
 """
 
 from __future__ import annotations
@@ -251,12 +256,16 @@ def knn_pairs_topk(embeddings: DataFrame, k: int, dim: int,
     (the banding trick: one table of m planes has recall
     (1 - theta/pi)^m, L tables lift it to 1 - (1 - p)^L).  The join
     shuffles on (table, bucket) keys, so work is sum of squared bucket
-    sizes — never n^2.  Exact cosine verifies every candidate.
+    sizes — never n^2.  Exact cosine verifies every unordered candidate
+    pair once; each verified pair is then mirrored into both directions
+    for the per-id ranking.
     Returns (vec_id, nbr_id, cosine, rank) with rank <= k."""
-    from pyspark.sql.window import Window
-
-    scored = _lsh_scored_pairs(embeddings, dim, vec_col, id_col,
-                               n_planes, n_tables, canonical=False)
+    pairs = _lsh_scored_pairs(embeddings, dim, vec_col, id_col,
+                              n_planes, n_tables)
+    scored = pairs.select(F.explode(F.array(
+        F.struct(F.col("id_a").alias(id_col), F.col("id_b").alias("nbr_id")),
+        F.struct(F.col("id_b").alias(id_col), F.col("id_a").alias("nbr_id"))
+    )).alias("_p"), "cosine").select("_p.*", "cosine")
     w = Window.partitionBy(id_col).orderBy(F.col("cosine").desc(),
                                            F.col("nbr_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -275,18 +284,22 @@ def neardup_pairs(embeddings: DataFrame, tau: float, dim: int,
     bucket-join candidates (work = sum of squared bucket sizes, never
     n^2), distributed join-back-by-id exact verify."""
     scored = _lsh_scored_pairs(embeddings, dim, vec_col, id_col,
-                               n_planes, n_tables, canonical=True)
-    return (scored.where(F.col("cosine") >= tau)
-            .select(F.col(id_col).alias("id_a"),
-                    F.col("nbr_id").alias("id_b"), "cosine"))
+                               n_planes, n_tables)
+    return scored.where(F.col("cosine") >= tau)
 
 
 def _lsh_scored_pairs(embeddings: DataFrame, dim: int, vec_col: str,
-                      id_col: str, n_planes: int, n_tables: int,
-                      canonical: bool) -> DataFrame:
+                      id_col: str, n_planes: int, n_tables: int
+                      ) -> DataFrame:
     """Shared candidate generation + exact-cosine verify for the
-    all-pairs LSH queries.  canonical=True keeps only id_a < id_b
-    (unordered pairs); False keeps both directions (per-id top-k)."""
+    all-pairs LSH queries: (id_a, id_b, cosine) for every unordered
+    pair, id_a < id_b, that shares a bucket in any table, so each pair
+    is verified once.
+
+    The bucket rows are persisted (the band self-join reads them
+    twice); the cache fills inside the first action on the result and
+    outlives the call: nothing here unpersists it, so the caller clears
+    it (`spark.catalog.clearCache()`) once it is done with the result."""
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
@@ -310,21 +323,19 @@ def _lsh_scored_pairs(embeddings: DataFrame, dim: int, vec_col: str,
 
     _buckets = pandas_udf(_buckets_fn, ArrayType(LongType()))
 
-    # persisted: the self-join reads it twice, and the cache fills once
-    # inside the first action on the result
     b = (embeddings.select(F.col(id_col),
                            F.posexplode(_buckets(vec)).alias("_t", "_b"))
          .persist())
-    left = b.alias("l")
-    right = b.alias("r")
-    idcmp = (F.col(f"l.{id_col}") < F.col(f"r.{id_col}") if canonical
-             else F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-    cand = (left.join(right, (F.col("l._t") == F.col("r._t"))
-                      & (F.col("l._b") == F.col("r._b"))
-                      & idcmp)
-            .select(F.col(f"l.{id_col}").alias(id_col),
-                    F.col(f"r.{id_col}").alias("nbr_id"))
-            .dropDuplicates([id_col, "nbr_id"]))
+    # dedup.band_pairs' self-join without its probe-side repartition
+    # by id: with that extra shuffle embed_neardup read slower at sf0.1
+    # in each of three alternating sessions (local[4], build+collect)
+    cand = (b.alias("l").join(b.alias("r"),
+                              (F.col("l._t") == F.col("r._t"))
+                              & (F.col("l._b") == F.col("r._b"))
+                              & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+            .select(F.col(f"l.{id_col}").alias("id_a"),
+                    F.col(f"r.{id_col}").alias("id_b"))
+            .distinct())
     # Exact-cosine verify, fully distributed: join UNIT vectors back
     # onto the candidate pairs by id (the same join-back pattern as the
     # minhash shingle-set verify, __spark_entry__.q_minhash_neardup).
@@ -345,13 +356,12 @@ def _lsh_scored_pairs(embeddings: DataFrame, dim: int, vec_col: str,
             .select(F.col(id_col),
                     F.transform(F.col("_v"),
                                 lambda x: x / F.col("_n")).alias("_u")))
-    ea = unit.select(F.col(id_col), F.col("_u").alias("_ua"))
-    eb = unit.select(F.col(id_col).alias("nbr_id"), F.col("_u").alias("_ub"))
+    ea = unit.select(F.col(id_col).alias("id_a"), F.col("_u").alias("_ua"))
+    eb = unit.select(F.col(id_col).alias("id_b"), F.col("_u").alias("_ub"))
     dot = F.aggregate(F.zip_with("_ua", "_ub", lambda x, y: x * y),
                       F.lit(0.0), lambda acc, x: acc + x)
-    return (cand.join(ea, id_col).join(eb, "nbr_id")
-            .withColumn("cosine", F.round(dot, 8))
-            .drop("_ua", "_ub"))
+    return (cand.join(ea, "id_a").join(eb, "id_b")
+            .select("id_a", "id_b", F.round(dot, 8).alias("cosine")))
 
 
 def pq_topk(embeddings: DataFrame, query: list[float], k: int,

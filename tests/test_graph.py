@@ -43,31 +43,45 @@ def test_pagerank_dangling_mass_drops(spark):
     assert s[1] > s[0]
 
 
-@pytest.mark.parametrize("iters", [1, 5])
-def test_pagerank_matches_sql_twin(spark, iters):
-    """Spark pagerank == DuckDB pagerank_sql to the last micro-unit on
-    a deterministic pseudo-random weighted multigraph."""
+def _twin_graph():
+    """A deterministic pseudo-random weighted multigraph on 40 nodes,
+    aggregated to (src, dst, w)."""
     n = 40
-    triples = []
+    agg = {}
     for i in range(400):
         h = (i * 2654435761) % 2147483648
         s, d, w = h % n, (h // 7) % n, 1 + h % 3
         if s != d:
-            triples.append((s, d, w))
-    agg = {}
-    for s, d, w in triples:
-        agg[(s, d)] = agg.get((s, d), 0) + w
-    triples = [(s, d, w) for (s, d), w in sorted(agg.items())]
+            agg[(s, d)] = agg.get((s, d), 0) + w
+    return n, [(s, d, w) for (s, d), w in sorted(agg.items())]
+
+
+def _assert_matches_sql_twin(spark, triples, n_teleport, iters):
     got = {r.node: r.score for r in
-           pagerank(_edges(spark, triples), _nodes(spark, n),
+           pagerank(_edges(spark, triples), _nodes(spark, n_teleport),
                     iters=iters).collect()}
     vals = ", ".join(f"({s}, {d}, {w})" for s, d, w in triples)
     sql = pagerank_sql(
         f"e(src, dst, w) AS (SELECT * FROM (VALUES {vals}))",
-        f"nodes AS (SELECT range AS node FROM range(0, {n}))",
+        f"teleport AS (SELECT range AS node FROM range(0, {n_teleport}))",
         iters=iters)
     want = dict(duckdb.connect().execute(sql).fetchall())
     assert got == want
+
+
+@pytest.mark.parametrize("iters", [1, 5])
+def test_pagerank_matches_sql_twin(spark, iters):
+    """Spark pagerank == DuckDB pagerank_sql to the last micro-unit on
+    a deterministic pseudo-random weighted multigraph."""
+    n, triples = _twin_graph()
+    _assert_matches_sql_twin(spark, triples, n, iters)
+
+
+def test_personalized_pagerank_matches_sql_twin(spark):
+    """The same on a 3-node teleport set: the rank relation is the
+    seeds plus the nodes their mass reaches, in both engines."""
+    _, triples = _twin_graph()
+    _assert_matches_sql_twin(spark, triples, 3, 5)
 
 
 def test_bfs_hops_small_graph(spark):
@@ -90,6 +104,27 @@ def test_bfs_hops_early_stop_and_min(spark):
     seeds = spark.createDataFrame([(0,)], "node long")
     got = {r.node: r.hops for r in bfs_hops(edges, seeds, 10).collect()}
     assert got == {0: 0, 1: 1, 3: 1}
+
+
+def test_labeled_bfs_hops_equals_one_run_per_seed(spark):
+    """Seeds (seed, node): each label's hops equal a single-label
+    bfs_hops from that label's seed nodes alone, though the labels'
+    trees overlap and one label has two seed nodes."""
+    from proj_spark.graph import bfs_hops
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 0), (1, 4), (4, 5), (5, 2), (6, 3)],
+        "src long, dst long")
+    seeds = spark.createDataFrame([(10, 0), (20, 4), (30, 6), (30, 5)],
+                                  "seed long, node long")
+    got = {(r.seed, r.node): r.hops
+           for r in bfs_hops(edges, seeds, 3).collect()}
+    want = {}
+    for label in (10, 20, 30):
+        one = seeds.where(F.col("seed") == label).select("node")
+        want.update({(label, r.node): r.hops
+                     for r in bfs_hops(edges, one, 3).collect()})
+    assert got == want
+    assert got[(10, 3)] == 3 and got[(30, 3)] == 1
 
 
 def test_triangle_counts_known(spark):
@@ -148,7 +183,7 @@ def test_iterative_operators_leave_the_cache_empty(spark):
     session's cache manager never sees: once an operator's result is
     collected, nothing is left registered for the caller to clear."""
     import __spark_entry__ as entry
-    from proj_spark.graph import bfs_hops, multi_bfs_hops, ppr, weighted_hops
+    from proj_spark.graph import bfs_hops, weighted_hops
     from proj_spark.spatial.knn import knn_join
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -161,10 +196,10 @@ def test_iterative_operators_leave_the_cache_empty(spark):
         [(1, 0.05, 0.1)], "query_id long, lon double, lat double")
     runs = {
         "pagerank": lambda: pagerank(edges, _nodes(spark, 4)),
-        "ppr": lambda: ppr(edges, seeds),
+        "personalized pagerank": lambda: pagerank(edges, seeds),
         "bfs_hops": lambda: bfs_hops(edges, seeds),
-        "multi_bfs_hops": lambda: multi_bfs_hops(
-            edges, seeds.withColumnRenamed("node", "seed")),
+        "labeled bfs_hops": lambda: bfs_hops(
+            edges, seeds.select(F.col("node").alias("seed"), "node")),
         "weighted_hops": lambda: weighted_hops(edges, seeds),
         "knn_join": lambda: knn_join(queries, pts, k=3, data_id="id"),
         "q_kmeans": lambda: entry.q_kmeans(spark, "/root/testdata/sf0.001"),

@@ -339,12 +339,12 @@ def test_kaplan_meier_monotone(spark):
 
 def test_multi_bfs_star_hand_case(spark):
     """Star 0 -> {1,2,3}, 1 -> 4: from seed 0 hops are exact."""
-    from proj_spark.graph import multi_bfs_hops
+    from proj_spark.graph import bfs_hops
     e = spark.createDataFrame([(0, 1), (0, 2), (0, 3), (1, 4)],
                               ["src", "dst"])
-    seeds = spark.createDataFrame([(0,), (4,)], ["seed"])
+    seeds = spark.createDataFrame([(0, 0), (4, 4)], ["seed", "node"])
     got = {(r.seed, r.node): r.hops
-           for r in multi_bfs_hops(e, seeds, 3).collect()}
+           for r in bfs_hops(e, seeds, 3).collect()}
     assert got == {(0, 0): 0, (0, 1): 1, (0, 2): 1, (0, 3): 1,
                    (0, 4): 2, (4, 4): 0}
 

@@ -282,10 +282,10 @@ def test_ppr_seeds_only_when_graph_empty(spark):
     # hand case: a single edge between two non-seed nodes gets no mass;
     # seeds with no in-links keep exactly the teleport base after one
     # round
-    from proj_spark.graph import ppr
+    from proj_spark.graph import pagerank
     edges = spark.createDataFrame([(5, 6, 1)], "src long, dst long, w long")
     seeds = spark.createDataFrame([(0,)], "node long")
-    out = {r.node: r.score for r in ppr(edges, seeds, iters=2).collect()}
+    out = {r.node: r.score for r in pagerank(edges, seeds, iters=2).collect()}
     base = (PR_DEN - PR_NUM) * PR_INIT // PR_DEN
     assert out == {0: base}
 

@@ -302,7 +302,7 @@ def test_dedup_and_stats(spark):
     d = exact_dedup(docs).collect()
     groups = {r["keep_id"]: r["dup_count"] for r in d}
     assert groups[1] == 2 and groups[3] == 1
-    cands = minhash_lsh_candidates(docs, num_hashes=32, bands=16).collect()
+    cands = minhash_lsh_candidates(docs, num_hashes=32, rows_per_band=2).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in cands}
     assert (1, 2) in pairs and (1, 3) in pairs  # dup + near-dup found
     sets = docs.select("doc_id",

@@ -6,6 +6,9 @@ order-insensitive exact value comparison (rows sorted by all columns).
 Each line shows the Spark and the DuckDB seconds.
 
 Usage: python tools/selfcheck.py [query ...]
+
+Exits 0 when every query matches, 1 when one does not, and 2 (running
+nothing) when a named query is not in queries().
 """
 
 from __future__ import annotations
@@ -89,10 +92,40 @@ def _adversarial_spark():
             .getOrCreate())
 
 
+def _check(spark, con, name: str, fn, oracle: str) -> bool:
+    """Run one query and its oracle, print its line; True when they match."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, SF_DIR).toPandas()
+        t1 = time.time()
+    except Exception as e:
+        print(f"FAIL {name}: spark error: {e}")
+        return False
+    try:
+        odf = con.execute(oracle).df()
+    except Exception as e:
+        print(f"FAIL {name}: oracle error: {e}")
+        return False
+    secs = f"[spark {t1-t0:.1f}s, duckdb {time.time()-t1:.1f}s]"
+    issues = compare(name, sdf, odf)
+    if issues:
+        print(f"FAIL {name} {secs}:")
+        for i in issues:
+            print(f"  {i}")
+        return False
+    print(f"ok {name}: {len(sdf)} rows match  {secs}")
+    return True
+
+
 def main() -> int:
     args = sys.argv[1:]
     adversarial = "--adversarial" in args
     only = {a for a in args if not a.startswith("--")}
+    qs = entrymod.queries()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("unknown queries:", ",".join(unknown))
+        return 2
     if adversarial:
         pp = os.environ.get("PYTHONPATH", "")
         if REPO not in pp.split(":"):
@@ -103,35 +136,17 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, SF_DIR).toPandas()
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
+        if not _check(spark, con, name, fn, oracles[name]):
             failed.append(name)
-            continue
-        t1 = time.time()
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
-            failed.append(name)
-            continue
-        secs = f"[spark {t1-t0:.1f}s, duckdb {time.time()-t1:.1f}s]"
-        issues = compare(name, sdf, odf)
-        if issues:
-            print(f"FAIL {name} {secs}:")
-            for i in issues:
-                print(f"  {i}")
-            failed.append(name)
-        else:
-            print(f"ok {name}: {len(sdf)} rows match  {secs}")
+        # a query's persisted relations outlive it (dedup and LSH
+        # operators leave their caches to the caller): drop them once
+        # the query is timed and checked
+        spark.catalog.clearCache()
     spark.stop()
     print("FAILED:" if failed else "ALL OK", ",".join(failed))
     return 1 if failed else 0
